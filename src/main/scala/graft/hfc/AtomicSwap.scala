@@ -26,60 +26,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *              re-runs the merge)
   *
   * Every step is a single atomic rename or an idempotent delete, so
-  * recover() is safe to run any number of times.
+  * recover() is safe to run any number of times. The incremental
+  * stores' marker protocols are built on it in [[StoreProtocol]].
   */
 object AtomicSwap {
-
-  /** Bound on `_applied_batch_*` markers a marker-inside-the-swap
-    * store (IncrementalLineCensus, Scd2Store) carries through
-    * rewrites: replay protection reaches this many batches back (a
-    * lost checkpoint re-delivers far fewer), while a years-long
-    * stream's commits stay O(bound) empty files instead of O(total
-    * batches ever processed). */
-  val MaxAppliedMarkers: Int = 4096
-
-  /** Applied-batch marker ids currently retained inside `dir`. */
-  def listAppliedMarkers(fs: FileSystem, dir: String): Array[Long] =
-    fs.listStatus(new Path(dir))
-      .map(_.getPath.getName).filter(_.startsWith("_applied_batch_"))
-      .flatMap(_.stripPrefix("_applied_batch_").toLongOption)
-
-  /** Stamp `ids` (newest [[MaxAppliedMarkers]] only) into `stagingDir`
-    * so they ride through the upcoming swap. */
-  def writeAppliedMarkers(fs: FileSystem, stagingDir: String, ids: Seq[Long]): Unit =
-    ids.distinct.sorted.takeRight(MaxAppliedMarkers).foreach { id =>
-      fs.create(new Path(stagingDir, s"_applied_batch_$id"), true).close()
-    }
-
-  /** Replay-horizon guard for marker-inside-the-swap stores
-    * (IncrementalLineCensus, Scd2Store). Marker retention is bounded
-    * at [[MaxAppliedMarkers]], so "no marker for batchId" proves "not
-    * yet applied" ONLY while batchId >= the oldest retained marker. A
-    * batch OLDER than every retained marker whose own marker is gone
-    * is beyond the horizon: whether it was applied is unknowable, and
-    * re-applying would double-count line frequencies / re-fold version
-    * chains. Fail loudly instead of guessing — a checkpoint restored
-    * from beyond the horizon must be rejected, not silently replayed.
-    *
-    * CONTRACT: batch ids must be monotonically increasing per store
-    * (Structured Streaming's epoch ids are). The guard intentionally
-    * rejects a below-horizon id even while fewer than
-    * [[MaxAppliedMarkers]] markers exist: with monotonic ids such a
-    * batch can only be a replay from a checkpoint older than the
-    * store's history, never a genuinely-new batch. Two producers with
-    * independent, non-monotonic id spaces MUST NOT share one store —
-    * partition the store path per producer instead. */
-  def assertWithinReplayHorizon(fs: FileSystem, dir: String, batchId: Long): Unit = {
-    val ids = listAppliedMarkers(fs, dir)
-    if (ids.nonEmpty && batchId < ids.min)
-      throw new IllegalStateException(
-        s"batch $batchId of store $dir is beyond the replay-protection horizon: " +
-        s"oldest retained applied marker is ${ids.min} (retention bound " +
-        s"MaxAppliedMarkers=$MaxAppliedMarkers). Whether this batch was already " +
-        "applied is unknowable, and re-applying would corrupt the store; " +
-        "refusing. Restore from a checkpoint newer than the horizon, or " +
-        "rebuild the store from the corpus.")
-  }
 
   def stagingFor(target: String): String = target + ".staging"
   private def oldFor(target: String): String = target + ".old"

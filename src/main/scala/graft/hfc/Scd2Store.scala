@@ -4,13 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Persistent, incrementally-maintained SCD2 history — [[Scd2]] fed
   * batch by batch: each arriving update batch folds into the stored
-  * version chains via [[Scd2.applyChanges]] and publishes through
-  * [[AtomicSwap]]'s crash-safe rename, with the applied-batch marker
-  * INSIDE the swapped directory (the IncrementalLineCensus protocol:
-  * history and marker commit as one rename, so there is no window in
-  * which a crash-replayed batch could fold its changes twice —
-  * re-closing an already-closed version would corrupt the chain, the
-  * exact hazard upsert-shaped stores don't have).
+  * version chains via [[Scd2.applyChanges]]. Crash/replay: a rewrite
+  * store of [[StoreProtocol]] — re-closing an already-closed version
+  * would corrupt the chain, the exact hazard upsert-shaped stores
+  * don't have, so the batch marker commits inside the swap.
   *
   * In-order contract: within a key, a batch's updates must not predate
   * the standing current version's `valid_from` (the streaming-ingest
@@ -26,17 +23,8 @@ object Scd2Store {
   def init(history: DataFrame, storePath: String): Unit =
     history.write.mode("overwrite").parquet(storePath)
 
-  def history(spark: SparkSession, storePath: String): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    AtomicSwap.recoverDir(fs, storePath)
-    spark.read.parquet(storePath)
-  }
-
-  def batchApplied(spark: SparkSession, storePath: String, batchId: Long): Boolean = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    AtomicSwap.recoverDir(fs, storePath)
-    fs.exists(new org.apache.hadoop.fs.Path(storePath, s"_applied_batch_$batchId"))
-  }
+  def history(spark: SparkSession, storePath: String): DataFrame =
+    StoreProtocol.read(spark, storePath)
 
   /** Fold one update batch into the stored history. A batch whose
     * marker is already present is a no-op (crash replay). */
@@ -44,29 +32,15 @@ object Scd2Store {
                  keyCol: String, attrCol: String,
                  tsCol: String, tieCol: String): Unit = {
     val spark = updates.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    AtomicSwap.recoverDir(fs, storePath)
-    if (fs.exists(new org.apache.hadoop.fs.Path(storePath, s"_applied_batch_$batchId")))
-      return
+    if (StoreProtocol.batchCommitted(spark, storePath, batchId)) return
     // not marked applied — but only provably unapplied INSIDE the
     // bounded-marker horizon; beyond it, refuse rather than re-fold
-    AtomicSwap.assertWithinReplayHorizon(fs, storePath, batchId)
-    val standing = spark.read.parquet(storePath)
-    val next = Scd2.applyChanges(standing, updates, keyCol, attrCol, tsCol, tieCol)
+    StoreProtocol.assertWithinReplayHorizon(StoreProtocol.fs(spark), storePath, batchId)
+    val next = Scd2.applyChanges(history(spark, storePath), updates,
+        keyCol, attrCol, tsCol, tieCol)
       // the fold reads the directory it is about to replace — break
       // the read-from-overwrite-target cycle before staging
       .localCheckpoint(true)
-    val staging = AtomicSwap.stagingFor(storePath)
-    next.write.mode("overwrite").parquet(staging)
-    // EARLIER batches' markers ride along: the swap replaces the whole
-    // directory, and dropping them would let a checkpoint-loss replay
-    // of an old batch re-fold its changes into a newer chain (the
-    // IncrementalLineCensus marker-loss bug, fixed round 10 in both
-    // stores; Scd2StreamSpec pins the two-batch replay). Retention is
-    // bounded like the census store's: newest ids only, so commit cost
-    // stays O(bound) across a long-lived stream.
-    val existingIds = AtomicSwap.listAppliedMarkers(fs, storePath)
-    AtomicSwap.writeAppliedMarkers(fs, staging, existingIds.toSeq :+ batchId)
-    AtomicSwap.commitDir(fs, storePath, staging)
+    StoreProtocol.commitRewrite(spark, storePath, next, Some(batchId))
   }
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.functions.TextFunctions.{letBound, minhashBands, minhashSignature, shingleHashes}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Incremental near-dup detection: dedup a NEW batch of documents
   * against the signatures of everything ingested before it — without
@@ -18,7 +18,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * [[dedupBatch]] consumes + (optionally) appends. Band join cost is
   * proportional to bucket collisions, not store size; the store-side
   * scan reads only (id, bands) until verification needs `hashes` —
-  * parquet column pruning keeps the probe narrow.
+  * parquet column pruning keeps the probe narrow. Crash/replay:
+  * an append store of [[graft.hfc.StoreProtocol]].
   */
 object IncrementalDedup {
 
@@ -56,19 +57,9 @@ object IncrementalDedup {
                  numHashes: Int = 16, bands: Int = 4,
                  idCol: String = "doc_id", textCol: String = "text",
                  appendUnique: Boolean = true): DataFrame = {
-    val spark = newDocs.sparkSession
-    // repair any torn compaction swap BEFORE reading — without this, a
-    // crash between commitDir's two renames bricks every batch until
-    // the next compaction happens to run
-    graft.hfc.AtomicSwap.recoverDir(
-      org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration),
-      storePath)
     val batchSigs = signatures(newDocs, numHashes, bands, idCol, textCol)
       .localCheckpoint(true) // referenced by banding, verify, and append
-    // explicit read schema: the store was written by the SAME
-    // signatures() projection at init/append time, so footer schema
-    // inference — a driver job per batch — is pure waste (guide §6)
-    val store = spark.read.schema(batchSigs.schema).parquet(storePath)
+    val store = graft.hfc.StoreProtocol.read(newDocs.sparkSession, storePath, batchSigs.schema)
 
     def banded(sigTable: DataFrame) = sigTable
       .select(col("id"), posexplode(col("bands")).as(Seq("band_idx", "band_hash")))
@@ -114,55 +105,7 @@ object IncrementalDedup {
       .select(col("id").as(idCol), col("dup_of"), col("jaccard"))
       .localCheckpoint(true) // pin BEFORE the store grows underneath it
 
-    if (appendUnique) {
-      batchSigs.join(decisions.filter(col("dup_of").isNotNull)
-          .select(col(idCol).as("id")), Seq("id"), "left_anti")
-        .write.mode("append").parquet(storePath)
-    }
+    if (appendUnique) graft.hfc.StoreProtocol.appendUnique(batchSigs, decisions, idCol, storePath)
     decisions
-  }
-
-  /** Replay bookkeeping for streaming ingest: one empty marker file per
-    * applied batch, created AFTER the batch's store append lands. A
-    * restarted micro-batch whose marker exists skips the append (the
-    * decisions re-compute identically — see [[dedupBatch]]'s replay
-    * guard). The only unprotected window is a crash between append and
-    * marker: that batch replays its append, duplicating its unique
-    * signatures — decisions stay correct (candidates are distinct'd and
-    * best-match picks one row), and [[compactStore]] reclaims the bloat
-    * by id. */
-  private def markerFor(storePath: String, batchId: Long) =
-    new org.apache.hadoop.fs.Path(s"$storePath.applied", s"batch-$batchId")
-
-  def batchApplied(spark: SparkSession, storePath: String, batchId: Long): Boolean = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    fs.exists(markerFor(storePath, batchId))
-  }
-
-  def markApplied(spark: SparkSession, storePath: String, batchId: Long): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    fs.create(markerFor(storePath, batchId), true).close()
-  }
-
-  /** Compact the signature store: per-batch appends accumulate one
-    * small file set per batch; periodically rewrite the store into
-    * `targetFiles` files, published crash-safe through the AtomicSwap
-    * rename protocol (a crash mid-compaction leaves either the old or
-    * the new store, never a torn one). Logical content is unchanged
-    * except that replay-duplicated signatures (same id appended twice
-    * by a crash between append and marker) collapse to one row —
-    * signatures are a pure function of the text, so duplicates are
-    * bit-identical. */
-  def compactStore(spark: SparkSession, storePath: String,
-                   targetFiles: Int = 8): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    graft.hfc.AtomicSwap.recoverDir(fs, storePath)
-    val staging = graft.hfc.AtomicSwap.stagingFor(storePath)
-    spark.read.parquet(storePath)
-      .dropDuplicates("id")
-      .repartition(targetFiles)
-      .write.mode("overwrite").parquet(staging)
-    graft.hfc.AtomicSwap.commitDir(fs, storePath, staging)
   }
 }

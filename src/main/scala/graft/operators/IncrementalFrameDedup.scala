@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Incremental FRAME-VOTE video dedup — [[IncrementalHashDedup]] at
   * the frame grain: dedup a new batch of clips against everything
@@ -21,14 +21,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * best = most votes, ties to the smallest candidate id. Store clips
   * are never re-decided.
   *
-  * Crash/replay contract: the WHOLE batch's ids are anti-joined out of
+  * Crash/replay: an append store of [[graft.hfc.StoreProtocol]],
+  * keyed (id, frame). The WHOLE batch's ids are anti-joined out of
   * the store side (stronger than IncrementalHashDedup's self-pair
   * filter — the asymmetric vote threshold needs it, see
   * [[dedupBatch]]), so a replayed batch whose append already landed
-  * re-decides against exactly the original store; applied markers live
-  * in a sibling directory; [[compactStore]] reclaims replay bloat
-  * (frame hashes are pure functions of the payload — duplicates are
-  * bit-identical) through the AtomicSwap crash-safe rename. */
+  * re-decides against exactly the original store. */
 object IncrementalFrameDedup {
 
   /** Seed the store from (id, frame_idx, hash) rows. */
@@ -64,19 +62,12 @@ object IncrementalFrameDedup {
                  appendUnique: Boolean = true,
                  probeTolerance: Int = 0): DataFrame = {
     require(voteFrac > 0 && voteFrac <= 1, s"voteFrac must be in (0, 1], got $voteFrac")
-    val spark = newFrames.sparkSession
-    graft.hfc.AtomicSwap.recoverDir(
-      org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration),
-      storePath)
     val batch = newFrames
       .select(col(idCol).as("id"), col(frameCol).cast("int").as("frame"),
         col(hashCol).cast("long").as("hash"))
       .localCheckpoint(true) // probe side, target side, census, and append
     val batchIds = batch.select(col("id")).distinct()
-    // explicit read schema — the store layout is the same (id, frame,
-    // hash) projection initStore wrote; skips the per-batch footer
-    // schema-inference driver job (guide §6)
-    val store = spark.read.schema(batch.schema).parquet(storePath)
+    val store = graft.hfc.StoreProtocol.read(newFrames.sparkSession, storePath, batch.schema)
       .join(broadcast(batchIds), Seq("id"), "left_anti") // the replay guard
 
     // ONE probe-side explosion against the unioned targets (store ∪
@@ -98,41 +89,7 @@ object IncrementalFrameDedup {
       .select(col("id").as(idCol), col("n_frames"), col("dup_of"), col("votes"))
       .localCheckpoint(true) // pin BEFORE the store grows underneath it
 
-    if (appendUnique) {
-      batch.join(decisions.filter(col("dup_of").isNotNull)
-          .select(col(idCol).as("id")), Seq("id"), "left_anti")
-        .write.mode("append").parquet(storePath)
-    }
+    if (appendUnique) graft.hfc.StoreProtocol.appendUnique(batch, decisions, idCol, storePath)
     decisions
-  }
-
-  // replay bookkeeping — the IncrementalHashDedup sibling-marker protocol
-  private def markerFor(storePath: String, batchId: Long) =
-    new org.apache.hadoop.fs.Path(s"$storePath.applied", s"batch-$batchId")
-
-  def batchApplied(spark: SparkSession, storePath: String, batchId: Long): Boolean = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    fs.exists(markerFor(storePath, batchId))
-  }
-
-  def markApplied(spark: SparkSession, storePath: String, batchId: Long): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    fs.create(markerFor(storePath, batchId), true).close()
-  }
-
-  /** Compact per-batch append files; replay-duplicated (id, frame)
-    * rows collapse (frame hashes are pure functions of the payload).
-    * Crash-safe via AtomicSwap. */
-  def compactStore(spark: SparkSession, storePath: String,
-                   targetFiles: Int = 8): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    graft.hfc.AtomicSwap.recoverDir(fs, storePath)
-    val staging = graft.hfc.AtomicSwap.stagingFor(storePath)
-    spark.read.parquet(storePath)
-      .dropDuplicates("id", "frame")
-      .repartition(targetFiles)
-      .write.mode("overwrite").parquet(staging)
-    graft.hfc.AtomicSwap.commitDir(fs, storePath, staging)
   }
 }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Incremental near-dup detection over INTEGER perceptual hashes — the
   * image/audio twin of [[IncrementalDedup]]: dedup a new batch of
@@ -20,12 +20,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * for the oracle-twin stubs) so one store design serves every
   * integer-fingerprinted modality.
   *
-  * Crash/replay contract = IncrementalDedup's: decisions carry the
-  * old-vs-new guard so a replayed batch whose append already landed
-  * never matches an item to its own stored hash; applied markers live
-  * in a SIBLING directory (append-only store — a replayed append only
-  * bloats, never corrupts); [[compactStore]] reclaims replay bloat
-  * through the AtomicSwap crash-safe rename. */
+  * Crash/replay: an append store of [[graft.hfc.StoreProtocol]];
+  * decisions carry the old-vs-new guard so a replayed batch whose
+  * append already landed never matches an item to its own stored
+  * hash. */
 object IncrementalHashDedup {
 
   /** Seed the store from (id, hash) rows. */
@@ -64,23 +62,10 @@ object IncrementalHashDedup {
       s"pigeonhole recall needs bands x (tolerance+1) > maxHamming " +
       s"(got $bands x ${probeTolerance + 1} <= $maxHamming)")
     require(bands * bandBits <= 64, "bands x bandBits must fit the 64-bit hash")
-    val spark = newHashes.sparkSession
-    graft.hfc.AtomicSwap.recoverDir(
-      org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration),
-      storePath)
     val batch = newHashes
       .select(col(idCol).as("id"), col(hashCol).cast("long").as("hash"))
       .localCheckpoint(true) // referenced by banding, verify, and append
-    // explicit read schema: the store's layout is fixed by initStore
-    // (id = the shared id space, hash = LONG), so footer schema
-    // inference — a driver job per read — is pure waste (guide §6);
-    // the id type comes from the batch because store and batch ids ARE
-    // one id space (the union below already required it)
-    val store = spark.read.schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id", batch.schema("id").dataType),
-        org.apache.spark.sql.types.StructField("hash",
-          org.apache.spark.sql.types.LongType))))
-      .parquet(storePath)
+    val store = graft.hfc.StoreProtocol.read(newHashes.sparkSession, storePath, batch.schema)
     // r13 verdict #5 — the birthday bound, AUTOMATED: in the EXACT
     // regime (maxHamming = 0) a hash collision is a silently wrong
     // drop, and for the ≤64-bit keys this store holds (key60 md5-60,
@@ -150,11 +135,7 @@ object IncrementalHashDedup {
       .select(col("id").as(idCol), col("dup_of"), col("hamming"))
       .localCheckpoint(true) // pin BEFORE the store grows underneath it
 
-    if (appendUnique) {
-      batch.join(decisions.filter(col("dup_of").isNotNull)
-          .select(col(idCol).as("id")), Seq("id"), "left_anti")
-        .write.mode("append").parquet(storePath)
-    }
+    if (appendUnique) graft.hfc.StoreProtocol.appendUnique(batch, decisions, idCol, storePath)
     decisions
   }
 
@@ -182,19 +163,10 @@ object IncrementalHashDedup {
   def exactDedupBatchString(newKeys: DataFrame, storePath: String,
                             idCol: String = "doc_id", keyCol: String = "key",
                             appendUnique: Boolean = true): DataFrame = {
-    val spark = newKeys.sparkSession
-    graft.hfc.AtomicSwap.recoverDir(
-      org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration),
-      storePath)
     val batch = newKeys
       .select(col(idCol).as("id"), col(keyCol).cast("string").as("key"))
       .localCheckpoint(true)
-    // explicit read schema — same §6 footer-inference cut as dedupBatch
-    val store = spark.read.schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id", batch.schema("id").dataType),
-        org.apache.spark.sql.types.StructField("key",
-          org.apache.spark.sql.types.StringType))))
-      .parquet(storePath)
+    val store = graft.hfc.StoreProtocol.read(newKeys.sparkSession, storePath, batch.schema)
     val targets = store
       .select(col("id").as("old_id"), col("key"), lit(true).as("from_store"))
       .union(batch.select(col("id").as("old_id"), col("key"),
@@ -208,41 +180,7 @@ object IncrementalHashDedup {
       .join(best.select(col("new_id").as("id"), col("dup_of")), Seq("id"), "left")
       .select(col("id").as(idCol), col("dup_of"))
       .localCheckpoint(true)
-    if (appendUnique) {
-      batch.join(decisions.filter(col("dup_of").isNotNull)
-          .select(col(idCol).as("id")), Seq("id"), "left_anti")
-        .write.mode("append").parquet(storePath)
-    }
+    if (appendUnique) graft.hfc.StoreProtocol.appendUnique(batch, decisions, idCol, storePath)
     decisions
-  }
-
-  // replay bookkeeping — the IncrementalDedup sibling-marker protocol
-  private def markerFor(storePath: String, batchId: Long) =
-    new org.apache.hadoop.fs.Path(s"$storePath.applied", s"batch-$batchId")
-
-  def batchApplied(spark: SparkSession, storePath: String, batchId: Long): Boolean = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    fs.exists(markerFor(storePath, batchId))
-  }
-
-  def markApplied(spark: SparkSession, storePath: String, batchId: Long): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    fs.create(markerFor(storePath, batchId), true).close()
-  }
-
-  /** Compact per-batch append files; replay-duplicated ids collapse
-    * (hashes are pure functions of the payload — duplicates are
-    * bit-identical). Crash-safe via AtomicSwap. */
-  def compactStore(spark: SparkSession, storePath: String,
-                   targetFiles: Int = 8): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    graft.hfc.AtomicSwap.recoverDir(fs, storePath)
-    val staging = graft.hfc.AtomicSwap.stagingFor(storePath)
-    spark.read.parquet(storePath)
-      .dropDuplicates("id")
-      .repartition(targetFiles)
-      .write.mode("overwrite").parquet(staging)
-    graft.hfc.AtomicSwap.commitDir(fs, storePath, staging)
   }
 }

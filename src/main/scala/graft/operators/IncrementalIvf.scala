@@ -29,13 +29,13 @@ import org.apache.spark.sql.functions._
   * read — the qj02/qm13 pricing discipline for this store: rebuild is
   * a decision taken on a measured imbalance number, not on a schedule.
   *
-  * Crash/replay contract (the family's): appends are gated by sibling
-  * applied markers ([[batchApplied]]/[[markApplied]]); a crash-window
-  * replay only BLOATS the store with bit-identical duplicate rows
-  * (assignment is pure), never corrupts it. [[serve]] stays correct
-  * under bloat — it dedups ids on the PRUNED cells only (probe-sized,
-  * not store-sized) — and [[compact]] reclaims the bloat through the
-  * AtomicSwap crash-safe rename.
+  * Crash/replay: an append store of [[graft.hfc.StoreProtocol]] whose
+  * store path is the index dir `path` (its applied markers sit beside
+  * it, so a [[rebuild]] swap never moves them). A crash-window replay
+  * only BLOATS `path/assigned` with bit-identical duplicate rows
+  * (assignment is pure). [[serve]] stays correct under bloat — it
+  * dedups ids on the PRUNED cells only (probe-sized, not store-sized)
+  * — and [[compact]] reclaims it.
   */
 object IncrementalIvf {
 
@@ -53,34 +53,13 @@ object IncrementalIvf {
                   idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     val spark = batch.sparkSession
     recoverAll(spark, path) // a torn REBUILD would otherwise leave no centroids
-    // explicit read schema: the centroid layout is fixed by
-    // IvfIndex.build — (cell, c_vec, c_nrm2), with c_vec typed like the
-    // batch's vector column (store and batch share one vector space by
-    // the append contract). Skips the footer-inference driver job (§6).
-    val cents = spark.read.schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("cell",
-          org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("c_vec",
-          batch.schema(vecCol).dataType),
-        org.apache.spark.sql.types.StructField("c_nrm2",
-          org.apache.spark.sql.types.DoubleType))))
-      .parquet(s"$path/centroids")
-    IvfIndex.assign(batch, cents, idCol, vecCol)
-      .write.mode("append").partitionBy("cell").parquet(s"$path/assigned")
-  }
-
-  // replay bookkeeping — the IncrementalDedup sibling-marker protocol
-  private def markerFor(path: String, batchId: Long) =
-    new org.apache.hadoop.fs.Path(s"$path/assigned.applied", s"batch-$batchId")
-
-  def batchApplied(spark: SparkSession, path: String, batchId: Long): Boolean = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    fs.exists(markerFor(path, batchId))
-  }
-
-  def markApplied(spark: SparkSession, path: String, batchId: Long): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    fs.create(markerFor(path, batchId), true).close()
+    // the centroid table is (cell, c_vec, c_nrm2), c_vec typed like the
+    // batch's vector column (one vector space by the append contract)
+    val cents = graft.hfc.StoreProtocol.read(spark, s"$path/centroids",
+      batch.select(col(vecCol).as("c_vec")).schema)
+    val assigned = IvfIndex.assign(batch, cents, idCol, vecCol)
+    graft.hfc.StoreProtocol.storeSchema(spark, s"$path/assigned", assigned.schema)
+    assigned.write.mode("append").partitionBy("cell").parquet(s"$path/assigned")
   }
 
   /** Query path over the accumulated index — [[IvfIndex.topKFromStorage]]
@@ -104,18 +83,10 @@ object IncrementalIvf {
       tolerateBloat = true)
   }
 
-  /** Repair any interrupted swap BEFORE touching the store — the
-    * sibling-store discipline (every entry point recovers, readers
-    * included: a compact or rebuild crash between its two renames must
-    * never surface as PATH_NOT_FOUND to a reader). Order matters: the
-    * whole-index swap (rebuild) first, then the assigned-table swap
-    * (compact) inside whatever that restored. */
-  private def recoverAll(spark: SparkSession, path: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    graft.hfc.AtomicSwap.recoverDir(fs, path)
-    graft.hfc.AtomicSwap.recoverDir(fs, s"$path/assigned")
-  }
+  /** The whole-index swap (rebuild) first, then the assigned-table
+    * swap (compact) inside whatever that restored. */
+  private def recoverAll(spark: SparkSession, path: String) =
+    graft.hfc.StoreProtocol.recovered(spark, path, s"$path/assigned")
 
   /** Per-cell occupancy: (cell, n_vectors) — counts only, one
     * partitioned-scan aggregation (the id column alone is read). */
@@ -155,16 +126,12 @@ object IncrementalIvf {
     * ATOMIC publish of the WHOLE index dir: centroids and assigned
     * must swap together (a reader mixing old centroids with new cell
     * numbering would probe garbage), so the swap unit is `path`
-    * itself, not the two tables separately. Applied markers are
-    * re-stamped into the staging dir so the streaming ingest's replay
-    * protection survives the rebuild. Offline-job semantics like the
+    * itself, not the two tables separately. Offline-job semantics like the
     * compaction it supersedes: run it when `rebuildAdvice` says so,
     * not on a schedule. */
   def rebuild(spark: SparkSession, path: String, nCells: Int,
               idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    recoverAll(spark, path) // torn earlier rebuild, then torn compact
+    val fs = recoverAll(spark, path) // torn earlier rebuild, then torn compact
     // pin the current vectors BEFORE the swap replaces the directory
     // underneath the lazy plan (and scan the store once, not twice)
     val current = spark.read.parquet(s"$path/assigned")
@@ -173,14 +140,6 @@ object IncrementalIvf {
     val staging = graft.hfc.AtomicSwap.stagingFor(path)
     fs.delete(new org.apache.hadoop.fs.Path(staging), true)
     IvfIndex.build(current, staging, nCells, idCol, vecCol)
-    // markers live INSIDE the index dir — carry them through the swap
-    val markers = new org.apache.hadoop.fs.Path(s"$path/assigned.applied")
-    if (fs.exists(markers)) {
-      val dst = new org.apache.hadoop.fs.Path(s"$staging/assigned.applied")
-      fs.mkdirs(dst)
-      fs.listStatus(markers).foreach(m =>
-        fs.create(new org.apache.hadoop.fs.Path(dst, m.getPath.getName), true).close())
-    }
     fs.create(new org.apache.hadoop.fs.Path(staging, "_SUCCESS"), true).close()
     graft.hfc.AtomicSwap.commitDir(fs, path, staging)
   }
@@ -194,10 +153,8 @@ object IncrementalIvf {
     * observe a torn store. */
   def compact(spark: SparkSession, path: String,
               idCol: String = "vec_id"): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    val fs = recoverAll(spark, path)
     val assignedPath = s"$path/assigned"
-    recoverAll(spark, path)
     val staging = graft.hfc.AtomicSwap.stagingFor(assignedPath)
     spark.read.parquet(assignedPath)
       .dropDuplicates(idCol)

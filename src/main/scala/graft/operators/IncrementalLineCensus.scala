@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.hfc.StoreProtocol
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -28,9 +29,9 @@ import org.apache.spark.sql.functions._
   * so per-batch distinct-doc counts add without double-counting.
   *
   * Store: (lh, line_df) parquet — two narrow columns, merged per batch
-  * with one full-outer count-add and published via
-  * [[graft.hfc.AtomicSwap]]'s crash-safe rename protocol (recover()
-  * runs first, so a torn swap can never be read as an empty store).
+  * with one full-outer count-add. Crash/replay: a rewrite store of
+  * [[graft.hfc.StoreProtocol]] (a replayed COUNT add would change
+  * decisions, so the batch marker commits inside the swap).
   */
 object IncrementalLineCensus {
 
@@ -62,17 +63,12 @@ object IncrementalLineCensus {
     require(!(updateStore && batchAlreadyCounted),
       "a replayed batch must not grow the store again")
     val spark = newDocs.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    graft.hfc.AtomicSwap.recoverDir(fs, storePath)
+    val store = StoreProtocol.read(spark, storePath)
     // a batch about to be counted (not a known replay) must be inside
     // the bounded-marker horizon — beyond it, applied-or-not is
     // unknowable and counting again would double-count (fail loudly)
     if (!batchAlreadyCounted)
-      batchMarker.foreach(graft.hfc.AtomicSwap.assertWithinReplayHorizon(fs, storePath, _))
-    // explicit read schema: the census layout is fixed by initStore
-    // (lh = md5 string, line_df = count long); skips the per-batch
-    // footer schema-inference driver job (guide §6)
-    val store = spark.read.schema(censusSchema).parquet(storePath)
+      batchMarker.foreach(StoreProtocol.assertWithinReplayHorizon(StoreProtocol.fs(spark), storePath, _))
 
     val lines = QualityRules.linesOf(newDocs, lineTokens, idCol, textCol)
     val batchDf = lines.select(col("lh"), col(idCol)).distinct()
@@ -98,53 +94,14 @@ object IncrementalLineCensus {
         .join(eff.select(col("lh"), col("b_df")), Seq("lh"), "full_outer")
         .select(col("lh"),
           (coalesce(col("s_df"), lit(0L)) + coalesce(col("b_df"), lit(0L))).as("line_df"))
-      val staging = graft.hfc.AtomicSwap.stagingFor(storePath)
-      merged.write.mode("overwrite").parquet(staging)
-      // the applied marker rides INSIDE the staged directory, so
-      // counts and marker become one atomic rename — unlike the dedup
-      // store (where a replayed append is benign), a replayed COUNT
-      // add would change decisions, so the commit-vs-marker window
-      // must not exist. Underscore prefix: parquet readers skip it.
-      // EARLIER batches' markers must ride along too: the swap
-      // replaces the whole directory, and dropping them would let a
-      // checkpoint-loss replay of an old batch double-count (caught
-      // by CorpusPipelineStreamSpec's two-wave replay). Retention is
-      // BOUNDED (newest MaxAppliedMarkers ids) so a years-long stream
-      // doesn't recreate an ever-growing empty-file set per commit;
-      // replay protection therefore extends MaxAppliedMarkers batches
-      // back — far beyond what a lost checkpoint can re-deliver.
-      val existingIds = graft.hfc.AtomicSwap.listAppliedMarkers(fs, storePath)
-      graft.hfc.AtomicSwap.writeAppliedMarkers(
-        fs, staging, existingIds.toSeq ++ batchMarker)
-      graft.hfc.AtomicSwap.commitDir(fs, storePath, staging)
+      StoreProtocol.commitRewrite(spark, storePath, merged, batchMarker)
     }
     decisions
   }
 
-  /** was batch `batchId`'s count merge already committed? (the marker
-    * travels inside the store directory — see [[scrubBatch]]).
-    * recoverDir runs FIRST: after a torn swap (target renamed aside,
-    * staging complete) the marker is invisible at the target path, so
-    * an unrecovered existence check would declare a committed batch
-    * un-counted — and the caller would merge it a second time after
-    * scrubBatch's own recover rolled the counts forward (the
-    * torn-swap x replay composition caught by CorpusSoakSpec;
-    * Scd2Store.batchApplied already recovered first). */
-  def batchCounted(spark: SparkSession, storePath: String, batchId: Long): Boolean = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    graft.hfc.AtomicSwap.recoverDir(fs, storePath)
-    fs.exists(new org.apache.hadoop.fs.Path(storePath, s"_applied_batch_$batchId"))
-  }
-
-  private val censusSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("lh",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("line_df",
-      org.apache.spark.sql.types.LongType)))
-
   /** current census size — monitoring hook */
   def storeStats(spark: SparkSession, storePath: String): (Long, Long) = {
-    val s = spark.read.schema(censusSchema).parquet(storePath)
+    val s = StoreProtocol.read(spark, storePath)
     val row = s.agg(count(lit(1)), coalesce(max(col("line_df")), lit(0L))).head()
     (row.getLong(0), row.getLong(1))
   }

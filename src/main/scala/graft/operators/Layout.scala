@@ -132,12 +132,9 @@ object Layout {
     // flat (unpartitioned) layout by contract: a partitioned table
     // compacts per partition directory — call this on each leaf
     // (fails loudly on a no-parquet dir rather than mis-measuring)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    // roll forward any torn swap FIRST (the AtomicSwap protocol:
-    // recover before reading) — a crash inside a previous compact's
-    // commitDir otherwise leaves the listing empty/missing
-    graft.hfc.AtomicSwap.recoverDir(fs, dir)
+    // roll forward any torn swap FIRST — a crash inside a previous
+    // compact's commitDir otherwise leaves the listing empty/missing
+    val fs = graft.hfc.StoreProtocol.recovered(spark, dir)
     val files = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
     require(files.nonEmpty, s"no parquet files under $dir")
@@ -157,12 +154,20 @@ object Layout {
     * z-ordered compaction). Returns the post-compaction plan. */
   def compact(spark: org.apache.spark.sql.SparkSession, dir: String,
               targetFileBytes: Long = 128L << 20,
-              sortCols: Seq[String] = Nil): CompactionPlan = {
+              sortCols: Seq[String] = Nil): CompactionPlan =
+    compactBy(spark, dir, targetFileBytes, sortCols)(identity)
+
+  /** [[compact]] with the rows passed through `prepare` before the
+    * rewrite — the flat store compaction collapses replay duplicates
+    * there ([[graft.hfc.StoreProtocol.compact]]). */
+  private[graft] def compactBy(spark: org.apache.spark.sql.SparkSession, dir: String,
+                               targetFileBytes: Long = 128L << 20,
+                               sortCols: Seq[String] = Nil)
+                              (prepare: DataFrame => DataFrame): CompactionPlan = {
     val before = compactionPlan(spark, dir, targetFileBytes)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    val fs = graft.hfc.StoreProtocol.fs(spark)
     val staging = graft.hfc.AtomicSwap.stagingFor(dir)
-    val df = spark.read.parquet(dir)
+    val df = prepare(graft.hfc.StoreProtocol.read(spark, dir))
     val writer =
       if (sortCols.isEmpty) df.repartition(before.targetFiles)
       else df.repartitionByRange(before.targetFiles, sortCols.map(col): _*)

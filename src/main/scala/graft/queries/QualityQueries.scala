@@ -3278,6 +3278,9 @@ object QualityQueries {
     * KEPT, pinning the keeper-only store-seeding semantics. */
   def webIncrBuild(t: Tables): DataFrame = {
     import t.spark.implicits._
+    // both seed writes are sf-sized parquet writes; far past any real
+    // run, so only a wedged write reaches it
+    val seedWriteTimeout = scala.concurrent.duration.Duration(30, "min")
     val m = $"doc_id" % 16
     val blk = ($"doc_id" - m).cast("string")
     val url =
@@ -3323,8 +3326,11 @@ object QualityQueries {
           evenKeepers.select($"doc_id", $"uk"), urlStore, hashCol = "uk"))(seedPool),
         scala.concurrent.Future(graft.operators.IncrementalHashDedup.initStore(
           evenKeepers.select($"doc_id", $"ck"), contentStore, hashCol = "ck"))(seedPool))
-      seeds.foreach(scala.concurrent.Await.result(_, scala.concurrent.duration.Duration.Inf))
-    } finally seedPool.shutdown()
+      // one deadline for both writes; a failed or wedged write throws
+      // here and shutdownNow interrupts the other, so neither leaks
+      val deadline = seedWriteTimeout.fromNow
+      seeds.foreach(scala.concurrent.Await.result(_, deadline.timeLeft))
+    } finally seedPool.shutdownNow()
     val odds = k.filter($"doc_id" % 2 === 1)
     val passed = odds.filter($"gate_passed")
     // appendUnique=false: read-only gate query over a throwaway store;

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.hfc.StoreProtocol
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -201,6 +202,16 @@ object EventStreams {
       .drop("__last")
   }
 
+  /** A micro-batch's output lands in `dir/batch_id=N` by dynamic
+    * partition overwrite, so a re-delivered batch rewrites its own
+    * partition instead of appending a second copy. */
+  private def writeBatch(out: DataFrame, batchId: Long, dir: String): Unit =
+    out.withColumn("batch_id", lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch_id")
+      .parquet(dir)
+
   /** Streaming ingest → MERGE (SURVEY.md §2.A Streaming extension:
     * `foreachBatch` upsert, Trigger.AvailableNow-compatible): each
     * micro-batch is consolidated into the parquet target with
@@ -217,9 +228,7 @@ object EventStreams {
       .outputMode(OutputMode.Update())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          spark.sparkContext.hadoopConfiguration)
-        graft.hfc.AtomicSwap.recoverDir(fs, targetDir)   // repair any torn swap first
+        val fs = StoreProtocol.recovered(spark, targetDir)
         val existing =
           if (fs.exists(new org.apache.hadoop.fs.Path(targetDir)))
             spark.read.parquet(targetDir)
@@ -249,21 +258,11 @@ object EventStreams {
     hashes.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val applied = graft.operators.IncrementalHashDedup
-          .batchApplied(batch.sparkSession, storePath, batchId)
-        val decisions = graft.operators.IncrementalHashDedup
+        val applied = StoreProtocol.batchApplied(batch.sparkSession, storePath, batchId)
+        writeBatch(graft.operators.IncrementalHashDedup
           .dedupBatch(batch, storePath, bands, bandBits, maxHamming,
-            idCol, hashCol, appendUnique = !applied)
-        decisions
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(decisionsDir)
-        if (!applied)
-          graft.operators.IncrementalHashDedup
-            .markApplied(batch.sparkSession, storePath, batchId)
-        ()
+            idCol, hashCol, appendUnique = !applied), batchId, decisionsDir)
+        StoreProtocol.markApplied(batch.sparkSession, batchId, storePath)
       }
 
   /** Streaming incremental near-dup detection: each micro-batch of
@@ -290,21 +289,11 @@ object EventStreams {
     docs.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val applied = graft.operators.IncrementalDedup
-          .batchApplied(batch.sparkSession, storePath, batchId)
-        val decisions = graft.operators.IncrementalDedup
+        val applied = StoreProtocol.batchApplied(batch.sparkSession, storePath, batchId)
+        writeBatch(graft.operators.IncrementalDedup
           .dedupBatch(batch, storePath, threshold, numHashes, bands,
-            appendUnique = !applied)
-        decisions
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(decisionsDir)
-        if (!applied)
-          graft.operators.IncrementalDedup
-            .markApplied(batch.sparkSession, storePath, batchId)
-        ()
+            appendUnique = !applied), batchId, decisionsDir)
+        StoreProtocol.markApplied(batch.sparkSession, batchId, storePath)
       }
 
   /** Streaming ANN-index ingest: each micro-batch of (id, embedding)
@@ -329,13 +318,10 @@ object EventStreams {
     vectors.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val applied = graft.operators.IncrementalIvf
-          .batchApplied(batch.sparkSession, indexPath, batchId)
-        if (!applied) {
+        if (!StoreProtocol.batchApplied(batch.sparkSession, indexPath, batchId)) {
           graft.operators.IncrementalIvf.appendBatch(batch, indexPath, idCol, vecCol)
-          graft.operators.IncrementalIvf.markApplied(batch.sparkSession, indexPath, batchId)
+          StoreProtocol.markApplied(batch.sparkSession, batchId, indexPath)
         }
-        ()
       }
 
   /** Streaming SCD2 maintenance: dimension updates arrive as a stream
@@ -395,18 +381,8 @@ object EventStreams {
     events.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          spark.sparkContext.hadoopConfiguration)
-        graft.hfc.AtomicSwap.recoverDir(fs, dimPath)
-        val dim = spark.read.parquet(dimPath)
-        enriched(batch, dim, key)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outDir)
-        ()
+        writeBatch(enriched(batch, StoreProtocol.read(batch.sparkSession, dimPath), key),
+          batchId, outDir)
       }
 
   /** Streaming corpus-global line boilerplate removal — the continuous
@@ -425,19 +401,11 @@ object EventStreams {
     docs.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val counted = graft.operators.IncrementalLineCensus
-          .batchCounted(batch.sparkSession, storePath, batchId)
-        val decisions = graft.operators.IncrementalLineCensus
+        val counted = StoreProtocol.batchCommitted(batch.sparkSession, storePath, batchId)
+        writeBatch(graft.operators.IncrementalLineCensus
           .scrubBatch(batch, storePath, lineTokens, maxDocFreq,
             updateStore = !counted, batchAlreadyCounted = counted,
-            batchMarker = if (counted) None else Some(batchId))
-        decisions
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(decisionsDir)
-        ()
+            batchMarker = if (counted) None else Some(batchId)), batchId, decisionsDir)
       }
 
   /** The COMPOSED streaming corpus pipeline — quality pre-gate →
@@ -485,33 +453,24 @@ object EventStreams {
           .localCheckpoint()
         val passDocs = gated.filter(col("gate_passed")).select(col("doc_id"), col("text"))
 
-        val applied = graft.operators.IncrementalDedup
-          .batchApplied(spark, dedupStorePath, batchId)
+        val applied = StoreProtocol.batchApplied(spark, dedupStorePath, batchId)
         val dd = graft.operators.IncrementalDedup
           .dedupBatch(passDocs, dedupStorePath, threshold, numHashes, bands,
             appendUnique = !applied)
         val survivors = passDocs.join(
           dd.filter(col("dup_of").isNull).select(col("doc_id")), Seq("doc_id"))
 
-        val counted = graft.operators.IncrementalLineCensus
-          .batchCounted(spark, censusStorePath, batchId)
+        val counted = StoreProtocol.batchCommitted(spark, censusStorePath, batchId)
         val scrub = graft.operators.IncrementalLineCensus
           .scrubBatch(survivors, censusStorePath, lineTokens, maxDocFreq,
             updateStore = !counted, batchAlreadyCounted = counted,
             batchMarker = if (counted) None else Some(batchId))
 
-        gated.select(col("doc_id"), col("gate_passed"))
+        writeBatch(gated.select(col("doc_id"), col("gate_passed"))
           .join(dd, Seq("doc_id"), "left")
           .join(scrub, Seq("doc_id"), "left")
-          .withColumn("kept", col("gate_passed") && col("dup_of").isNull)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outDir)
-        if (!applied)
-          graft.operators.IncrementalDedup.markApplied(spark, dedupStorePath, batchId)
-        ()
+          .withColumn("kept", col("gate_passed") && col("dup_of").isNull), batchId, outDir)
+        StoreProtocol.markApplied(spark, batchId, dedupStorePath)
       }
 
   /** The MULTIMODAL composed streaming corpus pipeline —
@@ -543,7 +502,7 @@ object EventStreams {
     * [[corpusPipelineStream]]; the hamming store adds its own
     * marker-after-append discipline (append-only store: a crash
     * between append and marker means a replay re-appends bit-identical
-    * hashes — bloat reclaimed by compactStore, never corruption;
+    * hashes — bloat reclaimed by StoreProtocol.compact, never corruption;
     * decisions are unchanged thanks to the store-side self-match
     * guard). All three stores must be initStore'd before the query
     * starts. CorpusSoakSpec soaks this composition with torn-compact +
@@ -584,8 +543,7 @@ object EventStreams {
           .localCheckpoint()
         val passDocs = gated.filter(col("gate_passed")).select(col("doc_id"), col("text"))
 
-        val appliedT = graft.operators.IncrementalDedup
-          .batchApplied(spark, dedupStorePath, batchId)
+        val appliedT = StoreProtocol.batchApplied(spark, dedupStorePath, batchId)
         val dd = graft.operators.IncrementalDedup
           .dedupBatch(passDocs, dedupStorePath, threshold, numHashes, bands,
             appendUnique = !appliedT)
@@ -593,16 +551,14 @@ object EventStreams {
         val hashDocs = gated
           .filter(col("gate_passed") && col("phash").isNotNull)
           .select(col("doc_id"), col("phash"))
-        val appliedH = graft.operators.IncrementalHashDedup
-          .batchApplied(spark, hashStorePath, batchId)
+        val appliedH = StoreProtocol.batchApplied(spark, hashStorePath, batchId)
         val hd = graft.operators.IncrementalHashDedup
           .dedupBatch(hashDocs, hashStorePath, hashBands, hashBandBits, maxHamming,
             idCol = "doc_id", hashCol = "phash", appendUnique = !appliedH)
           .select(col("doc_id"), col("dup_of").as("image_dup_of"),
             col("hamming").as("image_hamming"))
 
-        val appliedV = hasVideo && graft.operators.IncrementalFrameDedup
-          .batchApplied(spark, frameStorePath, batchId)
+        val appliedV = hasVideo && StoreProtocol.batchApplied(spark, frameStorePath, batchId)
         val vd = if (!hasVideo) null else {
           val frames = gated
             .filter(col("gate_passed") && size(col("fhashes")) > 0)
@@ -625,8 +581,7 @@ object EventStreams {
           else survivors0.join(vd.filter(col("video_dup_of").isNotNull)
             .select(col("doc_id")), Seq("doc_id"), "left_anti")
 
-        val counted = graft.operators.IncrementalLineCensus
-          .batchCounted(spark, censusStorePath, batchId)
+        val counted = StoreProtocol.batchCommitted(spark, censusStorePath, batchId)
         val scrub = graft.operators.IncrementalLineCensus
           .scrubBatch(survivors, censusStorePath, lineTokens, maxDocFreq,
             updateStore = !counted, batchAlreadyCounted = counted,
@@ -650,7 +605,7 @@ object EventStreams {
         val verdict1 = if (!hasVideo) verdict0
           else verdict0.join(vd, Seq("doc_id"), "left")
         val videoDup = if (hasVideo) col("video_dup_of").isNotNull else lit(false)
-        verdict1
+        writeBatch(verdict1
           .join(scrub, Seq("doc_id"), "left")
           .withColumn("text_dup", col("dup_of").isNotNull)
           .withColumn("image_dup", col("image_dup_of").isNotNull)
@@ -658,19 +613,10 @@ object EventStreams {
             col("text_dup").cast("int") + col("image_dup").cast("int") +
               (if (hasVideo) videoDup.cast("int") else lit(0)))
           .withColumn("kept",
-            col("gate_passed") && !col("text_dup") && !col("image_dup") && !videoDup)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outDir)
-        if (!appliedT)
-          graft.operators.IncrementalDedup.markApplied(spark, dedupStorePath, batchId)
-        if (!appliedH)
-          graft.operators.IncrementalHashDedup.markApplied(spark, hashStorePath, batchId)
-        if (hasVideo && !appliedV)
-          graft.operators.IncrementalFrameDedup.markApplied(spark, frameStorePath, batchId)
-        ()
+            col("gate_passed") && !col("text_dup") && !col("image_dup") && !videoDup),
+          batchId, outDir)
+        StoreProtocol.markApplied(spark, batchId,
+          Seq(dedupStorePath, hashStorePath) ++ Option(frameStorePath).filter(_.nonEmpty): _*)
       }
   }
 
@@ -704,7 +650,7 @@ object EventStreams {
     * [[corpusPipelineStream]]: extraction is pure, both stores run the
     * marker-after-append protocol (append-only — a crash between
     * append and marker means a replay re-appends bit-identical keys;
-    * bloat reclaimed by compactStore, never corruption), and replayed
+    * bloat reclaimed by StoreProtocol.compact, never corruption), and replayed
     * decisions are identical because exact-key equality is SYMMETRIC
     * (the [[graft.operators.IncrementalFrameDedup]] lesson in reverse:
     * the store-side self-match guard suffices — any batch mate sharing
@@ -742,8 +688,7 @@ object EventStreams {
           .localCheckpoint() // ~60 B/doc; the HTML is never re-derived
         val passed = meta.filter(col("gate_passed"))
 
-        val uApplied = graft.operators.IncrementalHashDedup
-          .batchApplied(spark, urlStorePath, batchId)
+        val uApplied = StoreProtocol.batchApplied(spark, urlStorePath, batchId)
         val ud = graft.operators.IncrementalHashDedup
           .dedupBatch(passed.select(col("doc_id"), col("uk")), urlStorePath,
             bands = 1, bandBits = 32, maxHamming = 0,
@@ -753,31 +698,21 @@ object EventStreams {
         val urlKeepers = passed
           .join(ud.filter(col("url_dup_of").isNull).select(col("doc_id")),
             Seq("doc_id"))
-        val cApplied = graft.operators.IncrementalHashDedup
-          .batchApplied(spark, contentStorePath, batchId)
+        val cApplied = StoreProtocol.batchApplied(spark, contentStorePath, batchId)
         val cd = graft.operators.IncrementalHashDedup
           .dedupBatch(urlKeepers.select(col("doc_id"), col("ck")), contentStorePath,
             bands = 1, bandBits = 32, maxHamming = 0,
             idCol = "doc_id", hashCol = "ck", appendUnique = !cApplied)
           .select(col("doc_id"), col("dup_of").as("content_dup_of"))
 
-        meta.select(col("doc_id"), col("gate_passed"),
+        writeBatch(meta.select(col("doc_id"), col("gate_passed"),
             col("n_words"), col("n_anchors"))
           .join(ud, Seq("doc_id"), "left")
           .join(cd, Seq("doc_id"), "left")
           .withColumn("kept",
             col("gate_passed") && col("url_dup_of").isNull &&
-              col("content_dup_of").isNull)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outDir)
-        if (!uApplied)
-          graft.operators.IncrementalHashDedup.markApplied(spark, urlStorePath, batchId)
-        if (!cApplied)
-          graft.operators.IncrementalHashDedup.markApplied(spark, contentStorePath, batchId)
-        ()
+              col("content_dup_of").isNull), batchId, outDir)
+        StoreProtocol.markApplied(spark, batchId, urlStorePath, contentStorePath)
       }
 
   /** Stream-stream interval join: pair each left event with right
@@ -923,14 +858,8 @@ object EventStreams {
     rows.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Expectations.suite(batch, checks)
-          .withColumn("batch_id", lit(batchId))
-          .coalesce(1)
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(reportDir)
-        ()
+        writeBatch(graft.operators.Expectations.suite(batch, checks).coalesce(1),
+          batchId, reportDir)
       }
 
   /** Streaming drift monitor — the continuous twin of the qr02 drift

@@ -7,7 +7,7 @@ import java.io.File
 import java.nio.file.{Files, Paths}
 
 /** Pins the beyond-horizon behavior of the bounded applied-marker
-  * retention (AtomicSwap.MaxAppliedMarkers): a batch OLDER than every
+  * retention (StoreProtocol.MaxAppliedMarkers): a batch OLDER than every
   * retained marker, with no marker of its own, may or may not have
   * been applied — both marker-inside-the-swap stores must ABORT
   * loudly rather than silently re-apply (double-counted line
@@ -31,13 +31,13 @@ class ReplayHorizonSpec extends SparkTestBase {
   test("guard: empty store accepts any id; retained range accepts; older rejects") {
     val root = tmp(); val d = s"$root/store"
     Files.createDirectories(Paths.get(d))
-    AtomicSwap.assertWithinReplayHorizon(fs, d, 0L)   // no markers: fine
+    StoreProtocol.assertWithinReplayHorizon(fs, d, 0L)   // no markers: fine
     Seq(5L, 6L, 9L).foreach(touchMarker(d, _))
-    AtomicSwap.assertWithinReplayHorizon(fs, d, 5L)   // == oldest: fine
-    AtomicSwap.assertWithinReplayHorizon(fs, d, 7L)   // gap inside range: fine
-    AtomicSwap.assertWithinReplayHorizon(fs, d, 42L)  // future: fine
+    StoreProtocol.assertWithinReplayHorizon(fs, d, 5L)   // == oldest: fine
+    StoreProtocol.assertWithinReplayHorizon(fs, d, 7L)   // gap inside range: fine
+    StoreProtocol.assertWithinReplayHorizon(fs, d, 42L)  // future: fine
     val e = intercept[IllegalStateException] {
-      AtomicSwap.assertWithinReplayHorizon(fs, d, 4L)
+      StoreProtocol.assertWithinReplayHorizon(fs, d, 4L)
     }
     assert(e.getMessage.contains("beyond the replay-protection horizon"))
     assert(e.getMessage.contains("oldest retained applied marker is 5"))
@@ -99,13 +99,13 @@ class ReplayHorizonSpec extends SparkTestBase {
     Scd2Store.init(emptyHistory, store)
     // simulate a long-lived stream: markers 0..bound+3 already present
     // (what bounded retention would have accumulated, pre-trim)
-    val bound = AtomicSwap.MaxAppliedMarkers
+    val bound = StoreProtocol.MaxAppliedMarkers
     (0L until (bound + 4L)).foreach(touchMarker(store, _))
     // one real apply trims retention to the newest `bound` ids
     Scd2Store.applyBatch(
       Seq((1L, "a", 100L, 0L)).toDF("k", "attr", "ts", "tie"),
       store, bound + 4L, "k", "attr", "ts", "tie")
-    val retained = AtomicSwap.listAppliedMarkers(fs, store)
+    val retained = StoreProtocol.listAppliedMarkers(fs, store)
     assert(retained.length == bound)
     assert(retained.min == 5L, s"oldest retained should be 5, got ${retained.min}")
     // batch 4 fell off the horizon: replaying it must abort

@@ -51,31 +51,6 @@ class IncrementalDedupSpec extends SparkTestBase {
     assert(spark.read.parquet(store).count() == 1)
   }
 
-  test("compactStore rewrites to fewer files with identical content") {
-    val store = tmpStore()
-    IncrementalDedup.initStore(Seq((0L, t0)).toDF("doc_id", "text"), store)
-    // several appends -> several file sets
-    (1 to 4).foreach { k =>
-      IncrementalDedup.dedupBatch(
-        Seq((10L * k, s"unique batch $k text with its own words $k")).toDF("doc_id", "text"),
-        store, threshold = 0.9)
-    }
-    val before = spark.read.parquet(store)
-      .orderBy("id").collect().map(_.getLong(0)).toSeq
-    val filesBefore = new java.io.File(store).listFiles().count(_.getName.endsWith(".parquet"))
-    IncrementalDedup.compactStore(spark, store, targetFiles = 1)
-    val after = spark.read.parquet(store)
-      .orderBy("id").collect().map(_.getLong(0)).toSeq
-    val filesAfter = new java.io.File(store).listFiles().count(_.getName.endsWith(".parquet"))
-    assert(after == before)
-    assert(filesAfter < filesBefore && filesAfter == 1)
-    // the compacted store still serves dedup
-    val out = IncrementalDedup.dedupBatch(
-        Seq((99L, t0)).toDF("doc_id", "text"), store, 0.9)
-      .as[(Long, Option[Long], Option[Double])].collect().head
-    assert(out._2.contains(0L))
-  }
-
   test("crash-replay of an already-appended batch yields identical, self-dup-free decisions") {
     val store = tmpStore()
     IncrementalDedup.initStore(Seq((0L, t0), (1L, t1)).toDF("doc_id", "text"), store)
@@ -91,35 +66,9 @@ class IncrementalDedupSpec extends SparkTestBase {
     assert(replay == first)        // identical decisions, not 11 -> dup_of 11 @ 1.0
     assert(replay(11L)._1.isEmpty) // the appended unique doc is NOT its own dup
     // store only duplicated 11's signature (the unprotected window); compaction reclaims
-    IncrementalDedup.compactStore(spark, store, targetFiles = 1)
+    graft.hfc.StoreProtocol.compact(spark, store)
     val ids = spark.read.parquet(store).select("id").as[Long].collect().sorted.toSeq
     assert(ids == Seq(0L, 1L, 11L))
-  }
-
-  test("applied-batch markers gate the streaming store append") {
-    val store = tmpStore()
-    IncrementalDedup.initStore(Seq((0L, t0)).toDF("doc_id", "text"), store)
-    assert(!IncrementalDedup.batchApplied(spark, store, 7L))
-    IncrementalDedup.markApplied(spark, store, 7L)
-    assert(IncrementalDedup.batchApplied(spark, store, 7L))
-    assert(!IncrementalDedup.batchApplied(spark, store, 8L))
-  }
-
-  test("dedupBatch recovers a torn compaction swap before reading") {
-    val store = tmpStore()
-    IncrementalDedup.initStore(Seq((0L, t0)).toDF("doc_id", "text"), store)
-    // simulate a crash between commitDir's two renames: target moved to
-    // .old, completed staging never renamed in
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val staging = graft.hfc.AtomicSwap.stagingFor(store)
-    spark.read.parquet(store).repartition(1).write.mode("overwrite").parquet(staging)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(store),
-                     new org.apache.hadoop.fs.Path(store + ".old")))
-    // without recovery this read would fail (no store dir); dedupBatch rolls forward
-    val out = IncrementalDedup.dedupBatch(
-        Seq((10L, t0)).toDF("doc_id", "text"), store, 0.9)
-      .as[(Long, Option[Long], Option[Double])].collect().head
-    assert(out._2.contains(0L))
   }
 
   test("near (not exact) dup above threshold is found across batches") {

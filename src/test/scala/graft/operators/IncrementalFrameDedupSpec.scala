@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** [[IncrementalFrameDedup]] — the frame-grain incremental store: vote
   * decisions against store + batch mates, append-unique, the replay
-  * self-match guard, the MIH probe regime, and crash-safe compaction.
+  * self-match guard and the MIH probe regime (the crash/replay
+  * protocol is checked for every store in graft.hfc.StoreProtocolSpec).
   * Hashes are hand-built so every ballot is arranged exactly
   * (hamming-0 matches under an 8×8 split unless stated). */
 class IncrementalFrameDedupSpec extends SparkTestBase {
@@ -103,23 +104,4 @@ class IncrementalFrameDedupSpec extends SparkTestBase {
     assert(got(40L).contains(10L), s"MIH must find the 5/6-flip frames: $got")
   }
 
-  test("compactStore collapses replay bloat crash-safely") {
-    val store = freshStore()
-    decide(store)              // +4 (33)
-    val bloat = batch.filter($"clip_id" === 33L)
-    bloat.select($"clip_id".as("id"), $"frame_idx".cast("int").as("frame"),
-        $"fhash".cast("long").as("hash"))
-      .write.mode("append").parquet(store) // simulate a replayed append
-    assert(spark.read.parquet(store).count() == 16L)
-    IncrementalFrameDedup.compactStore(spark, store)
-    assert(spark.read.parquet(store).count() == 12L, "duplicate (id, frame) rows collapse")
-  }
-
-  test("applied markers round-trip") {
-    val store = freshStore()
-    assert(!IncrementalFrameDedup.batchApplied(spark, store, 7L))
-    IncrementalFrameDedup.markApplied(spark, store, 7L)
-    assert(IncrementalFrameDedup.batchApplied(spark, store, 7L))
-    assert(!IncrementalFrameDedup.batchApplied(spark, store, 8L))
-  }
 }

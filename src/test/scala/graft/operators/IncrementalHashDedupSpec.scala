@@ -4,7 +4,8 @@ import graft.SparkTestBase
 
 /** The incremental hamming-space dedup store: batch-vs-store and
   * within-batch decisions, append growth, replay self-match guard,
-  * compaction, and the real-image path end to end. */
+  * and the real-image path end to end (the crash/replay protocol is
+  * checked for every store in graft.hfc.StoreProtocolSpec). */
 class IncrementalHashDedupSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -41,27 +42,14 @@ class IncrementalHashDedupSpec extends SparkTestBase {
     val batch = Seq((10L, 0xF0F0L)).toDF("doc_id", "phash")
     val first = decisions(IncrementalHashDedup.dedupBatch(batch, store))
     assert(first(10L) == ((None, None)))
-    assert(!IncrementalHashDedup.batchApplied(spark, store, 0L))
-    IncrementalHashDedup.markApplied(spark, store, 0L)
-    assert(IncrementalHashDedup.batchApplied(spark, store, 0L))
+    assert(!graft.hfc.StoreProtocol.batchApplied(spark, store, 0L))
+    graft.hfc.StoreProtocol.markApplied(spark, 0L, store)
+    assert(graft.hfc.StoreProtocol.batchApplied(spark, store, 0L))
     // crash replay: append already landed; the old=!=new guard must
     // keep 10 from matching its own stored hash at hamming 0
     val replay = decisions(IncrementalHashDedup.dedupBatch(batch, store,
       appendUnique = false))
     assert(replay == first, s"replay decisions must be identical: $replay")
-  }
-
-  test("double append (crash between append and marker) bloats; compact reclaims") {
-    val store = tmpStore()
-    IncrementalHashDedup.initStore(
-      Seq((1L, 0x00L)).toDF("doc_id", "phash"), store)
-    val batch = Seq((10L, 0xF0F0L)).toDF("doc_id", "phash")
-    IncrementalHashDedup.dedupBatch(batch, store)
-    IncrementalHashDedup.dedupBatch(batch, store) // replayed append
-    assert(spark.read.parquet(store).count() == 3L, "replay bloat expected")
-    IncrementalHashDedup.compactStore(spark, store, targetFiles = 2)
-    val rows = spark.read.parquet(store).as[(Long, Long)].collect().toSet
-    assert(rows == Set((1L, 0x00L), (10L, 0xF0F0L)), s"compacted: $rows")
   }
 
   test("pigeonhole guard rejects bands <= maxHamming") {

@@ -83,17 +83,6 @@ class IncrementalIvfSpec extends SparkTestBase {
     }
   }
 
-  test("applied markers gate replay like the sibling stores") {
-    val e = Tables(spark, sf0001).embeddings
-    withStore { path =>
-      IncrementalIvf.init(e.filter($"vec_id" % 2 === 0), path, nCells = 8)
-      assert(!IncrementalIvf.batchApplied(spark, path, 7L))
-      IncrementalIvf.markApplied(spark, path, 7L)
-      assert(IncrementalIvf.batchApplied(spark, path, 7L))
-      assert(!IncrementalIvf.batchApplied(spark, path, 8L))
-    }
-  }
-
   test("probe scan still partition-prunes after appends") {
     val e = Tables(spark, sf0001).embeddings
     withStore { path =>
@@ -191,7 +180,7 @@ class IncrementalIvfSpec extends SparkTestBase {
 
       // rebuild: the action the advice prices — re-fit drops the
       // planted imbalance, preserves content + markers, stays servable
-      IncrementalIvf.markApplied(spark, path, 42L)
+      graft.hfc.StoreProtocol.markApplied(spark, 42L, path)
       val idsBefore = spark.read.parquet(s"$path/assigned")
         .select($"vec_id").as[Long].collect().toSet
       IncrementalIvf.rebuild(spark, path, nCells = 8)
@@ -201,8 +190,8 @@ class IncrementalIvfSpec extends SparkTestBase {
       assert(spark.read.parquet(s"$path/assigned")
         .select($"vec_id").as[Long].collect().toSet === idsBefore,
         "rebuild must preserve the accumulated vectors exactly")
-      assert(IncrementalIvf.batchApplied(spark, path, 42L),
-        "applied markers must ride through the swap")
+      assert(graft.hfc.StoreProtocol.batchApplied(spark, path, 42L),
+        "applied markers must survive the swap")
       val served = IncrementalIvf.serve(spark, path, qs, k = 5, nProbe = 2)
       assert(served.count() === qs.size * 5L, "rebuilt index must serve full top-k")
       assert(served.queryExecution.executedPlan.toString.contains("PartitionFilters: [cell"),

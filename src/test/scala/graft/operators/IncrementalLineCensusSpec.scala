@@ -138,7 +138,7 @@ class IncrementalLineCensusSpec extends SparkTestBase {
       new java.io.File(store), new java.io.File(graft.hfc.AtomicSwap.stagingFor(store)))
     org.apache.commons.io.FileUtils.moveDirectory(
       new java.io.File(empty), new java.io.File(store + ".old"))
-    assert(IncrementalLineCensus.batchCounted(spark, store, 7L),
+    assert(graft.hfc.StoreProtocol.batchCommitted(spark, store, 7L),
       "committed batch must be visible through the torn swap")
     assert(IncrementalLineCensus.storeStats(spark, store) == committed,
       "recovery must roll the committed counts forward")

@@ -25,7 +25,8 @@ import java.nio.file.Files
   * batchCounted consulted the marker WITHOUT recovering the swap
   * first, so a torn swap made a committed batch look un-counted and
   * the replay double-merged its counts (fixed in
-  * IncrementalLineCensus.batchCounted; this spec pins it). */
+  * the census applied-check, now StoreProtocol.batchCommitted; this
+  * spec pins it). */
 class CorpusSoakSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -291,7 +292,7 @@ class CorpusSoakSpec extends SparkTestBase {
         if (fault) {
           q.stop()
           if (tornCompactAfter.contains(w)) {
-            // reconstruct compactStore crashed between its two renames:
+            // reconstruct StoreProtocol.compact crashed between its two renames:
             // staging = the compacted content (complete), old = the
             // pre-compact store, target ABSENT. recoverDir must roll
             // forward; the sibling marker dir is untouched by design.

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkTestBase
-import graft.hfc.{Scd2, Scd2Store}
+import graft.hfc.{Scd2, Scd2Store, StoreProtocol}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -46,7 +46,7 @@ class Scd2StreamSpec extends SparkTestBase {
     val b = updatesDf(allUpdates.take(3))
     Scd2Store.applyBatch(b, store, 7L, "k", "attr", "ts", "tie")
     val after1 = sortedHistory(Scd2Store.history(spark, store))
-    assert(Scd2Store.batchApplied(spark, store, 7L))
+    assert(StoreProtocol.batchCommitted(spark, store, 7L))
     Scd2Store.applyBatch(b, store, 7L, "k", "attr", "ts", "tie") // replay
     assert(sortedHistory(Scd2Store.history(spark, store)) == after1)
   }
@@ -61,7 +61,7 @@ class Scd2StreamSpec extends SparkTestBase {
     val (b1, b2) = allUpdates.partition(_._3 < 160L)
     Scd2Store.applyBatch(updatesDf(b1), store, 0L, "k", "attr", "ts", "tie")
     Scd2Store.applyBatch(updatesDf(b2), store, 1L, "k", "attr", "ts", "tie")
-    assert(Scd2Store.batchApplied(spark, store, 0L),
+    assert(StoreProtocol.batchCommitted(spark, store, 0L),
       "batch 0's marker must survive batch 1's store swap")
     val after = sortedHistory(Scd2Store.history(spark, store))
     Scd2Store.applyBatch(updatesDf(b1), store, 0L, "k", "attr", "ts", "tie") // late replay

@@ -96,7 +96,7 @@ class WebPipelineStreamSpec extends SparkTestBase {
       assert(d1(14L) == ((false, None, None, false)), s"14: ${d1(14L)}")
       assert(d1(15L) == ((true, Some(0L), None, false)), s"15: ${d1(15L)}")
 
-      // torn compaction of the url store: compactStore crashed between
+      // torn compaction of the url store: StoreProtocol.compact crashed between
       // its two renames — staging complete, target moved aside. The
       // next batch's recoverDir-on-entry must roll forward.
       q.stop()
