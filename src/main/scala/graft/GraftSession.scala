@@ -21,11 +21,20 @@ object GraftSession {
       .config("spark.sql.parquet.compression.codec", "zstd")
       .config("spark.ui.enabled", "false")
 
+  /** The task-thread count a `cpus` setting resolves to: a positive
+    * integer, or `*` for every core of the host (Spark's `local[*]`). */
+  def cores(cpus: String): Int = cpus.trim match {
+    case "*" => Runtime.getRuntime.availableProcessors
+    case n => n.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"SPARK_GRAFT_CPUS must be a positive integer or '*', got '$cpus'"))
+  }
+
   def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"),
             appName: String = "graft"): SparkSession = {
+    val n = cores(cpus)
     val spark = configure(
-      SparkSession.builder().master(s"local[$cpus]").appName(appName)
-        .withExtensions(new GraftExtensions), cpus)
+      SparkSession.builder().master(s"local[$n]").appName(appName)
+        .withExtensions(new GraftExtensions), n.toString)
       .getOrCreate()
     GraftExtensions.register(spark) // getOrCreate may reuse a pre-extension session
     spark.sparkContext.setLogLevel("WARN")

@@ -130,7 +130,7 @@ object StubHashes {
   /** 63-bit energy-delta fingerprint: bit w set iff e64(w+1) > e64(w)
     * for w in 0..62 — 63 bits so the value stays positive in a signed
     * 64-bit in both engines (the dhash56 trick), while carrying the
-    * production width's collision resistance (ProfileAudioPlane: the
+    * production width's collision resistance (NOTES_r13: the
     * 32-bit space collapses under birthday pressure by ~10⁴ clips). */
   def audioFp63(u: UTF8String): Long = {
     val e = energies64(u)

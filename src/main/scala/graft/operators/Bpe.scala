@@ -159,8 +159,8 @@ object Bpe {
       val t0 = System.nanoTime()
       // over-fetch window (default 2x — the qt43 oracle pins this
       // exact width): disjointness filtering drops some candidates.
-      // ProfileVocab's natural-alphabet run showed the WINDOW, not the
-      // alphabet, throttles tie-heavy regimes — ties sort
+      // The natural-alphabet vocabulary run (NOTES_r12) showed the
+      // WINDOW, not the alphabet, throttles tie-heavy regimes — ties sort
       // lexicographically by l, so same-l runs crowd a narrow window
       // and the disjoint filter starves (measured: 2,956 rounds at
       // overFetch=2 vs 218 at 16 on a 537-char corpus, 7.7x faster).

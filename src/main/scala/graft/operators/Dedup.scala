@@ -249,10 +249,10 @@ object Dedup {
     * array intersection. Output is complete for jaccard ≥ t (pairs
     * below t are filtered — they carry no completeness guarantee).
     *
-    * vs [[jaccardPairsByBlock]]: MEASURED at sf0.1 (ProfileJaccard,
-    * NOTES_r2.md) the exact count-agg path wins at both t=0.05 (prefix
-    * >10 min vs ~5 s) and t=0.3 (~6-10× slower): with few-hundred-
-    * shingle docs the prefix is still ~70% of the doc at t=0.3, so the
+    * vs [[jaccardPairsByBlock]]: MEASURED at sf0.1 (NOTES_r2.md) the
+    * exact count-agg path wins at both t=0.05 (prefix >10 min vs ~5 s)
+    * and t=0.3 (~6-10× slower): with few-hundred-shingle docs the
+    * prefix is still ~70% of the doc at t=0.3, so the
     * candidate set barely shrinks while every candidate pays an
     * array_intersect the count aggregation never does. The prefix path
     * is the right shape only for high-threshold (t ≳ 0.7) dedup over

@@ -73,7 +73,7 @@ object IncrementalIvf {
     * and a final distinct over the ≤ k·|queries| result rows removes
     * the copies. A pruned-side `dropDuplicates` would instead shuffle
     * the full VECTOR PAYLOAD of every probed cell — measured 664 MB at
-    * a 4M-row store (ProfileIncrIvf) vs the candidates' ~24 B rows
+    * a 4M-row store (NOTES_r13) vs the candidates' ~24 B rows
     * that must shuffle for ranking anyway. */
   def serve(spark: SparkSession, path: String, queryIds: Seq[Long],
             k: Int, nProbe: Int,

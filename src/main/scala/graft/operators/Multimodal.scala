@@ -511,8 +511,8 @@ object Multimodal {
     * window function + an 8-byte-key aggregation.
     *
     * `bits` is the fingerprint width (delta-sign count; bits+1 windows
-    * decoded). The default is 64 — ProfileAudioPlane measured the
-    * 32-bit space collapsing under birthday pressure by ~10⁴ clips
+    * decoded). The default is 64 — the audio-plane sweep (NOTES_r13)
+    * measured the 32-bit space collapsing under birthday pressure by ~10⁴ clips
     * (precision 0.38 at 20k, and best-match confusion dragged recall
     * to 0.81) while 64 bits read precision 0.99 / recall 1.00 on the
     * same corpus; a 32-bit width exists only as the qm04 STUB-twin
@@ -576,7 +576,7 @@ object Multimodal {
     * antialiasing" step. A single-step bilinear `drawImage` downscale
     * — the previous implementation — samples only a 2x2 neighborhood
     * per output pixel and aliases on large downscales: measured on the
-    * ProfileImagePlane corpus it drifted rescaled copies to hamming
+    * image-plane corpus (NOTES_r12) it drifted rescaled copies to hamming
     * 10+ (recall 0.42 at threshold 6), while the box filter holds the
     * same copies at hamming <= 3 and is cheaper (one int-array pass,
     * no Graphics2D). */
@@ -721,7 +721,7 @@ object Multimodal {
     * `bands > maxHamming`, which forces NARROW band keys on a 64-bit
     * hash (8 bands → 8-bit keys → 256 buckets/band) — and narrow keys
     * saturate: incidental same-bucket candidates grow ~N²/2^bandBits,
-    * measured in the ProfileScaleFamily control sweep as the one
+    * measured in the scale-family control sweep (NOTES_r12) as the one
     * super-linear term. MIH generalizes the pigeonhole: `maxHamming`
     * flips over `bands` bands leave SOME band with at most
     * t = floor(maxHamming/bands) flips, so exact-matching each band
@@ -794,9 +794,9 @@ object Multimodal {
     * tolerance) geometry for [[hashNearDup]] / [[hashNearDupMih]] /
     * [[IncrementalHashDedup]], price each candidate geometry's
     * quadratic stage from the store's MEASURED band-key occupancy.
-    * ProfileVideoPlane's regime inversion is the motivating bug class:
+    * The video plane's regime inversion (NOTES_r13) is the motivating bug class:
     * MIH wins decisively on uniform fingerprints (wide buckets, few
-    * incidental collisions — ProfileMihStore: 4.6× at a 16M-row store)
+    * incidental collisions — 4.6× at a 16M-row store, NOTES_r13)
     * yet measured 2.6× WORSE on concentrated perceptual hashes, where
     * candidate volume follows the occupancy SECOND MOMENT — a
     * distribution property no static rule sees. This operator reads
@@ -806,8 +806,8 @@ object Multimodal {
     * EXPLODE volume is linear (`probe_rows_per_item` × items) and its
     * realized cost depends on map-side combine behavior the census
     * cannot see; when two geometries price within the same order of
-    * magnitude, measure before committing (the ProfileVideoPlane
-    * discipline).
+    * magnitude, measure before committing (the video-plane
+    * discipline, NOTES_r13).
     *
     * Per geometry (counts only — hashes explode to (band, key) rows
     * once, aggregate to an occupancy table, and all pricing runs on
@@ -1156,7 +1156,7 @@ object Multimodal {
     * energy(w+1) > energy(w). 63 bits keeps the value positive in a
     * signed 64-bit in both engines (the dhash56 trick) while carrying
     * the width that survives birthday pressure at large clip counts
-    * (ProfileAudioPlane: 32-bit precision 0.38 at 20k clips, 64-bit
+    * (audio-plane sweep, NOTES_r13: 32-bit precision 0.38 at 20k clips, 64-bit
     * 0.99). Compiled expression; [[textAudioFp63Unrolled]] is the
     * semantic spec. */
   def textAudioFp63(text: Column): Column = call_function("graft_text_audio_fp63", text)

@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * infinite iteration: the doubling schedule is static, the loop rows
   * simply keep composing inside the cycle until the rounds run out.
   *
-  * Memory shape (measured, ProfileRedirects): shuffle is LINEAR in
+  * Memory shape (measured, NOTES_r13): shuffle is LINEAR in
   * |E| (~127 B/edge across all rounds — no row multiplication), but
   * each round's localCheckpoint holds one |E|-row generation in the
   * block manager until ContextCleaner frees out-of-scope generations
@@ -36,7 +36,7 @@ import org.apache.spark.sql.functions._
   * Spread across a cluster's executors that is negligible (1B edges ≈
   * 200 GB / fleet); in a SINGLE JVM the generations compound GC
   * pressure at the 10M-edge mark — profile sizes in isolated JVMs
-  * (the ProfileVideoPlane §8 methodology).
+  * (the NOTES_r13 §8 video-plane methodology).
   */
 object Redirects {
 

@@ -372,7 +372,7 @@ object CurationQueries {
     // as ~100 B/doc metadata. Everything downstream (gate, window
     // dedup, all report counts) reads the narrow frame — the corpus
     // is tokenized once and its bytes never enter a shuffle (measured
-    // in ProfileWarc: curate wall 52.6 s → metadata-sized once the
+    // in NOTES_r10: curate wall 52.6 s → metadata-sized once the
     // text column stops riding through the window).
     val raw = documents.select($"doc_id", $"source",
       size(tokens($"text")).cast("long").as("wc"),
@@ -602,27 +602,19 @@ object CurationQueries {
     * structure unless the decision coordinate is the cluster. Shapes:
     * the audited funnel + CC labels, the broadcast n-gram guard, then
     * one cluster-keyed bool aggregation joined back — no new shuffle
-    * class. */
+    * class ([[graft.operators.Decontaminate.clusterFlag]] is the same
+    * decision over caller-supplied pairs).
+    *
+    * Shared tokenization (guide §2.3): ONE pass over the corpus text
+    * computes, per doc, the funnel's 3-gram hashes + MinHash band keys
+    * AND the guard's 5-gram hashes from a single let-bound token array
+    * — composing the operators tokenized the text once for the
+    * near-dup funnel and again for the exact n-gram guard (and a third
+    * time for the guard's bench side). The combined projection is
+    * materialized exactly as the signature table alone was; the funnel
+    * and both guard sides read the cache. Adopted after an interleaved
+    * A/B at sf0.1 (OPTIMIZATION_r15.md). */
   def clusterDecontaminate(t: Tables): DataFrame = {
-    import t.spark.implicits._
-    val pairs = graft.operators.Dedup.nearDupsMinhash(t.documents, threshold = 0.3)
-      .select($"a_id", $"b_id")
-    val bench = t.documents.filter($"doc_id" % 50 === 0)
-    graft.operators.Decontaminate
-      .clusterFlag(t.documents, bench, pairs, n = 5)
-      .orderBy($"doc_id")
-  }
-
-  /** Shared-tokenization form of [[clusterDecontaminate]] (r15, guide
-    * §2.3): ONE pass over the corpus text computes, per doc, the
-    * funnel's 3-gram hashes + MinHash band keys AND the guard's 5-gram
-    * hashes from a single let-bound token array — the old form
-    * tokenized the text once for the near-dup funnel and again for the
-    * exact n-gram guard (and a third time for the guard's bench side).
-    * The combined projection is materialized exactly as the signature
-    * table alone was; the funnel and both guard sides read the cache.
-    * Gated on the interleaved A/B in [[graft.tools.DiagQc12]]. */
-  private[graft] def clusterDecontaminateShared(t: Tables): DataFrame = {
     import t.spark.implicits._
     val proj = graft.operators.Dedup.materialized(
       t.documents.select($"doc_id",
@@ -1681,10 +1673,10 @@ object CurationQueries {
     "qc01_curation_pipeline" -> ((s: SparkSession, d: String) => curationPipeline(Tables(s, d))),
     "qc02_decontaminate"     -> ((s: SparkSession, d: String) => decontaminate(Tables(s, d))),
     // r15: shared-tokenization form — one corpus text scan feeds the
-    // funnel and both guard sides; DiagQc12 interleaved A/B at sf0.1
+    // funnel and both guard sides; an interleaved A/B at sf0.1
     // (n=5) min 3.32 -> 2.93 s, won 4/5 passes. Oracle-verified
     // sf0.01 + sf0.1.
-    "qc12_cluster_decontam"  -> ((s: SparkSession, d: String) => clusterDecontaminateShared(Tables(s, d))),
+    "qc12_cluster_decontam"  -> ((s: SparkSession, d: String) => clusterDecontaminate(Tables(s, d))),
     "qc13_dedup_roi"         -> ((s: SparkSession, d: String) => dedupRoi(Tables(s, d))),
     "qt08_repetition"        -> ((s: SparkSession, d: String) => repetitionStats(Tables(s, d))),
     "qc03_chunking"          -> ((s: SparkSession, d: String) => chunking(Tables(s, d))),

@@ -450,8 +450,8 @@ object ExtendedQueries {
     * COUNT before running: at or under the threshold (covering the
     * sf0.01 oracle gate's graph) the oracle-able exact truth runs;
     * above it the query serves HyperBall, whose state is |V| fixed-
-    * size HLL registers at every radius (ProfileNeighborhood's
-    * measured wall/shuffle table in NOTES_r9 is the evidence). The
+    * size HLL registers at every radius (the measured wall/shuffle
+    * table in NOTES_r9 is the evidence). The
     * approx branch keeps its honest `_est` column names: estimates
     * are sketch-valued, never oracle-hashed — the driver's gate runs
     * at sf0.01 where the exact branch is taken. */

@@ -545,8 +545,8 @@ object PipelineQueries {
 
   /** Hyperplane j's weight for component i is hexdigit₁(md5("j:i")) −
     * 7.5, exactly VectorFunctions.lshBucket (strpos is 1-based, hence
-    * −8.5). `tools/dump_lsh_buckets.py` proved the bucket strings
-    * bit-identical across engines before this oracle was wired in. */
+    * −8.5). This oracle pins the bucket strings bit-identical across
+    * engines. */
   val annLshSql: String =
     """WITH v AS (SELECT vec_id, embedding::DOUBLE[] e,
       |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) nrm
@@ -640,8 +640,8 @@ object PipelineQueries {
       |WHERE rk <= 5 ORDER BY query_id, rk""".stripMargin
 
   /** qs15: ANN recall as a first-class ORACLE-CHECKED query — the
-    * AnnEval tool's headline number (recall@5 of the IVF probe against
-    * brute force) computed in-engine with an exact DuckDB twin: both
+    * ANN evaluation's headline number (NOTES_r6; recall@5 of the IVF
+    * probe against brute force) computed in-engine with an exact DuckDB twin: both
     * paths are already engine-independent (md5 centroids, round-6
     * cosines), so their intersection — and therefore the recall
     * itself — is a pure function of the corpus. Per query: hit count
@@ -2250,8 +2250,8 @@ object PipelineQueries {
     * a LARGER guaranteed radius than qm03's 4-band pigeonhole (≤ 3)
     * from the same 56-bit hash, with wide buckets (2^14/band) so
     * incidental candidates stay ~N²/2^14 instead of the narrow-band
-    * funnel's ~N²/2^bandBits saturation (the ProfileScaleFamily
-    * control-sweep finding). The oracle replays the probe expansion
+    * funnel's ~N²/2^bandBits saturation (the scale-family
+    * control-sweep finding, NOTES_r12). The oracle replays the probe expansion
     * as a 15-way flip join. */
   def imageNearDupMih(t: Tables): DataFrame = {
     import t.spark.implicits._
@@ -2290,7 +2290,7 @@ object PipelineQueries {
     * probe), each priced by the EXACT candidate-pair mass its bucket
     * join would emit on THIS corpus, from the measured band-key
     * occupancy (counts only — no pair is materialized). The operator
-    * exists because ProfileVideoPlane measured the uniform-hash regime
+    * exists because the video plane (NOTES_r13) measured the uniform-hash regime
     * prediction INVERTING on concentrated perceptual keys: the right
     * regime is a property of the data's occupancy second moment, so
     * the engine reads it before committing a funnel geometry. Rank 1 =
@@ -2557,7 +2557,7 @@ object PipelineQueries {
   /** qm10: WIDE audio-fingerprint near-dup — the production 64-bit
     * audio width gated: 63-bit stub fingerprint per clip
     * ([[Multimodal.textAudioFp63]], qm04's energy-delta chain at the
-    * width ProfileAudioPlane measured surviving birthday pressure
+    * width the audio-plane sweep (NOTES_r13) measured surviving birthday pressure
     * where 32 bits collapse), deduped through
     * [[Multimodal.hashNearDup]] with a 7 × 9-bit pigeonhole split
     * covering hamming ≤ 6 over all 63 bits — a different band geometry
@@ -3162,7 +3162,7 @@ object PipelineQueries {
       |FROM cm ORDER BY true_lang, pred_lang""".stripMargin
 
   /** qd17: similarity-threshold sweep — the calibration census behind
-    * choosing qd03's threshold (and the DedupEval table's third axis):
+    * choosing qd03's threshold (and the third axis of NOTES_r4's dedup table):
     * every banded candidate pair histogrammed by exact-Jaccard decile.
     * Run once per corpus before committing a threshold: the mass below
     * a candidate decile is what that threshold would discard. Same

@@ -1137,48 +1137,19 @@ object QualityQueries {
     * misses: verbatim spans → paraphrases above lexical overlap →
     * semantic rewrites with no lexical overlap at all. One declarative
     * plan; the layers stay broadcast-shaped (the corpus is scanned,
-    * never self-joined). */
+    * never self-joined).
+    *
+    * Shared tokenization (guide §2.3): ONE pass over the corpus text
+    * computes, per doc, the exact-layer 5-gram hashes AND the
+    * fuzzy-layer 3-gram hashes + MinHash band keys from a single
+    * let-bound token array — composing the layers' own operators
+    * scanned and re-tokenized the text once per lexical layer (corpus
+    * 5-grams, bench 5-grams, signature table). The combined projection
+    * is materialized exactly as the signature table alone was; both
+    * layers then read the cache. Adopted after an interleaved A/B at
+    * sf0.1 (OPTIMIZATION_r15.md; the qt40 lesson: overlapping
+    * independent legs can beat a fused scan). */
   def contaminationReport(t: Tables): DataFrame = {
-    import t.spark.implicits._
-    val bench = t.documents.filter($"doc_id" % 50 === 0)
-    val corpus = t.documents.filter($"doc_id" % 50 =!= 0)
-    val exact = Decontaminate.flag(corpus, bench, n = 5)
-      .select($"doc_id", ($"n_hits" > 0).as("exact_hit"))
-    val fuzzy = Decontaminate.fuzzyFlag(t.documents, bench, threshold = 0.3,
-        benchIsSubset = true)
-      .filter($"doc_id" % 50 =!= 0)
-      .select($"doc_id", $"contaminated".as("fuzzy_hit"))
-    val semantic = semanticDecontaminate(t)
-      .select($"vec_id".as("doc_id"), $"contaminated".as("semantic_hit"))
-    // LEFT joins from the corpus id set: a layer that cannot judge a
-    // doc (no embedding row — at corpus scale embedding coverage is
-    // always partial; the sf0.1 fixture has 2000 vectors for 5000
-    // docs) contributes `false`, it must not silently DROP the doc
-    // from the report (the round-11 sf0.1 gate caught the inner-join
-    // version losing 2940 rows)
-    corpus.select($"doc_id")
-      .join(exact, Seq("doc_id"), "left")
-      .join(fuzzy, Seq("doc_id"), "left")
-      .join(semantic, Seq("doc_id"), "left")
-      .select($"doc_id",
-        coalesce($"exact_hit", lit(false)).as("exact_hit"),
-        coalesce($"fuzzy_hit", lit(false)).as("fuzzy_hit"),
-        coalesce($"semantic_hit", lit(false)).as("semantic_hit"))
-      .withColumn("flagged", $"exact_hit" || $"fuzzy_hit" || $"semantic_hit")
-      .orderBy($"doc_id")
-  }
-
-  /** Shared-tokenization candidate form of [[contaminationReport]]
-    * (r15, guide §2.3): ONE pass over the corpus text computes, per
-    * doc, the exact-layer 5-gram hashes AND the fuzzy-layer 3-gram
-    * hashes + MinHash band keys from a single let-bound token array —
-    * the old form scanned and re-tokenized the text once per lexical
-    * layer (corpus 5-grams, bench 5-grams, signature table). The
-    * combined projection is materialized exactly as the signature
-    * table alone was; both layers then read the cache. Gated on the
-    * interleaved A/B in [[graft.tools.DiagQc11]] (the qt40 lesson:
-    * overlapping independent legs can beat a fused scan). */
-  private[graft] def contaminationReportShared(t: Tables): DataFrame = {
     import graft.functions.TextFunctions._
     import t.spark.implicits._
     val proj = Dedup.materialized(
@@ -1212,6 +1183,12 @@ object QualityQueries {
       .select($"doc_id", $"contaminated".as("fuzzy_hit"))
     val semantic = semanticDecontaminate(t)
       .select($"vec_id".as("doc_id"), $"contaminated".as("semantic_hit"))
+    // LEFT joins from the corpus id set: a layer that cannot judge a
+    // doc (no embedding row — at corpus scale embedding coverage is
+    // always partial; the sf0.1 fixture has 2000 vectors for 5000
+    // docs) contributes `false`, it must not silently DROP the doc
+    // from the report (the round-11 sf0.1 gate caught the inner-join
+    // version losing 2940 rows)
     corpus.select($"doc_id")
       .join(exact, Seq("doc_id"), "left")
       .join(fuzzy, Seq("doc_id"), "left")
@@ -1661,7 +1638,7 @@ object QualityQueries {
     // r14 optimization note — measured, then deliberately LEFT ALONE:
     // fusing the six widths into one scan + one (n, h)-grouped
     // count-distinct read 2.5x SLOWER in an interleaved A/B
-    // (tools/DiagQt40: min 1.66 s per-width vs 4.24 s fused at sf0.1).
+    // (OPTIMIZATION_r14.md: min 1.66 s per-width vs 4.24 s fused at sf0.1).
     // The six union legs are independent plan subtrees, so AQE runs
     // their stages as overlapping jobs (guide §2.6) — the fused form
     // serialized the same bytes through one fat Expand exchange. The
@@ -3448,10 +3425,10 @@ object QualityQueries {
     "qt40_novelty_curve"     -> ((s: SparkSession, d: String) => noveltyCurve(Tables(s, d))),
     "qc10_semantic_decontam" -> ((s: SparkSession, d: String) => semanticDecontaminate(Tables(s, d))),
     // r15: shared-tokenization form — one corpus text scan feeds both
-    // lexical layers; DiagQc11 interleaved A/B at sf0.1 (n=5) showed it
+    // lexical layers; an interleaved A/B at sf0.1 (n=5) showed it
     // never slower (min 3.11 -> 3.07 s, won all 5 passes), and at scale
     // it is 1 tokenize pass instead of 3. Oracle-verified sf0.01 + sf0.1.
-    "qc11_contamination_report" -> ((s: SparkSession, d: String) => contaminationReportShared(Tables(s, d))),
+    "qc11_contamination_report" -> ((s: SparkSession, d: String) => contaminationReport(Tables(s, d))),
     "qp10_relative_gate"     -> ((s: SparkSession, d: String) => relativeQualityGate(Tables(s, d))),
     "qp20_curriculum"        -> ((s: SparkSession, d: String) => curriculumSchedule(Tables(s, d))),
     "qp09_dsir_weights"      -> ((s: SparkSession, d: String) => dsirWeights(Tables(s, d))),

@@ -1,12 +1,22 @@
 package graft.tools
 
-import graft.{GraftSession, Tables}
+import graft.{GraftSession, SparkEntry, Tables}
 import graft.queries.{PipelineQueries, RelationalQueries}
+import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
-/** Regenerates PLANS.md: `.explain("formatted")` output for the
-  * scale-critical queries with the properties each plan must keep
-  * (also pinned by PlanAuditSpec). `runMain graft.tools.DumpPlans`. */
+/** Formatted physical plans (`.explain("formatted")`).
+  *
+  * `runMain graft.tools.DumpPlans` regenerates PLANS.md: the plans of
+  * the scale-critical queries with the properties each plan must keep
+  * (also pinned by PlanAuditSpec).
+  *
+  * `runMain graft.tools.DumpPlans <prefix>[,<prefix>...] <outDir>`
+  * writes `<outDir>/<name>.txt` for every declared query whose name
+  * starts with one of the prefixes, over the tables in
+  * `SPARK_GRAFT_SF_DIR` (the sf0.001 fixture when unset): the
+  * before/after plan evidence for a change, beside the per-query
+  * counters `graft.Bench` records. */
 object DumpPlans {
 
   /** Plan-adjacent contract appended to PLANS.md — survives
@@ -42,17 +52,40 @@ object DumpPlans {
       |mega-repo skew the reference blocklists against
       |(databaseImport.py:712); losing the composite key in a refactor would
       |concentrate each mega repo on one task. Measured on the HFC-shaped
-      |fixture by `tools/ProfileHfcSkew` (numbers in NOTES_r11).
+      |fixture (numbers in NOTES_r11).
       |""".stripMargin
 
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.local(appName = "dump-plans")
     val t = Tables(spark, "/root/testdata/sf0.001")
+    args match {
+      case Array() => writePlansMd(spark, t)
+      case Array(prefixes, outDir) =>
+        writeQueryPlans(spark, sys.env.getOrElse("SPARK_GRAFT_SF_DIR", t.dir),
+          prefixes.split(",").toSeq, outDir)
+      case _ => throw new IllegalArgumentException(
+        "usage: DumpPlans [<queryPrefix>[,<queryPrefix>...] <outDir>]")
+    }
+    spark.stop()
+  }
 
-    def fmt(df: org.apache.spark.sql.DataFrame): String =
-      df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+  private def fmt(df: org.apache.spark.sql.DataFrame): String =
+    df.queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode)
 
+  private def writeQueryPlans(spark: SparkSession, sfDir: String,
+                              prefixes: Seq[String], outDir: String): Unit = {
+    val named = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (n, _) => prefixes.exists(n.startsWith) }
+    require(named.nonEmpty, s"no declared query matches ${prefixes.mkString(",")}")
+    Files.createDirectories(Paths.get(outDir))
+    named.foreach { case (name, fn) =>
+      Files.writeString(Paths.get(outDir, s"$name.txt"), fmt(fn(spark, sfDir)))
+    }
+    println(s"[plans] wrote ${named.size} plans to $outDir")
+  }
+
+  private def writePlansMd(spark: SparkSession, t: Tables): Unit = {
     val sections = Seq(
       ("q06_revenue_filter — selective scan",
        "Predicates reach the parquet reader (PushedFilters) and only the 4 referenced columns are read (ReadSchema). At 100 TB this is the difference between scanning terabytes and scanning the row groups that matter.",
@@ -108,7 +141,7 @@ object DumpPlans {
        "Same funnel discipline as MinHash: the shingle-simhash is one native-expression projection (persisted once, read by banding and both verify sides), candidates shuffle on the (band_idx, band) key, exact hamming runs only on candidates. Shown here at the production default width (64-bit fingerprint, 16-bit bands → 32-bit combination keys); 16-bit is the oracle demo size.",
        fmt(graft.operators.Dedup.nearDupsSimhash(t.documents))),
       ("qa02_asof_salted — skew-safe as-of join",
-       "The hot-key variant: the running-last window partitions by (key, time-range salt) so no task ever sorts a whole key (ProfileAsOf: max window partition 22M -> 769k rows at 32 salts). The boundary carry-in is the tiny per-(key, salt) frame on the BuildRight side of a BroadcastHashJoin — the probe side reuses its (key, salt) partitioning and is never reshuffled. Equi joins only; results bit-identical to qa01 (shared oracle).",
+       "The hot-key variant: the running-last window partitions by (key, time-range salt) so no task ever sorts a whole key (NOTES_r4: max window partition 22M -> 769k rows at 32 salts). The boundary carry-in is the tiny per-(key, salt) frame on the BuildRight side of a BroadcastHashJoin — the probe side reuses its (key, salt) partitioning and is never reshuffled. Equi joins only; results bit-identical to qa01 (shared oracle).",
        fmt(graft.queries.CurationQueries.asofViewBeforePurchaseSalted(t))),
       ("qr01_data_card — single-pass rollup",
        "All (source, lang) granularities + subtotals + the grand total from ONE scan: Expand replicates each row per grouping set BETWEEN the partial and final aggregates, so the corpus is read once and map-side combine still applies. No unioned groupBys, no second scan.",
@@ -228,7 +261,7 @@ object DumpPlans {
        "The (id, phash) table materializes once (eager localCheckpoint, lineage-owned blocks) and feeds both self-join sides and the final left join — the hash (one compiled TextDhash56Expr call since r12, ~0 driver tax) is computed exactly once. Candidates shuffle only on (band, bkey); the verify is one codegen'd xor+popcount. Pigeonhole (4 bands > 3 maxHamming) makes recall exact without all-pairs.",
        fmt(graft.queries.PipelineQueries.imageNearDup(t))),
       ("qm11_video_neardup_vote — frame-vote clip dedup",
-       "Frames explode partition-locally (the stub's strided slices; the real path's videoFrames is the same shape) and only (id, frame_idx, 8-byte hash) rides into the funnel — the frame PAYLOAD never shuffles. The pair funnel shuffles on (band, bkey) and keeps every verified pair; the vote is one distinct + one count aggregation on (probe, target) clip pairs; the decision window partitions by probe clip. ProfileVideoPlane measured the whole path at 30k clips / 228k frames: ~0.23 KB/frame vote shuffle, flat.",
+       "Frames explode partition-locally (the stub's strided slices; the real path's videoFrames is the same shape) and only (id, frame_idx, 8-byte hash) rides into the funnel — the frame PAYLOAD never shuffles. The pair funnel shuffles on (band, bkey) and keeps every verified pair; the vote is one distinct + one count aggregation on (probe, target) clip pairs; the decision window partitions by probe clip. The video-plane sweep (NOTES_r13) measured the whole path at 30k clips / 228k frames: ~0.23 KB/frame vote shuffle, flat.",
        fmt(graft.queries.PipelineQueries.videoNearDupVote(t))),
       ("qx02_multimodal_corpus_build — the composed multimodal verdict",
        "The qx01 move on the multimodal funnel: ONE pass over the text bytes projects (wc, tl, md5, phash) scan-locally and checkpoints ~120 B/doc metadata — the corpus bytes never enter a shuffle; the text leg is one md5-keyed window, the image leg is qm03's banded funnel over the same checkpointed frame, and the manifest is two hash joins on doc_id. The streaming twin (multimodalPipelineStream) emits the same verdict shape incrementally.",
@@ -237,7 +270,7 @@ object DumpPlans {
        "The advisor never materializes a candidate pair: each geometry is one (band, bkey) explode of the 8-byte hash column, one map-side-combined occupancy aggregation, and (for MIH) a flip join of the OCCUPANCY TABLE with itself — metadata-sized, while the funnel it prices would join N-row sides. The hash column checkpoints once and is shared by all geometry passes; the final ranking window runs over |geometries| rows.",
        fmt(graft.queries.PipelineQueries.bandRegimeAdviceQ(t))),
       ("IncrementalIvf.serve — partition-pruned serving with a free bloat guard",
-       "The accumulated index scan carries the probed cells as PartitionFilters (appends land under the same cell=K/ dirs, so pruning spans seed and streamed data); scoring is one broadcast join + codegen'd dot product; the rank filter compiles to WindowGroupLimit, which takes the top-k PER MAP TASK before the exchange — so the rank shuffle carries ~k rows per query per map, and the replay-bloat dedup (dense_rank + distinct over the result rows) adds no payload shuffle. ProfileIncrIvf: serve shuffle 0.03 MB FLAT across a 250k→4M store sweep (the first-cut pruned-side dropDuplicates read 664 MB at 4M).",
+       "The accumulated index scan carries the probed cells as PartitionFilters (appends land under the same cell=K/ dirs, so pruning spans seed and streamed data); scoring is one broadcast join + codegen'd dot product; the rank filter compiles to WindowGroupLimit, which takes the top-k PER MAP TASK before the exchange — so the rank shuffle carries ~k rows per query per map, and the replay-bloat dedup (dense_rank + distinct over the result rows) adds no payload shuffle. NOTES_r13: serve shuffle 0.03 MB FLAT across a 250k→4M store sweep (the first-cut pruned-side dropDuplicates read 664 MB at 4M).",
        {
          val dir = Files.createTempDirectory("graft-incrivf-plan").toString
          graft.operators.IncrementalIvf.init(
@@ -252,16 +285,16 @@ object DumpPlans {
          plan
        }),
       ("qt44_html_extract — zero-shuffle web extraction",
-       "htmlToText/anchorCount/urlCanonicalize are regexp/split/array expression chains inside ONE whole-stage-codegen projection over the scan — the only Exchange in this plan is the gate harness's ORDER BY. Extracting 100 TB of crawl costs exactly the scan (ProfileWebText: 0.00 MB shuffle metered at every corpus size).",
+       "htmlToText/anchorCount/urlCanonicalize are regexp/split/array expression chains inside ONE whole-stage-codegen projection over the scan — the only Exchange in this plan is the gate harness's ORDER BY. Extracting 100 TB of crawl costs exactly the scan (NOTES_r13: 0.00 MB shuffle metered at every corpus size).",
        fmt(graft.queries.QualityQueries.htmlExtract(t))),
       ("qx03_web_corpus_build — the composed crawl funnel",
-       "Extraction metadata (canonical key, body key, word/anchor counts, gate flag) checkpoints at ~100 B/doc and the page bytes never enter an exchange (PlanAuditSpec pins the partition keys); URL dedup is one window over gate-passers, content dedup one window over URL-keepers, the verdict two hash joins on doc_id. ProfileWebText: funnel shuffle 113→149 B/doc flat across 50k→800k docs.",
+       "Extraction metadata (canonical key, body key, word/anchor counts, gate flag) checkpoints at ~100 B/doc and the page bytes never enter an exchange (PlanAuditSpec pins the partition keys); URL dedup is one window over gate-passers, content dedup one window over URL-keepers, the verdict two hash joins on doc_id. NOTES_r13: funnel shuffle 113→149 B/doc flat across 50k→800k docs.",
        fmt(graft.queries.QualityQueries.webCorpusBuild(t))),
       ("qx04_web_incr_build — the incremental web stores, exact regime",
-       "Both IncrementalHashDedup stages run the EXACT regime (bands=1, bandBits=32, maxHamming=0): one probe row per key (no fan-out), candidates only on true 32-bit bucket coincidences (~rows/2^32 occupancy), popcount verify exact on the full 60-bit key. ProfileMihStore exact mode: 1.1/1.1/1.9 s walls with shuffle FLAT at 0.1 MB across a 1M→16M-row store sweep, recall 2500/2500 planted — the regime the webPipelineStream url/content stores run at fleet scale.",
+       "Both IncrementalHashDedup stages run the EXACT regime (bands=1, bandBits=32, maxHamming=0): one probe row per key (no fan-out), candidates only on true 32-bit bucket coincidences (~rows/2^32 occupancy), popcount verify exact on the full 60-bit key. The MIH store sweep's exact mode (NOTES_r13): 1.1/1.1/1.9 s walls with shuffle FLAT at 0.1 MB across a 1M→16M-row store sweep, recall 2500/2500 planted — the regime the webPipelineStream url/content stores run at fleet scale.",
        fmt(graft.queries.QualityQueries.webIncrBuild(t))),
       ("qg13_redirect_resolve — pointer-doubled chain resolution",
-       "Four doubling self-joins of the source-keyed jump table replace a 16-step sequential walk; rows never multiply (the table stays |sources|-keyed), so shuffle is linear in |E| with a log2(maxHops) factor (ProfileRedirects: 104/508/2031 MB across 1M/4M/16M edges — ~127 B/edge — with zero ground-truth hop mismatches). Loop rows compose inside their cycle until the static schedule ends: no data-dependent iteration.",
+       "Four doubling self-joins of the source-keyed jump table replace a 16-step sequential walk; rows never multiply (the table stays |sources|-keyed), so shuffle is linear in |E| with a log2(maxHops) factor (NOTES_r13: 104/508/2031 MB across 1M/4M/16M edges — ~127 B/edge — with zero ground-truth hop mismatches). Loop rows compose inside their cycle until the static schedule ends: no data-dependent iteration.",
        fmt(graft.queries.QualityQueries.redirectResolve(t))),
       ("qt47_robots_allowed — the politeness gate",
        "robotsStarRules folds the HOST-cardinality robots table (the interpreted aggregate() tax rides the corpus's smallest axis); the per-url decision is one BROADCAST rules join plus one window over <= rules-per-host candidate rows — at 100 TB the cost is the url scan, the rules dim never shuffles.",
@@ -270,7 +303,7 @@ object DumpPlans {
        "The resolution map and the rules table are frontier-dim-sized broadcasts upstream of the decision checkpoint; the verdict stage reads the materialized ~40 B/doc decision frame and every exchange keys on doc_id or the canonical key (PlanAuditSpec pins both + no cartesian). The dedup window partitions by canon_url over ALLOWED docs only — blocked docs never enter the partition.",
        fmt(graft.queries.QualityQueries.crawlFrontierBuild(t))),
       ("qg15_link_scc — directed components by trim + color + peel",
-       "Every round is an edge-list equi join + hash aggregation keyed on a vertex id (state: ONE label per vertex, lineage truncated per round); trim kills chains/tails before any phase work; the only driver traffic is scalar convergence probes. ProfileScc: 1M/4M/16M-edge forests with analytically known components — shuffle edge-linear at scale (x4.0 write for the 4M->16M x4 step), ZERO ground-truth mismatches across 22.5M checked nodes.",
+       "Every round is an edge-list equi join + hash aggregation keyed on a vertex id (state: ONE label per vertex, lineage truncated per round); trim kills chains/tails before any phase work; the only driver traffic is scalar convergence probes. NOTES_r13: 1M/4M/16M-edge forests with analytically known components — shuffle edge-linear at scale (x4.0 write for the 4M->16M x4 step), ZERO ground-truth mismatches across 22.5M checked nodes.",
        fmt(graft.queries.QualityQueries.linkScc(t))),
       ("qs26_phrase_search — positional postings + adjacency joins",
        "The term filter prunes postings AT THE SCAN (an n-term phrase over a V-term corpus keeps ~n/V of the token stream), the n-1 adjacency joins are phrase-term-sized on (doc, pos+i), and the top-k is TakeOrderedAndProject (PlanAuditSpec) — never a global sort, never a corpus self-join.",
@@ -304,6 +337,5 @@ object DumpPlans {
     md.append(floatParityRecipe)
     Files.writeString(Paths.get("/root/repo/PLANS.md"), md.toString)
     println(s"[plans] wrote ${sections.size} sections to PLANS.md")
-    spark.stop()
   }
 }

@@ -95,7 +95,7 @@ class BandRegimeSpec extends SparkTestBase {
     assert(covering.sameElements(covering.sorted),
       "covering geometries must be ordered by implied candidate mass")
     // on uniform random hashes the wide MIH buckets collide far less
-    // than the narrow 7-bit split (the ProfileMihStore regime)
+    // than the narrow 7-bit split (the MIH store regime, NOTES_r13)
     assert(rows.head.getAs[String]("geometry") === "4x14b t1")
   }
 

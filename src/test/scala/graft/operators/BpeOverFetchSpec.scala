@@ -22,8 +22,8 @@ import graft.SparkTestBase
   * Consequence, documented on [[Bpe.trainBatched]]: `overFetch` is part
   * of the learned tokenizer's identity, not a pure throughput knob —
   * the default stays 2 (the qt43 oracle's width) and callers who widen
-  * it for tie-heavy corpora (measured 7.7× faster at 16 in
-  * ProfileVocab) must pick the width up front and keep it for the
+  * it for tie-heavy corpora (measured 7.7× faster at 16 on the
+  * natural-alphabet vocabulary run, NOTES_r12) must pick the width up front and keep it for the
   * vocabulary's lifetime. */
 class BpeOverFetchSpec extends SparkTestBase {
   import spark.implicits._
@@ -40,7 +40,7 @@ class BpeOverFetchSpec extends SparkTestBase {
 
   /** Flat-tail corpus: many distinct random words, each count 1 —
     * most pair counts tie at small integers (the natural-corpus shape
-    * that starved the 2-wide window in ProfileVocab). */
+    * that starved the 2-wide window in the NOTES_r12 vocabulary run). */
   private def tieHeavyDocs(seed: Long, nWords: Int) = {
     val alphabet = "abcdefghijklmnop"
     val rnd = new java.util.Random(seed)

@@ -10,6 +10,16 @@ class GraphMetricsSpec extends SparkTestBase {
     GraphMetrics.triangleCount(edges.toDF("a", "b"))
       .as[(Long, Long, Long)].collect().head
 
+  /** A mid-id hub of degree `hubDeg` glued to a ring over its leaves:
+    * the naive a<b<c wedge join's worst case, since the hub's id splits
+    * its neighborhood. */
+  private val hubDeg = 200L
+  private lazy val hubRing: Seq[(Long, Long)] = {
+    val hub = hubDeg / 2
+    val leaves = (1L to hubDeg + 1).filter(_ != hub)
+    leaves.map(l => (hub, l)) ++ leaves.zip(leaves.tail :+ leaves.head)
+  }
+
   test("triangleCount: K4 has 4 triangles; dangling path adds none") {
     val k4 = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L))
     assert(count3(k4) == ((4L, 6L, 4L)))
@@ -24,6 +34,9 @@ class GraphMetricsSpec extends SparkTestBase {
   test("triangleCount: star graph — hub apexes no wedges, zero triangles") {
     val star = (1L to 50L).map(l => (0L, l))
     assert(count3(star) == ((51L, 50L, 0L)))
+    // glued to a ring, every consecutive leaf pair (the wrap edge
+    // included) closes exactly one triangle through the hub
+    assert(count3(hubRing) == ((hubDeg + 1, 2 * hubDeg, hubDeg)))
   }
 
   test("pageRank: symmetric ring stays uniform; star concentrates rank at the hub") {
@@ -74,17 +87,19 @@ class GraphMetricsSpec extends SparkTestBase {
     val t = Tables(spark, sf0001)
     val b = t.events.select($"user_id".as("u"), $"event_type".as("et"),
                             date_trunc("minute", $"ts").as("m")).distinct()
-    val edges = b.select($"u".as("a"), $"et", $"m")
+    val coactivity = b.select($"u".as("a"), $"et", $"m")
       .join(b.select($"u".as("b"), $"et", $"m"), Seq("et", "m"))
       .filter($"a" < $"b").select($"a", $"b")
-    val oriented = GraphMetrics.triangleCount(edges)
-      .select("n_triangles").as[Long].collect().head
-    val e = GraphMetrics.canonicalEdges(edges)
-    val naive = e.select($"a", $"b")
-      .join(e.select($"a".as("b"), $"b".as("c")), "b")
-      .join(e.select($"a", $"b".as("c")), Seq("a", "c"), "left_semi")
-      .count()
-    assert(oriented == naive, s"degree-oriented $oriented != naive $naive")
+    for (edges <- Seq(coactivity, hubRing.toDF("a", "b"))) {
+      val oriented = GraphMetrics.triangleCount(edges)
+        .select("n_triangles").as[Long].collect().head
+      val e = GraphMetrics.canonicalEdges(edges)
+      val naive = e.select($"a", $"b")
+        .join(e.select($"a".as("b"), $"b".as("c")), "b")
+        .join(e.select($"a", $"b".as("c")), Seq("a", "c"), "left_semi")
+        .count()
+      assert(oriented == naive, s"degree-oriented $oriented != naive $naive")
+    }
   }
 
   test("kCorePeelCensus: pendant path peels away, the triangle core survives") {

@@ -183,4 +183,43 @@ class IncrementalHashDedupSpec extends SparkTestBase {
     assert(w2(20L).contains(11L))
     assert(w2(11L).isEmpty, "replay guard: 11 must not match its own stored key")
   }
+
+  test("planted store workload: every planted copy is found in the MIH, narrow and exact regimes") {
+    import org.apache.spark.sql.functions._
+    // store hash = xxhash64(id); the batch's even ids copy store row
+    // id % storeN with up to maxHamming seeded bit flips, odd ids are
+    // fresh draws (hamming ~32 from everything stored)
+    val storeN = 3000L
+    val store = tmpStore()
+    IncrementalHashDedup.initStore(
+      spark.range(storeN).select($"id", xxhash64($"id").as("hash")),
+      store, idCol = "id", hashCol = "hash")
+    def batch(maxHamming: Int) = {
+      val base = xxhash64($"id" % storeN)
+      val flipped = (0 until maxHamming).map { j =>
+        expr(s"shiftleft(CAST(1 AS BIGINT), CAST(pmod(xxhash64(id, $j), 64) AS INT))")
+      }.foldLeft(base)(_ bitwiseXOR _)
+      spark.range(storeN, storeN + 300).select($"id",
+        when($"id" % 2 === 0, flipped).otherwise(xxhash64($"id", lit("fresh"))).as("hash"))
+    }
+    def found(d: org.apache.spark.sql.DataFrame): Set[Long] =
+      d.filter($"dup_of".isNotNull).select("id").as[Long].collect().toSet
+    val planted = (storeN until storeN + 300).filter(_ % 2 == 0).toSet
+    for ((bands, bandBits, maxHamming, tol) <- Seq((4, 16, 7, 1), (8, 8, 6, 0), (1, 32, 0, 0))) {
+      val d = IncrementalHashDedup.dedupBatch(batch(maxHamming), store,
+        bands = bands, bandBits = bandBits, maxHamming = maxHamming,
+        idCol = "id", hashCol = "hash", appendUnique = false, probeTolerance = tol)
+      assert(found(d) === planted, s"${bands}x${bandBits}b t$tol at hamming $maxHamming")
+    }
+    // the string-keyed exact store on the same plant: md5 of the id
+    val strStore = tmpStore()
+    IncrementalHashDedup.initStringStore(
+      spark.range(storeN).select($"id", md5($"id".cast("string")).as("key")),
+      strStore, idCol = "id", keyCol = "key")
+    val strBatch = spark.range(storeN, storeN + 300).select($"id",
+      when($"id" % 2 === 0, md5(($"id" % storeN).cast("string")))
+        .otherwise(md5(concat($"id".cast("string"), lit("-fresh")))).as("key"))
+    assert(found(IncrementalHashDedup.exactDedupBatchString(strBatch, strStore,
+      idCol = "id", keyCol = "key", appendUnique = false)) === planted)
+  }
 }

@@ -47,6 +47,7 @@ class IncrementalIvfSpec extends SparkTestBase {
         .as[(Long, Long, Double, Long)].collect().toSet
       assert(served === reference)
       assert(served.nonEmpty)
+      assert(served.size == qs.size * 5, "a full top-5 per query")
     }
   }
 

@@ -66,12 +66,12 @@ class MihSpec extends SparkTestBase {
   }
 
   test("real codec: rescaled + re-encoded copy dups under 4x16-bit MIH at hamming 7") {
-    val img = graft.tools.ProfileImagePlane.debugPng(7L)
-    val variant = graft.tools.ProfileImagePlane.debugVariant(7L)
+    val img = SyntheticImages.basePng(7L)
+    val variant = SyntheticImages.variant(7L)
     val hashes = Seq(
       (1L, Multimodal.dhash64(img)),
       (2L, Multimodal.dhash64(variant)),
-      (3L, Multimodal.dhash64(graft.tools.ProfileImagePlane.debugPng(99L))))
+      (3L, Multimodal.dhash64(SyntheticImages.basePng(99L))))
       .toDF("doc_id", "phash64")
     val out = Multimodal.hashNearDupMih(hashes, "doc_id", "phash64",
         bands = 4, bandBits = 16, maxHamming = 7)

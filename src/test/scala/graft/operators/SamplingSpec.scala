@@ -74,6 +74,20 @@ class SamplingSpec extends AnyFunSuite with SparkTestBase {
       .select("doc_id", "split").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     subset.foreach { case (id, sp) => assert(whole(id) === sp) }
+    // keyed by near-dup cluster (the dedup -> CC -> holdout chain), no
+    // cluster straddles the split: every doc is replicated twice with a
+    // distinct marker token appended (high-but-< 1.0 Jaccard)
+    val text = docs.select("doc_id", "text")
+    val corpus = (0 until 3).map(k => text.select(($"doc_id" + k * 10000000L).as("doc_id"),
+        (if (k == 0) $"text" else concat($"text", lit(s" repmark$k"))).as("text")))
+      .reduce(_ unionByName _)
+    val pairs = Dedup.nearDupsMinhash(corpus, threshold = 0.3).select("a_id", "b_id")
+    val byCluster = Sampling.holdoutSplit(
+        ConnectedComponents.dedupDecisions(corpus, pairs), "cluster_id")
+      .groupBy("cluster_id").agg(countDistinct($"split").as("k"), count(lit(1)).as("n"))
+    assert(byCluster.filter($"k" > 1).count() === 0L, "a cluster straddles the split")
+    assert(byCluster.filter($"n" >= 3).count() > 0L, "replicas must cluster")
+    assert(byCluster.agg(sum($"n")).as[Long].head() === corpus.count())
     intercept[IllegalArgumentException] {
       Sampling.holdoutSplit(docs, "doc_id", trainFrac = 0.9, valFrac = 0.1)
     }

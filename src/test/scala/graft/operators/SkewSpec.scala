@@ -78,4 +78,39 @@ class SkewSpec extends SparkTestBase {
     val salted = Skew.saltedJoin(t.lineitem, dim, "l_partkey", saltBuckets = 4).count()
     assert(salted == plain)
   }
+
+  test("AQE splits a planted hot key at runtime: bare join, and under a re-aggregation") {
+    // half the fact rows on ONE key (the mega-repo pathology), broadcast
+    // off so the join must sort-merge; the skew thresholds are scaled to
+    // the test's data size — the trigger condition (hot partition >
+    // factor x median AND > absolute threshold) is the one the defaults
+    // evaluate at cluster scale
+    val conf = Map(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64k",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "256k",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2")
+    val keys = conf.keys.toSeq :+ "spark.sql.adaptive.forceOptimizeSkewedJoin"
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    def skewSplit(df: org.apache.spark.sql.DataFrame): Boolean = {
+      df.queryExecution.executedPlan.execute().count()
+      df.queryExecution.executedPlan.toString.linesIterator
+        .exists(l => l.contains("skew=true") || l.contains("AQEShuffleRead skewed"))
+    }
+    try {
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      val fact = spark.range(200000).select(
+        when($"id" % 2 === 0, lit(0L)).otherwise(pmod($"id", lit(5000L))).as("k"),
+        md5($"id".cast("string")).as("v"))
+      val dim = spark.range(5000).select($"id".as("k"), concat(lit("dim-"), $"id").as("d"))
+      assert(skewSplit(fact.join(dim, "k")), "AQE skew split did not fire on the bare join")
+      spark.conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
+      // the aggregate reads the payload, so the join's shuffle carries it
+      assert(skewSplit(fact.join(dim, "k").groupBy($"d").agg(max($"v").as("m"))),
+        "forceOptimizeSkewedJoin did not engage the split under the aggregation")
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

@@ -60,6 +60,19 @@ class UnigramSpec extends SparkTestBase {
     assert(a.nonEmpty && a.forall(_.cnt > 0))
   }
 
+  test("training is replication-invariant: a corpus repeated 3x trains the same pieces") {
+    // training is a pure function of the distinct-word census, so
+    // replicating every doc scales the counts and nothing else
+    val docs = (0L until 40L).map(i =>
+      (i, s"alpha beta gamma_${i % 5} alphabet betagamma")).toDF("doc_id", "text")
+    val replicated = (0 until 3).map(k =>
+      docs.select(($"doc_id" + k * 1000L).as("doc_id"), $"text")).reduce(_ unionByName _)
+    val once = Unigram.train(docs, seedSize = 24, maxPieceLen = 3, emRounds = 2)
+    val thrice = Unigram.train(replicated, seedSize = 24, maxPieceLen = 3, emRounds = 2)
+    assert(thrice.map(_.piece) == once.map(_.piece))
+    assert(thrice.map(_.cnt) == once.map(_.cnt * 3))
+  }
+
   test("trainPruned reaches the target size, keeps every single char, and is deterministic") {
     val docs = (1 to 40).map(i =>
       (i.toLong, s"alpha beta gamma_${i % 5} alphabet betagamma")).toDF("doc_id", "text")

@@ -1,13 +1,12 @@
 package graft.operators
 
 import graft.SparkTestBase
-import graft.tools.ProfileVideoPlane
 import org.apache.spark.sql.functions._
 
 /** Frame-vote video near-dup ([[Multimodal.frameVoteNearDup]] /
   * [[Multimodal.videoNearDup]]): the clip-level decision over per-frame
   * perceptual hashes. Real-codec fixtures come from
-  * [[ProfileVideoPlane.y4mClip]] (seeded temporally-drifting cosine
+  * [[SyntheticVideo.y4mClip]] (seeded temporally-drifting cosine
   * fields — the corpus the fleet-scale measurement plants); the vote
   * algebra is additionally pinned on hand-built hash tables where every
   * ballot is arranged exactly. */
@@ -16,12 +15,12 @@ class VideoNearDupSpec extends SparkTestBase {
 
   test("videoNearDup end to end: re-encoded/rescaled/truncated copies dup, distinct stays, corrupt cannot-judge") {
     val clips = Seq(
-      (1L, ProfileVideoPlane.y4mClip(1)),                       // base A
-      (2L, ProfileVideoPlane.y4mClip(1, quantize = true)),      // re-encoded A
-      (3L, ProfileVideoPlane.y4mClip(1, w = 80, h = 56)),       // rescaled A
-      (4L, ProfileVideoPlane.y4mClip(1, nFrames = 12)),         // truncated A
-      (5L, ProfileVideoPlane.y4mClip(7)),                       // distinct base B
-      (6L, "definitely not a video".getBytes)                   // corrupt
+      (1L, SyntheticVideo.y4mClip(1)),                       // base A
+      (2L, SyntheticVideo.y4mClip(1, quantize = true)),      // re-encoded A
+      (3L, SyntheticVideo.y4mClip(1, w = 80, h = 56)),       // rescaled A
+      (4L, SyntheticVideo.y4mClip(1, nFrames = 12)),         // truncated A
+      (5L, SyntheticVideo.y4mClip(7)),                       // distinct base B
+      (6L, "definitely not a video".getBytes)                // corrupt
     ).toDF("clip_id", "video")
     val got = Multimodal.videoNearDup(clips, "video", "clip_id",
         nFrames = 8, bands = 8, bandBits = 8, maxHamming = 6)
@@ -61,10 +60,10 @@ class VideoNearDupSpec extends SparkTestBase {
 
   test("MIH regime (t=1, wide bands) decides identically to the narrow regime at the same radius") {
     val clips = Seq(
-      (1L, ProfileVideoPlane.y4mClip(3)),
-      (2L, ProfileVideoPlane.y4mClip(3, quantize = true)),
-      (3L, ProfileVideoPlane.y4mClip(3, nFrames = 12)),
-      (4L, ProfileVideoPlane.y4mClip(9))
+      (1L, SyntheticVideo.y4mClip(3)),
+      (2L, SyntheticVideo.y4mClip(3, quantize = true)),
+      (3L, SyntheticVideo.y4mClip(3, nFrames = 12)),
+      (4L, SyntheticVideo.y4mClip(9))
     ).toDF("clip_id", "video")
     val frames = Multimodal.videoFrames(clips, "video", "clip_id", n = 8)
     val hashed = Multimodal.withPerceptualHash(frames, "frame", "fhash")
@@ -80,8 +79,8 @@ class VideoNearDupSpec extends SparkTestBase {
 
   test("withFrameHashes: the stream-input array shape, scan-local, empty = cannot-judge") {
     val clips = Seq(
-      (1L, ProfileVideoPlane.y4mClip(5)),
-      (2L, ProfileVideoPlane.y4mClip(5, quantize = true)),
+      (1L, SyntheticVideo.y4mClip(5)),
+      (2L, SyntheticVideo.y4mClip(5, quantize = true)),
       (3L, "junk video".getBytes)
     ).toDF("clip_id", "video")
     val got = Multimodal.withFrameHashes(clips, "video", "clip_id", n = 8)
