@@ -26,8 +26,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *              re-runs the merge)
   *
   * Every step is a single atomic rename or an idempotent delete, so
-  * recover() is safe to run any number of times. The incremental
-  * stores' marker protocols are built on it in [[StoreProtocol]].
+  * recover() is safe to run any number of times. [[StoreProtocol]] is
+  * its only caller: every store, merge writer and rewrite swaps
+  * through it.
   */
 object AtomicSwap {
 
@@ -64,34 +65,6 @@ object AtomicSwap {
       }
     }
     if (fs.exists(s)) fs.delete(s, true)      // uncommitted leftovers
-    ()
-  }
-
-  /** Publish a set of staged partition directories (written under
-    * `stagingRoot` by one partitionBy job) into the table root, one
-    * crash-safe [[commitDir]] swap per partition. Per-partition staging
-    * dirs carry no `_SUCCESS` of their own, so each is stamped from the
-    * staging root's job-level marker first — that is what lets
-    * [[recoverDir]] tell a completed write from a torn one. Shared by
-    * the hash- and time-partitioned merge writers. */
-  private[hfc] def publishStagedPartitions(fs: FileSystem, tableRoot: String,
-                                           stagingRoot: String,
-                                           partDirNames: Seq[String]): Unit = {
-    val jobComplete = fs.exists(new Path(stagingRoot, "_SUCCESS"))
-    partDirNames.foreach { name =>
-      val staged = s"$stagingRoot/$name"
-      val target = s"$tableRoot/$name"
-      if (jobComplete && fs.exists(new Path(staged))) {
-        fs.create(new Path(staged, "_SUCCESS")).close()
-        // publish under the deterministic name recoverDir knows
-        val canonical = stagingFor(target)
-        fs.delete(new Path(canonical), true)
-        require(fs.rename(new Path(staged), new Path(canonical)),
-          s"rename $staged -> $canonical failed")
-        commitDir(fs, target, canonical)
-      }
-    }
-    fs.delete(new Path(stagingRoot), true)
     ()
   }
 }

@@ -1,8 +1,8 @@
 package graft.hfc
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructField}
 
 /** Incremental MERGE that touches only the partitions containing
   * update keys — the reference's stale-repo fast path
@@ -12,130 +12,123 @@ import org.apache.spark.sql.functions._
   * [[MergeWriter.upsert]] is semantically perfect but consolidates via
   * a full-outer join over the ENTIRE table: a monthly refresh of a few
   * thousand repos against a 63 M-row `repo_file` would rewrite
-  * everything. Here the table is laid out as `part_id=<hash-prefix>`
-  * directories (a stable key prefix: `crc32(key) mod nPartitions`), an
-  * update batch:
+  * everything. Here the table is laid out as partition directories,
+  * and only the partition function varies ([[Partitioning]]):
   *
-  *  1. derives its affected partition ids (≤ nPartitions small ints —
-  *     index metadata, collected so the `IN` lands in the scan as a
-  *     PartitionFilter),
-  *  2. reads ONLY those partitions (partition-pruned scan),
-  *  3. runs the ordinary [[MergeWriter]] consolidation on that slice,
-  *  4. writes the merged slice to a staging dir inside the table root
-  *     (`.staging`, invisible to partition discovery) and swaps each
-  *     affected `part_id=` directory in with [[AtomicSwap]]'s
-  *     crash-safe rename protocol.
+  *  - [[byKey]]: `part_id=<crc32(key) mod n>`, a stable key prefix.
+  *    Every batch touches ~all buckets — right for uniformly keyed
+  *    dimension tables like `repository`.
+  *  - [[byMonth]]: `part_month=<yyyy-MM>` of an event time. An
+  *    incremental batch (the monthly refresh, databaseImport.py:858-868
+  *    P13 watermark) lands in one or two months, and time-ranged scans
+  *    prune — right for commits/events fact tables.
+  *
+  * An update batch, in [[foldPartitioned]]:
+  *
+  *  1. derives its affected partitions (index metadata, collected so
+  *     the `IN` lands in the scan as a PartitionFilter),
+  *  2. reads ONLY those partitions with the footer-pinned
+  *     [[StoreProtocol.readPartitioned]] — a batch column whose type
+  *     differs from the store's fails there, before anything is
+  *     written,
+  *  3. runs the caller's consolidation on that slice,
+  *  4. publishes each affected partition with its own crash-safe swap
+  *     ([[StoreProtocol.rewritePartitions]]).
   *
   * Untouched partitions' files are never opened, rewritten, or moved —
-  * PartitionedMergeSpec pins that byte-for-byte. At 100 TB this is the
-  * difference between a merge proportional to the update and one
-  * proportional to the table. A crash mid-swap leaves some partitions
-  * merged and some not; [[recover]] repairs interrupted renames and
-  * re-running the same upsert converges (per-partition upsert is
-  * idempotent).
+  * PartitionedMergeSpec pins that byte-for-byte. A crash mid-publish
+  * leaves some partitions merged and some not; the next fold's
+  * [[StoreProtocol.recoverPartitions]] repairs interrupted renames, and
+  * re-running the same batch converges.
+  *
+  * CONTRACT — stable partition value: a logical key's partition source
+  * must never change across versions (a hash key is a merge key; a
+  * commit keyed by sha carries one committer date). A row whose
+  * partition moved would leave its old copy stranded in the old
+  * partition; rows whose partition source is NULL are rejected loudly
+  * for the same reason.
   */
 object PartitionedMergeWriter {
 
+  /** A table layout: partition directory `column=<value>`, the value
+    * (of `dataType`) being `of(col(source))`. */
+  final case class Partitioning[T](column: String, dataType: DataType, source: String,
+                                   of: Column => Column)(implicit val order: Ordering[T])
+
   val PartCol = "part_id"
+  val MonthCol = "part_month"
 
   /** stable key-prefix partition: crc32(key) mod n */
   def partitionOf(key: Column, nPartitions: Int): Column =
     pmod(crc32(key.cast("string")), lit(nPartitions.toLong)).cast("int")
 
-  /** One-time layout job: write `df` partitioned by the key prefix. */
+  def byKey(partitionKey: String, nPartitions: Int): Partitioning[Int] =
+    Partitioning(PartCol, IntegerType, partitionKey, partitionOf(_, nPartitions))
+
+  def byMonth(tsCol: String): Partitioning[String] =
+    Partitioning(MonthCol, StringType, tsCol, date_format(_, "yyyy-MM"))
+
+  private def nullsRejected(layout: Partitioning[_]): String =
+    s"${layout.source} contains NULLs — a NULL ${layout.source} has no partition and " +
+      "its rows would silently vanish from every pruned merge"
+
+  /** One-time layout job: write `df` partitioned by `layout`. The NULL
+    * contract is enforced IN the write projection (raise_error inside
+    * the partition expression) — one pass, no second validation scan —
+    * otherwise null rows would land in the Hive default partition,
+    * which no pruned merge ever reads. */
+  def initTable(df: DataFrame, path: String, layout: Partitioning[_]): Unit =
+    df.withColumn(layout.column,
+        when(col(layout.source).isNull, raise_error(lit(nullsRejected(layout))))
+          .otherwise(layout.of(col(layout.source))))
+      .write.mode("overwrite").partitionBy(layout.column).parquet(path)
+
+  /** [[initTable]] with the [[byKey]] layout. */
   def initTable(df: DataFrame, path: String, partitionKey: String, nPartitions: Int): Unit =
-    df.withColumn(PartCol, partitionOf(col(partitionKey), nPartitions))
-      .write.mode("overwrite").partitionBy(PartCol).parquet(path)
+    initTable(df, path, byKey(partitionKey, nPartitions))
 
-  private def fs(spark: SparkSession): FileSystem =
-    FileSystem.get(spark.sparkContext.hadoopConfiguration)
-
-  private def partDir(path: String, p: Int): String = s"$path/$PartCol=$p"
-
-  /** Repair interrupted partition swaps; call before reading the
-    * table after an unclean shutdown. Safe to run always. */
-  def recover(spark: SparkSession, path: String, nPartitions: Int): Unit = {
-    val f = fs(spark)
-    (0 until nPartitions).foreach(p => AtomicSwap.recoverDir(f, partDir(path, p)))
-    f.delete(new Path(s"$path/.staging"), true)
-    ()
-  }
-
-  /** K2 upsert against the partitioned table at `path`, rewriting only
-    * affected partitions. `partitionKey` must be one of `keys` and the
-    * same column `initTable` partitioned by. Returns the affected
-    * partition ids. */
-  def upsertPartitioned(spark: SparkSession, path: String, updates: DataFrame,
-                        keys: Seq[String], partitionKey: String,
-                        nPartitions: Int): Seq[Int] =
-    mergePartitioned(spark, path, updates, keys, partitionKey, nPartitions) {
-      (existing, u) => MergeWriter.upsert(existing, u, keys :+ PartCol)
-    }
-
-  /** K4 targeted-column UPDATE (the reference's stale-repo fast path,
-    * databaseImport.py:609-618) against the partitioned table: only
-    * `cols` change, only for matching keys, only in the partitions the
-    * update keys hash to. Non-matching update rows are ignored, like
-    * [[MergeWriter.updateColumns]]. */
-  def updateColumnsPartitioned(spark: SparkSession, path: String, updates: DataFrame,
-                               keys: Seq[String], cols: Seq[String], partitionKey: String,
-                               nPartitions: Int): Seq[Int] =
-    mergePartitioned(spark, path, updates, keys, partitionKey, nPartitions) {
-      (existing, u) => MergeWriter.updateColumns(existing, u, keys :+ PartCol, cols)
-    }
-
-  /** General partition-pruned fold: consolidate the affected slices of
-    * the standing table with an updates batch under a CALLER-SUPPLIED
-    * merge (existing, updates-with-part_id) => merged. This is the
-    * store-plane entry point for MV maintenance whose state is a
-    * mergeable aggregate rather than replace-on-key rows — e.g. the
-    * sketch-valued distinct-count MV
-    * ([[graft.operators.Sketches.mergeDistinctMv]]), where a delta's
-    * sketch must UNION into the standing key's registers, not replace
-    * them. Same guarantees as upsert: only partitions the update keys
-    * hash to are read or rewritten, swaps are atomic-with-recovery.
-    * The consolidate sees every existing row of the affected
+  /** Partition-pruned fold: consolidate the affected partitions of the
+    * table at `path` with `updates` under a caller-supplied merge
+    * (existing, updates-with-partition-column) => merged:
+    * [[MergeWriter.upsert]] (K2), [[MergeWriter.updateColumns]] (K4),
+    * [[IncrementalRefresh.refresh]], or an aggregate whose state must
+    * merge rather than replace on key — e.g. the sketch-valued
+    * distinct-count MV ([[graft.operators.Sketches.mergeDistinctMv]]),
+    * where a delta's sketch must UNION into the standing registers.
+    * Merge keys passed to the consolidate must include the partition
+    * column. The consolidate sees every existing row of the affected
     * partitions (matching or not) and must return ALL surviving rows
-    * for those partitions, `PartCol` included. */
-  def foldPartitioned(spark: SparkSession, path: String, updates: DataFrame,
-                      keys: Seq[String], partitionKey: String, nPartitions: Int)
-                     (consolidate: (DataFrame, DataFrame) => DataFrame): Seq[Int] =
-    mergePartitioned(spark, path, updates, keys, partitionKey, nPartitions)(consolidate)
+    * for those partitions, partition column included. Returns the
+    * affected partition values, sorted. */
+  def foldPartitioned[T](spark: SparkSession, path: String, updates: DataFrame,
+                         layout: Partitioning[T])
+                        (consolidate: (DataFrame, DataFrame) => DataFrame): Seq[T] =
+    fold(spark, path, updates, layout, lit(true))(consolidate).map(_._1)
 
-  private def mergePartitioned(spark: SparkSession, path: String, updates: DataFrame,
-                               keys: Seq[String], partitionKey: String, nPartitions: Int)
-                              (consolidate: (DataFrame, DataFrame) => DataFrame): Seq[Int] = {
-    require(keys.contains(partitionKey),
-      s"partitionKey $partitionKey must be part of the merge keys $keys")
-    recover(spark, path, nPartitions)
-
-    val u = updates.withColumn(PartCol, partitionOf(col(partitionKey), nPartitions))
-    val affected = u.select(col(PartCol)).distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    if (affected.isEmpty) return affected
-
-    // partition-pruned read: only the affected slices are opened
-    val existing = spark.read.parquet(path)
-      .filter(col(PartCol).isin(affected: _*))
-    val merged = consolidate(existing, u)
-
-    // stage the merged slices inside the table root; the dot-prefix
-    // keeps partition discovery from ever seeing them
-    val stagingRoot = s"$path/.staging"
-    merged.write.mode("overwrite").partitionBy(PartCol).parquet(stagingRoot)
-
-    AtomicSwap.publishStagedPartitions(fs(spark), path, stagingRoot,
-      affected.map(p => s"$PartCol=$p"))
-    affected
-  }
-
-  /** The same merge computed the naive way (full-table full-outer
-    * consolidation) — the semantic reference the spec compares
-    * against. */
-  def upsertFullTable(spark: SparkSession, path: String, updates: DataFrame,
-                      keys: Seq[String], partitionKey: String,
-                      nPartitions: Int): DataFrame = {
-    val u = updates.withColumn(PartCol, partitionOf(col(partitionKey), nPartitions))
-    MergeWriter.upsert(spark.read.parquet(path), u, keys :+ PartCol)
+  /** [[foldPartitioned]], returning each affected partition once per
+    * distinct value `side` takes over its update rows — from the same
+    * one collect (the refresh's stale/fresh split). */
+  private[hfc] def fold[T](spark: SparkSession, path: String, updates: DataFrame,
+                           layout: Partitioning[T], side: Column)
+                          (consolidate: (DataFrame, DataFrame) => DataFrame): Seq[(T, Any)] = {
+    StoreProtocol.recoverPartitions(spark, path)
+    val u = updates.withColumn(layout.column, layout.of(col(layout.source)))
+    val rows = u.select(col(layout.column), side).distinct().collect()
+    require(!rows.exists(_.isNullAt(0)), nullsRejected(layout))
+    val sides = rows.map(r => (r.get(0).asInstanceOf[T], r.get(1))).toSeq
+      .sortBy(_._1)(layout.order)
+    val affected = sides.map(_._1).distinct
+    if (affected.nonEmpty) {
+      // the FULL existing slice goes into the consolidation — a narrow
+      // K4 counters frame must not project the table's other columns
+      // out of the rewritten partitions (MergeWriter aligns by name)
+      val existing = StoreProtocol
+        .readPartitioned(spark, path, StructField(layout.column, layout.dataType), u.schema)
+        .filter(col(layout.column).isin(affected: _*))
+      StoreProtocol.rewritePartitions(spark, path, affected.map(p => s"${layout.column}=$p")) {
+        consolidate(existing, u).write.mode("overwrite").partitionBy(layout.column).parquet(_)
+      }
+    }
+    sides
   }
 }

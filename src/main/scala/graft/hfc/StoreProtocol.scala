@@ -2,24 +2,47 @@ package graft.hfc
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The crash/replay protocol of the persistent incremental stores —
   * written once, called directly by every store and every streaming
-  * sink. Members: the APPEND stores ([[graft.operators.IncrementalDedup]],
+  * sink, and the only caller of [[AtomicSwap]]. Members: the APPEND
+  * stores ([[graft.operators.IncrementalDedup]],
   * [[graft.operators.IncrementalHashDedup]],
   * [[graft.operators.IncrementalFrameDedup]],
-  * [[graft.operators.IncrementalIvf]]) and the REWRITE stores
-  * ([[graft.operators.IncrementalLineCensus]], [[Scd2Store]]). Each
-  * store object keeps only its decision logic; everything below is
-  * shared.
+  * [[graft.operators.IncrementalIvf]]), the REWRITE stores
+  * ([[graft.operators.IncrementalLineCensus]], [[Scd2Store]]) and the
+  * PARTITIONED stores ([[PartitionedMergeWriter]] tables). Each store
+  * object keeps only its decision logic; everything below is shared.
   *
   * '''Recovery before any read.''' Every entry point, applied-checks
   * included, runs [[AtomicSwap.recoverDir]] on the store's swap units
-  * ([[recovered]]) before it looks at them: a crash between the two
+  * ([[recovered]]; [[recoverPartitions]] for every partition of a
+  * partitioned store) before it looks at them: a crash between the two
   * renames of a compaction, rebuild or rewrite must never surface as a
   * missing store, an empty store or a missing marker.
+  *
+  * '''Reads pinned to the footer.''' [[read]] and [[readPartitioned]]
+  * take the schema from one parquet footer (plus the partition column
+  * at its layout's type), so no schema-inference job runs, and a batch
+  * column whose type differs from the store's fails by name before
+  * anything is written.
+  *
+  * '''Whole-directory rewrites''' ([[rewrite]]: compaction, IVF
+  * rebuild, streaming upsert, [[commitRewrite]]) stage beside the
+  * target and publish with one atomic swap.
+  *
+  * '''Partitioned stores: one swap per touched partition.''' A
+  * [[PartitionedMergeWriter]] fold stages its merged partitions under
+  * `<root>/.staging` in one write and publishes each with its own swap
+  * ([[rewritePartitions]]). Before the staging write completes nothing
+  * is published, and recovery drops the staging root; mid-publish some
+  * partitions are new and some old, and recovery repairs the one torn
+  * swap. Either way re-running the same batch converges: upsert and
+  * counter update replayed on their own output give the same rows. A
+  * consolidation that is not idempotent (a sketch union, a count add)
+  * must not be replayed after a partial publish.
   *
   * '''Append stores: sibling markers, written after the append.''' A
   * batch appends its unique rows ([[appendUnique]]) and, once its
@@ -79,20 +102,27 @@ object StoreProtocol {
     * (no Spark job), checked against the batch columns it shares. The
     * store and its batches are one id space and one hash space; a
     * batch whose column type differs is rejected here, by name,
-    * instead of failing inside the parquet reader. */
+    * instead of failing inside the parquet reader or being widened
+    * in the rewritten rows only. */
   def storeSchema(spark: SparkSession, dir: String,
-                  batch: StructType = new StructType()): StructType = {
+                  batch: StructType = new StructType()): StructType =
+    sharingTypes(dir, footerSchema(spark, dir), batch)
+
+  private def footerSchema(spark: SparkSession, dir: String): StructType = {
     val path = firstDataFile(fs(spark), new Path(dir)).getOrElse(
       throw new IllegalStateException(s"store $dir holds no parquet file"))
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
         path, spark.sessionState.newHadoopConf()))
-    val schema = try {
+    try {
       org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
         .readSchemaFromFooter(new org.apache.parquet.hadoop.Footer(path, reader.getFooter),
           new org.apache.spark.sql.execution.datasources.parquet
             .ParquetToSparkSchemaConverter(spark.sessionState.conf))
     } finally reader.close()
+  }
+
+  private def sharingTypes(dir: String, schema: StructType, batch: StructType): StructType = {
     for (b <- batch; s <- schema.find(_.name == b.name)
          if s.dataType.catalogString != b.dataType.catalogString)
       throw new IllegalArgumentException(
@@ -119,6 +149,72 @@ object StoreProtocol {
            batch: StructType = new StructType()): DataFrame = {
     recovered(spark, dir)
     spark.read.schema(storeSchema(spark, dir, batch)).parquet(dir)
+  }
+
+  /** [[read]] of a `partitionBy` store: the footer schema plus the
+    * partition column at its layout's type (`partition`), which the
+    * footer does not carry and discovery would otherwise infer. */
+  def readPartitioned(spark: SparkSession, dir: String, partition: StructField,
+                      batch: StructType = new StructType()): DataFrame = {
+    recovered(spark, dir)
+    spark.read.schema(sharingTypes(dir, footerSchema(spark, dir).add(partition), batch))
+      .parquet(dir)
+  }
+
+  /** Publish the rows `write` puts at the staging path it is given as
+    * `dir`, in one crash-safe swap of the whole directory. */
+  def rewrite(spark: SparkSession, dir: String)(write: String => Unit): Unit = {
+    val f = fs(spark)
+    val staging = AtomicSwap.stagingFor(dir)
+    write(staging)
+    AtomicSwap.commitDir(f, dir, staging)
+  }
+
+  private def partitionStaging(root: String) = new Path(root, ".staging")
+
+  /** Repair every torn partition swap under `root`. Partitions are
+    * found by listing (torn `.old`/`.staging` remnants whose canonical
+    * dir is gone included), never enumerated; an unpublished staging
+    * root is dropped (its writer re-runs the merge). */
+  def recoverPartitions(spark: SparkSession, root: String): Unit = {
+    val f = fs(spark)
+    if (f.exists(new Path(root))) {
+      f.listStatus(new Path(root)).map(_.getPath.getName)
+        .filter(n => n.contains("=") && !n.startsWith(".") && !n.startsWith("_"))
+        .map(_.stripSuffix(".old").stripSuffix(".staging")).distinct
+        .foreach(p => AtomicSwap.recoverDir(f, s"$root/$p"))
+      f.delete(partitionStaging(root), true)
+    }
+  }
+
+  /** Partitioned stores: `write` puts the rewritten partitions under
+    * the staging root it is given (inside `root`; the dot keeps
+    * discovery away), then each of `partitions` (`col=value` dir
+    * names) is published with its own crash-safe swap. The staged
+    * partitions carry no `_SUCCESS` of their own, so each is stamped
+    * from the staging root's job-level marker first — that is what
+    * lets [[recoverPartitions]] tell a completed write from a torn
+    * one. A partition `write` left empty is not touched. */
+  def rewritePartitions(spark: SparkSession, root: String, partitions: Seq[String])
+                       (write: String => Unit): Unit = {
+    val f = fs(spark)
+    val stagingRoot = partitionStaging(root)
+    write(stagingRoot.toString)
+    val jobComplete = f.exists(new Path(stagingRoot, "_SUCCESS"))
+    partitions.foreach { name =>
+      val staged = new Path(stagingRoot, name)
+      val target = s"$root/$name"
+      if (jobComplete && f.exists(staged)) {
+        f.create(new Path(staged, "_SUCCESS")).close()
+        // publish under the deterministic name recoverDir knows
+        val canonical = new Path(AtomicSwap.stagingFor(target))
+        f.delete(canonical, true)
+        require(f.rename(staged, canonical), s"rename $staged -> $canonical failed")
+        AtomicSwap.commitDir(f, target, canonical.toString)
+      }
+    }
+    f.delete(stagingRoot, true)
+    ()
   }
 
   /** The append-store write: `batch` rows (keyed `id`) whose decision
@@ -159,15 +255,14 @@ object StoreProtocol {
     * and a dropped marker would let a checkpoint-loss replay of that
     * batch apply twice. */
   def commitRewrite(spark: SparkSession, store: String, next: DataFrame,
-                    batchId: Option[Long]): Unit = {
-    val f = fs(spark)
-    val staging = AtomicSwap.stagingFor(store)
-    next.write.mode("overwrite").parquet(staging)
-    (listAppliedMarkers(f, store).toSeq ++ batchId).distinct.sorted
-      .takeRight(MaxAppliedMarkers)
-      .foreach(id => f.create(inSwapMarker(staging, id), true).close())
-    AtomicSwap.commitDir(f, store, staging)
-  }
+                    batchId: Option[Long]): Unit =
+    rewrite(spark, store) { staging =>
+      next.write.mode("overwrite").parquet(staging)
+      val f = fs(spark)
+      (listAppliedMarkers(f, store).toSeq ++ batchId).distinct.sorted
+        .takeRight(MaxAppliedMarkers)
+        .foreach(id => f.create(inSwapMarker(staging, id), true).close())
+    }
 
   /** In-swap marker ids currently retained inside `dir`. */
   def listAppliedMarkers(fs: FileSystem, dir: String): Array[Long] =

@@ -93,7 +93,7 @@ object IncrementalIvf {
   def cellCensus(spark: SparkSession, path: String,
                  idCol: String = "vec_id"): DataFrame = {
     recoverAll(spark, path)
-    spark.read.parquet(s"$path/assigned")
+    IvfIndex.readAssigned(spark, path)
       .groupBy(col("cell")).agg(count(col(idCol)).as("n_vectors"))
   }
 
@@ -131,17 +131,17 @@ object IncrementalIvf {
     * not on a schedule. */
   def rebuild(spark: SparkSession, path: String, nCells: Int,
               idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val fs = recoverAll(spark, path) // torn earlier rebuild, then torn compact
+    recoverAll(spark, path) // torn earlier rebuild, then torn compact
     // pin the current vectors BEFORE the swap replaces the directory
     // underneath the lazy plan (and scan the store once, not twice)
-    val current = spark.read.parquet(s"$path/assigned")
+    val current = IvfIndex.readAssigned(spark, path)
       .dropDuplicates(idCol).select(col(idCol), col(vecCol))
       .localCheckpoint(true)
-    val staging = graft.hfc.AtomicSwap.stagingFor(path)
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-    IvfIndex.build(current, staging, nCells, idCol, vecCol)
-    fs.create(new org.apache.hadoop.fs.Path(staging, "_SUCCESS"), true).close()
-    graft.hfc.AtomicSwap.commitDir(fs, path, staging)
+    graft.hfc.StoreProtocol.rewrite(spark, path) { staging =>
+      IvfIndex.build(current, staging, nCells, idCol, vecCol)
+      graft.hfc.StoreProtocol.fs(spark)
+        .create(new org.apache.hadoop.fs.Path(staging, "_SUCCESS"), true).close()
+    }
   }
 
   /** Reclaim replay bloat: duplicate ids collapse (assignment is pure —
@@ -149,17 +149,15 @@ object IncrementalIvf {
     * one file per cell (`repartition(col("cell"))` puts each cell in
     * exactly one task, so the partitioned write emits one file under
     * each `cell=K/` — the micro-batch small-file repair, Layout.compact's
-    * job done store-natively). AtomicSwap crash-safe: readers never
-    * observe a torn store. */
+    * job done store-natively). [[graft.hfc.StoreProtocol.rewrite]]
+    * crash-safe: readers never observe a torn store. */
   def compact(spark: SparkSession, path: String,
               idCol: String = "vec_id"): Unit = {
-    val fs = recoverAll(spark, path)
-    val assignedPath = s"$path/assigned"
-    val staging = graft.hfc.AtomicSwap.stagingFor(assignedPath)
-    spark.read.parquet(assignedPath)
-      .dropDuplicates(idCol)
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(staging)
-    graft.hfc.AtomicSwap.commitDir(fs, assignedPath, staging)
+    recoverAll(spark, path)
+    graft.hfc.StoreProtocol.rewrite(spark, s"$path/assigned")(
+      IvfIndex.readAssigned(spark, path)
+        .dropDuplicates(idCol)
+        .repartition(col("cell"))
+        .write.mode("overwrite").partitionBy("cell").parquet(_))
   }
 }

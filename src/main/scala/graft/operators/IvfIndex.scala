@@ -105,6 +105,12 @@ object IvfIndex {
       .write.mode("overwrite").partitionBy("cell").parquet(s"$path/assigned")
   }
 
+  /** The `cell`-partitioned vectors of the index at `path`, read with
+    * their footer schema and `cell` at its int type (no inference job). */
+  private[operators] def readAssigned(spark: SparkSession, path: String): DataFrame =
+    graft.hfc.StoreProtocol.readPartitioned(spark, s"$path/assigned",
+      org.apache.spark.sql.types.StructField("cell", org.apache.spark.sql.types.IntegerType))
+
   /** Query path against a built index: reads ONLY the probed cell
     * partitions. The probed cell ids (≤ |queries| × nProbe ints — index
     * metadata, not data) are collected so the `isin` lands in the scan
@@ -130,8 +136,8 @@ object IvfIndex {
                                     queryIds: Seq[Long], k: Int, nProbe: Int,
                                     idCol: String, vecCol: String,
                                     tolerateBloat: Boolean): DataFrame = {
-    val cents = spark.read.parquet(s"$path/centroids")
-    val assigned = spark.read.parquet(s"$path/assigned")
+    val cents = graft.hfc.StoreProtocol.read(spark, s"$path/centroids")
+    val assigned = readAssigned(spark, path)
     val queries = assigned.filter(col(idCol).isin(queryIds: _*))
       .dropDuplicates(idCol) // |queryIds|-sized either way
       .select(col(idCol).as("query_id"), col(vecCol).as("q_vec"),

@@ -148,10 +148,11 @@ object Layout {
     * small-files maintenance every long-lived streaming/incremental
     * sink needs (thousands of KB-sized micro-batch files turn a 100 TB
     * scan into a listing + open-file storm). The rewrite goes through
-    * AtomicSwap's staging + rename, so a crash mid-compaction leaves
-    * the table readable (old or new, never half); optional `sortCols`
-    * re-clusters during the rewrite (compose with [[zValue2]] for
-    * z-ordered compaction). Returns the post-compaction plan. */
+    * [[graft.hfc.StoreProtocol.rewrite]]'s staging + rename, so a crash
+    * mid-compaction leaves the table readable (old or new, never half);
+    * optional `sortCols` re-clusters during the rewrite (compose with
+    * [[zValue2]] for z-ordered compaction). Returns the post-compaction
+    * plan. */
   def compact(spark: org.apache.spark.sql.SparkSession, dir: String,
               targetFileBytes: Long = 128L << 20,
               sortCols: Seq[String] = Nil): CompactionPlan =
@@ -165,15 +166,12 @@ object Layout {
                                sortCols: Seq[String] = Nil)
                               (prepare: DataFrame => DataFrame): CompactionPlan = {
     val before = compactionPlan(spark, dir, targetFileBytes)
-    val fs = graft.hfc.StoreProtocol.fs(spark)
-    val staging = graft.hfc.AtomicSwap.stagingFor(dir)
     val df = prepare(graft.hfc.StoreProtocol.read(spark, dir))
     val writer =
       if (sortCols.isEmpty) df.repartition(before.targetFiles)
       else df.repartitionByRange(before.targetFiles, sortCols.map(col): _*)
         .sortWithinPartitions(sortCols.map(col): _*)
-    writer.write.mode("overwrite").parquet(staging)
-    graft.hfc.AtomicSwap.commitDir(fs, dir, staging)
+    graft.hfc.StoreProtocol.rewrite(spark, dir)(writer.write.mode("overwrite").parquet(_))
     compactionPlan(spark, dir, targetFileBytes)
   }
 

@@ -790,7 +790,7 @@ object ExtendedQueries {
       |ORDER BY fact.l_orderkey, fact.l_linenumber""".stripMargin
 
   /** qf02: TTL retention sweep — the lifecycle audit a
-    * [[graft.hfc.TimePartitionedMergeWriter]]-shaped store runs before
+    * [[graft.hfc.PartitionedMergeWriter.byMonth]]-shaped store runs before
     * enforcing a retention window: per event-day partition, how many
     * rows expire at the cutoff (the integer midpoint of the event
     * range — the qr02 split-point discipline, so the gate exercises

@@ -216,11 +216,13 @@ object EventStreams {
     * `foreachBatch` upsert, Trigger.AvailableNow-compatible): each
     * micro-batch is consolidated into the parquet target with
     * [[graft.hfc.MergeWriter.upsert]] semantics and published with
-    * [[graft.hfc.AtomicSwap]]'s crash-safe rename protocol — recover()
+    * [[graft.hfc.StoreProtocol.rewrite]]'s crash-safe swap — recovery
     * runs at batch start, so a crash mid-swap can never be mistaken
     * for an empty target (which would silently rebuild from only the
-    * new batch). At scale the target would be a bucketed table, a
-    * lakehouse MERGE, or [[graft.hfc.PartitionedMergeWriter]]; the
+    * new batch), and the footer-pinned read rejects a batch column
+    * whose type differs from the target's. At scale the target would
+    * be a bucketed table, a lakehouse MERGE, or
+    * [[graft.hfc.PartitionedMergeWriter.foldPartitioned]]; the
     * per-batch semantics are identical. */
   def upsertStream(events: DataFrame, keys: Seq[String],
                    targetDir: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
@@ -228,17 +230,13 @@ object EventStreams {
       .outputMode(OutputMode.Update())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        val fs = StoreProtocol.recovered(spark, targetDir)
         val existing =
-          if (fs.exists(new org.apache.hadoop.fs.Path(targetDir)))
-            spark.read.parquet(targetDir)
+          if (StoreProtocol.recovered(spark, targetDir).exists(new org.apache.hadoop.fs.Path(targetDir)))
+            StoreProtocol.read(spark, targetDir, batch.schema)
           else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
             batch.schema)
-        val staging = graft.hfc.AtomicSwap.stagingFor(targetDir)
-        graft.hfc.MergeWriter.upsert(existing, batch, keys)
-          .write.mode("overwrite").parquet(staging)
-        graft.hfc.AtomicSwap.commitDir(fs, targetDir, staging)
-        ()
+        StoreProtocol.rewrite(spark, targetDir)(
+          graft.hfc.MergeWriter.upsert(existing, batch, keys).write.mode("overwrite").parquet(_))
       }
 
   /** Streaming perceptual-hash dedup — [[dedupStream]]'s shape for the

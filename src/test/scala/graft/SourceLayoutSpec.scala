@@ -7,7 +7,9 @@ import scala.jdk.CollectionConverters._
 /** The main tree's entry points and listeners stay few: per-query
   * counters come from [[QueryMetrics]] (recorded by [[Bench]]), plans
   * from `graft.tools.DumpPlans` — not from one-off programs that each
-  * install their own listener. */
+  * install their own listener. Directory swaps go through
+  * [[graft.hfc.StoreProtocol]], the one module that knows the
+  * crash-safe swap protocol. */
 class SourceLayoutSpec extends AnyFunSuite {
 
   private lazy val sources: Seq[(Path, String)] = {
@@ -31,6 +33,12 @@ class SourceLayoutSpec extends AnyFunSuite {
       p.getFileName.toString
     }
     assert(installs == Seq("QueryMetrics.scala"), "listeners are installed by QueryMetrics only")
+  }
+
+  test("src/main swaps directories through StoreProtocol only") {
+    val callers = sources.map(_._1.getFileName.toString).zip(sources.map(_._2))
+      .collect { case (f, src) if src.contains("AtomicSwap.") && f != "AtomicSwap.scala" => f }
+    assert(callers == Seq("StoreProtocol.scala"))
   }
 
   test("the only main entry points are Bench, Verify, GenRelational and DumpPlans") {

@@ -88,14 +88,16 @@ class HfcPipelineE2ESpec extends SparkTestBase {
       val repoTable = s"$wh/repository"
       PartitionedMergeWriter.initTable(existingRepos, repoTable, "id", nPartitions = 4)
 
+      val layout = PartitionedMergeWriter.byKey("id", nPartitions = 4)
+      val keys = Seq("id", PartitionedMergeWriter.PartCol)
       // ---- stale path: K4 targeted likes update (:609-618) ----
-      PartitionedMergeWriter.updateColumnsPartitioned(spark, repoTable,
-        Normalize.repositories(staleModels, listing(), listing()).select("id", "likes"),
-        keys = Seq("id"), cols = Seq("likes"), partitionKey = "id", nPartitions = 4)
+      PartitionedMergeWriter.foldPartitioned(spark, repoTable,
+        Normalize.repositories(staleModels, listing(), listing()).select("id", "likes"), layout)(
+        MergeWriter.updateColumns(_, _, keys, cols = Seq("likes")))
       // ---- fresh path: K2 upsert of the fully normalized rows (:643) ----
-      PartitionedMergeWriter.upsertPartitioned(spark, repoTable,
-        Normalize.repositories(freshModels, datasets, spaces),
-        keys = Seq("id"), partitionKey = "id", nPartitions = 4)
+      PartitionedMergeWriter.foldPartitioned(spark, repoTable,
+        Normalize.repositories(freshModels, datasets, spaces), layout)(
+        MergeWriter.upsert(_, _, keys))
 
       val repository = spark.read.parquet(repoTable).drop(PartitionedMergeWriter.PartCol)
       val byId = repository.collect().map(r => r.getAs[String]("id") -> r).toMap

@@ -29,7 +29,7 @@ class SketchMvMergePlaneSpec extends SparkTestBase {
 
   /** Fold `delta` into the stored MV with sketch-union semantics. */
   private def foldDelta(path: String, delta: DataFrame): Seq[Int] =
-    PartitionedMergeWriter.foldPartitioned(spark, path, delta, Seq("k"), "k", N) {
+    PartitionedMergeWriter.foldPartitioned(spark, path, delta, PartitionedMergeWriter.byKey("k", N)) {
       (existing, u) =>
         existing.unionByName(u)
           .groupBy(col("k"), col(PartitionedMergeWriter.PartCol))

@@ -8,15 +8,21 @@ import java.io.File
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-/** Pins the time-range variant of the partition-pruned MERGE: month
-  * partitions are discovered (never enumerated), an incremental batch
+/** Pins the event-month layout of the partition-pruned MERGE
+  * ([[PartitionedMergeWriter.byMonth]]): an incremental batch
   * rewrites only the months it touches — other months byte-identical —
   * brand-new months materialize on first touch, and event-time NULLs
-  * are rejected loudly (they have no partition to merge into). */
+  * are rejected loudly (they have no partition to merge into). A torn
+  * month swap is found from the listing and repaired. */
 class TimePartitionedMergeSpec extends SparkTestBase {
   import spark.implicits._
 
-  private val P = TimePartitionedMergeWriter.PartCol
+  private val P = PartitionedMergeWriter.MonthCol
+  private val layout = PartitionedMergeWriter.byMonth("ts")
+
+  private def upsert(path: String, updates: DataFrame): Seq[String] =
+    PartitionedMergeWriter.foldPartitioned(spark, path, updates, layout)(
+      MergeWriter.upsert(_, _, Seq("event_id", P)))
 
   private def baseTable: DataFrame =
     Seq(
@@ -36,7 +42,7 @@ class TimePartitionedMergeSpec extends SparkTestBase {
     val dir = Files.createTempDirectory("graft-tmerge").toString
     try {
       val path = s"$dir/t"
-      TimePartitionedMergeWriter.initTable(baseTable, path, "ts")
+      PartitionedMergeWriter.initTable(baseTable, path, layout)
       val before = fileState(path)
 
       val updates = Seq(
@@ -46,8 +52,7 @@ class TimePartitionedMergeSpec extends SparkTestBase {
         .toDF("event_id", "tss", "payload")
         .withColumn("ts", to_timestamp(col("tss"))).drop("tss")
 
-      val affected = TimePartitionedMergeWriter.upsertPartitioned(
-        spark, path, updates, Seq("event_id"), "ts")
+      val affected = upsert(path, updates)
       assert(affected == Seq("2024-02", "2024-04"))
 
       val rows = spark.read.parquet(path)
@@ -68,8 +73,7 @@ class TimePartitionedMergeSpec extends SparkTestBase {
       assert(new File(s"$path/$P=2024-04").exists())
 
       // idempotent: replaying the same batch converges
-      TimePartitionedMergeWriter.upsertPartitioned(
-        spark, path, updates, Seq("event_id"), "ts")
+      upsert(path, updates)
       assert(spark.read.parquet(path)
         .select("event_id", "payload").as[(Long, String)].collect().toMap == rows)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new File(dir))
@@ -79,8 +83,8 @@ class TimePartitionedMergeSpec extends SparkTestBase {
     val dir = Files.createTempDirectory("graft-tmerge").toString
     try {
       val path = s"$dir/t"
-      TimePartitionedMergeWriter.initTable(
-        baseTable.withColumn("likes", lit(0)), path, "ts")
+      PartitionedMergeWriter.initTable(
+        baseTable.withColumn("likes", lit(0)), path, layout)
       // NARROW counters frame — no payload column at all: the rewritten
       // months must keep the table's other columns intact
       val updates = Seq(
@@ -89,8 +93,8 @@ class TimePartitionedMergeSpec extends SparkTestBase {
         .toDF("event_id", "tss")
         .withColumn("ts", to_timestamp(col("tss"))).drop("tss")
         .withColumn("likes", lit(41))
-      val affected = TimePartitionedMergeWriter.updateColumnsPartitioned(
-        spark, path, updates, Seq("event_id"), cols = Seq("likes"), "ts")
+      val affected = PartitionedMergeWriter.foldPartitioned(spark, path, updates, layout)(
+        MergeWriter.updateColumns(_, _, Seq("event_id", P), cols = Seq("likes")))
       assert(affected == Seq("2024-02"))
       val rows = spark.read.parquet(path)
         .select("event_id", "payload", "likes").as[(Long, String, Int)].collect()
@@ -105,19 +109,18 @@ class TimePartitionedMergeSpec extends SparkTestBase {
     val dir = Files.createTempDirectory("graft-tmerge").toString
     try {
       val path = s"$dir/t"
-      TimePartitionedMergeWriter.initTable(baseTable, path, "ts")
+      PartitionedMergeWriter.initTable(baseTable, path, layout)
       val nullTs = Seq((9L, "x")).toDF("event_id", "payload")
         .withColumn("ts", lit(null).cast("timestamp"))
       val e = intercept[IllegalArgumentException] {
-        TimePartitionedMergeWriter.upsertPartitioned(
-          spark, path, nullTs, Seq("event_id"), "ts")
+        upsert(path, nullTs)
       }
       assert(e.getMessage.contains("NULL"))
       // ...and the initial load enforces the same contract in-pass
       // (raise_error in the write projection) — otherwise null rows
       // land in the Hive default partition no merge ever reads
       val e2 = intercept[Exception] {
-        TimePartitionedMergeWriter.initTable(nullTs, s"$dir/t2", "ts")
+        PartitionedMergeWriter.initTable(nullTs, s"$dir/t2", layout)
       }
       def messages(t: Throwable): Seq[String] =
         Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
@@ -129,7 +132,7 @@ class TimePartitionedMergeSpec extends SparkTestBase {
     val dir = Files.createTempDirectory("graft-tmerge").toString
     try {
       val path = s"$dir/t"
-      TimePartitionedMergeWriter.initTable(baseTable, path, "ts")
+      PartitionedMergeWriter.initTable(baseTable, path, layout)
       val whole = spark.read.parquet(path)
         .select("event_id", "payload").as[(Long, String)].collect().toSet
 
@@ -143,7 +146,7 @@ class TimePartitionedMergeSpec extends SparkTestBase {
       Files.move(Paths.get(target), Paths.get(target + ".old"),
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
 
-      TimePartitionedMergeWriter.recover(spark, path)
+      StoreProtocol.recoverPartitions(spark, path)
       assert(spark.read.parquet(path)
         .select("event_id", "payload").as[(Long, String)].collect().toSet == whole)
       assert(!new File(target + ".old").exists() && !new File(staging).exists())

@@ -117,7 +117,7 @@ class IncrementalLineCensusSpec extends SparkTestBase {
     assert(IncrementalLineCensus.storeStats(spark, store) == ((4L, 3L)))
   }
 
-  test("batchCounted recovers a torn swap BEFORE consulting the marker") {
+  test("StoreProtocol.batchCommitted recovers a torn swap BEFORE consulting the marker") {
     // regression (r11, found by CorpusSoakSpec): a crash between
     // commitDir's two renames leaves markers only in the staged dir;
     // an unrecovered existence check declared the committed batch
