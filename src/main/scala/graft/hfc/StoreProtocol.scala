@@ -67,10 +67,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * [[MaxAppliedMarkers]], which is what makes
   * [[assertWithinReplayHorizon]] necessary.
   *
-  * '''Executor loss under `dedupBatch`'s two `localCheckpoint`s.''' The
-  * dedup stores pin two batch-sized frames on executors, unreplicated:
-  * the batch projection (read by banding, verify and the append) and
-  * the decisions (pinned before the store grows). Neither is ever
+  * '''Executor loss while a batch is pinned.'''
+  * [[graft.operators.IncrementalDedup]] pins its batch signatures and
+  * its decisions on the DRIVER (collected into local relations): an
+  * executor loss only re-runs tasks of the store scan or the append,
+  * whose lineage is intact, and the decisions cannot change under it.
+  * The hash and frame stores still pin two batch-sized frames on
+  * executors with `localCheckpoint`, unreplicated: the batch
+  * projection (read by banding, verify and the append) and the
+  * decisions (pinned before the store grows). Neither is ever
   * store-sized. Losing an executor that holds either fails the action
   * that needs the block; Spark cannot recompute it (the lineage was
   * cut), so the micro-batch fails. Before the append the store is

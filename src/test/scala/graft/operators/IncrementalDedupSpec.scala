@@ -86,4 +86,110 @@ class IncrementalDedupSpec extends SparkTestBase {
       .as[(Long, Option[Long], Option[Double])].collect().head
     assert(out._2.contains(0L) && out._3.exists(j => j >= 0.3 && j < 1.0))
   }
+
+  private def words(r: scala.util.Random, n: Int): Vector[String] =
+    Vector.fill(n)(s"w${r.nextInt(500)}")
+
+  /** `base` with the token at each of `at` replaced by a token no
+    * other doc carries. */
+  private def edited(base: Vector[String], tag: String, at: Int*): Vector[String] =
+    at.zipWithIndex.foldLeft(base) { case (d, (i, k)) => d.updated(i, s"$tag$k") }
+
+  private def docs(ds: Seq[(Long, Vector[String])]) =
+    ds.map { case (id, d) => (id, d.mkString(" ")) }.toDF("doc_id", "text")
+
+  private case class Sig(id: Long, hashes: Set[String], bands: Seq[String])
+
+  private def sigs(path: String): Seq[Sig] =
+    spark.read.parquet(path).as[(Long, Seq[String], Seq[String])].collect().toSeq
+      .map { case (id, h, b) => Sig(id, h.toSet, b) }
+
+  private def jaccard(a: Sig, b: Sig): Double = {
+    val common = (a.hashes intersect b.hashes).size.toDouble
+    BigDecimal(common / (a.hashes.size + b.hashes.size - common))
+      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+  }
+
+  private def shareBand(a: Sig, b: Sig) = a.bands.zip(b.bands).exists { case (x, y) => x == y }
+
+  /** Brute force: every (store doc other than itself, or smaller batch
+    * id) pair sharing a band, exact Jaccard, best = highest, ties to
+    * the smallest id. */
+  private def reference(store: Seq[Sig], batch: Seq[Sig], threshold: Double) =
+    batch.map { n =>
+      val scored = (store.filter(_.id != n.id) ++ batch.filter(_.id < n.id))
+        .filter(shareBand(n, _)).map(o => (o.id, jaccard(n, o))).filter(_._2 >= threshold)
+      n.id -> scored.sortBy { case (id, j) => (-j, id) }.headOption
+    }.toMap
+
+  test("a seeded batch decides exactly like the brute-force reference") {
+    val r = new scala.util.Random(408)
+    val threshold = 0.7
+    val stored = (0L until 40L).map(id => id -> words(r, 40))
+    val tieBase = words(r, 40)      // never stored itself
+    val chainBase = words(r, 40)
+    val storedTies = Seq(57L -> edited(tieBase, "tieA", 30), 43L -> edited(tieBase, "tieB", 8))
+    val batch = Seq(
+      1000L -> tieBase,                          // equal Jaccard to 43 and 57
+      1001L -> stored(7)._2,                     // collides with 7 in every band
+      1010L -> chainBase,                        // in-batch chain 1012 -> 1011 -> 1010
+      1011L -> edited(chainBase, "c1", 20),
+      1012L -> edited(edited(chainBase, "c1", 20), "c2", 5)) ++
+      (0 until 12).map { k =>                    // random near copies and fresh docs
+        val id = 1020L + k
+        if (k % 3 == 2) id -> words(r, 40)
+        else id -> edited(stored(r.nextInt(40))._2, s"e$k", (0 until 1 + k % 4).map(_ * 9 + 2): _*)
+      }
+    val store = tmpStore()
+    IncrementalDedup.initStore(docs(stored ++ storedTies), store, numHashes = 16, bands = 8)
+    val batchSigs = tmpStore()
+    IncrementalDedup.initStore(docs(batch), batchSigs, numHashes = 16, bands = 8)
+    val (storeSig, newSig) = (sigs(store), sigs(batchSigs))
+    val want = reference(storeSig, newSig, threshold)
+
+    // the planted cases hold in the input
+    def sig(ss: Seq[Sig], id: Long) = ss.find(_.id == id).get
+    val n1000 = sig(newSig, 1000L)
+    assert(shareBand(n1000, sig(storeSig, 43L)) && shareBand(n1000, sig(storeSig, 57L)))
+    assert(jaccard(n1000, sig(storeSig, 43L)) == jaccard(n1000, sig(storeSig, 57L)))
+    assert(sig(newSig, 1001L).bands == sig(storeSig, 7L).bands)
+    assert(want(1000L).map(_._1).contains(43L) && want(1001L).contains((7L, 1.0)))
+    assert(want(1011L).map(_._1).contains(1010L) && want(1012L).map(_._1).contains(1011L))
+    assert(want.values.count(_.isDefined) > 5 && want.values.count(_.isEmpty) > 3, want)
+
+    val got = IncrementalDedup.dedupBatch(docs(batch), store, threshold,
+        numHashes = 16, bands = 8)
+      .as[(Long, Option[Long], Option[Double])].collect().toSeq
+    assert(got.map(_._1).sorted == batch.map(_._1).sorted) // one row per batch doc
+    assert(got.map(r => r._1 -> r._2.zip(r._3).headOption).toMap == want)
+
+    val narrowed = intercept[IllegalArgumentException](IncrementalDedup.dedupBatch(
+      Seq((2000, "an int keyed batch of words")).toDF("doc_id", "text"), store, threshold,
+      numHashes = 16, bands = 8))
+    assert(narrowed.getMessage.contains("column 'id' is stored as bigint but the batch has int"))
+  }
+
+  test("one batch scans the store once: few jobs, no store-sized shuffle, one new file") {
+    val r = new scala.util.Random(7)
+    val stored = (0L until 200L).map(id => id -> words(r, 40))
+    val store = tmpStore()
+    IncrementalDedup.initStore(docs(stored), store, numHashes = 16, bands = 8)
+    def parquetFiles() = new java.io.File(store).listFiles().filter(_.getName.endsWith(".parquet"))
+    val before = parquetFiles()
+    val batch = docs((0 until 30).map { k =>
+      (1000L + k, if (k % 2 == 0) edited(stored(k * 5)._2, "b", 17) else words(r, 40))
+    })
+    val m = graft.QueryMetrics.install(spark)
+    val run = try {
+      m.reset()
+      IncrementalDedup.dedupBatch(batch, store, 0.7, numHashes = 16, bands = 8).collect()
+      m.snapshot()
+    } finally m.close()
+    // a batch-sized exchange only: a plan that shuffles the stored
+    // hashes for a verify join writes ~30% of this store's bytes
+    val storeBytes = before.map(_.length).sum
+    assert(run.jobs <= 6, run)
+    assert(run.shuffleWriteBytes < storeBytes / 20, s"$run vs a $storeBytes-byte store")
+    assert(parquetFiles().length == before.length + 1)
+  }
 }
