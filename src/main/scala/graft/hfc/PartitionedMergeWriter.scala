@@ -25,8 +25,9 @@ import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructFiel
   *
   * An update batch, in [[foldPartitioned]]:
   *
-  *  1. derives its affected partitions (index metadata, collected so
-  *     the `IN` lands in the scan as a PartitionFilter),
+  *  1. derives its affected partitions (index metadata, collected —
+  *     each task's distinct values, no exchange — so the `IN` lands in
+  *     the scan as a PartitionFilter),
   *  2. reads ONLY those partitions with the footer-pinned
   *     [[StoreProtocol.readPartitioned]] — a batch column whose type
   *     differs from the store's fails there, before anything is
@@ -106,14 +107,19 @@ object PartitionedMergeWriter {
     fold(spark, path, updates, layout, lit(true))(consolidate).map(_._1)
 
   /** [[foldPartitioned]], returning each affected partition once per
-    * distinct value `side` takes over its update rows — from the same
-    * one collect (the refresh's stale/fresh split). */
+    * distinct value `side` takes over its update rows (the refresh's
+    * stale/fresh split, whose NULL watermarks raise in this collect,
+    * before anything is written). The pairs come from one collect and no
+    * exchange: each task reduces its rows to their distinct pairs, and
+    * the Spark driver merges those small sets. The collect also rejects NULL
+    * partition sources. */
   private[hfc] def fold[T](spark: SparkSession, path: String, updates: DataFrame,
                            layout: Partitioning[T], side: Column)
                           (consolidate: (DataFrame, DataFrame) => DataFrame): Seq[(T, Any)] = {
     StoreProtocol.recoverPartitions(spark, path)
     val u = updates.withColumn(layout.column, layout.of(col(layout.source)))
-    val rows = u.select(col(layout.column), side).distinct().collect()
+    val rows = u.select(col(layout.column), side).rdd
+      .mapPartitions(_.toSet.iterator).collect().distinct
     require(!rows.exists(_.isNullAt(0)), nullsRejected(layout))
     val sides = rows.map(r => (r.get(0).asInstanceOf[T], r.get(1))).toSeq
       .sortBy(_._1)(layout.order)

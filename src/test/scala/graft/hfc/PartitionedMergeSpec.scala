@@ -17,9 +17,11 @@ import scala.jdk.CollectionConverters._
   * contents). At 63 M-row repo_file scale that is the difference
   * between a merge proportional to the update and one proportional to
   * the table. Also pinned: the one-fold monthly refresh equals the
-  * non-partitioned refresh, a torn partition swap is repaired and a
-  * refresh torn mid-publish converges on its re-run, and
-  * a batch typed wider than the store is rejected before any write. */
+  * non-partitioned refresh in at most three Spark jobs and whatever the
+  * shuffle partition count, a torn partition swap is repaired and a
+  * refresh torn mid-publish converges on its re-run, and a batch typed
+  * wider than the store or carrying a NULL watermark is rejected
+  * before any write. */
 class PartitionedMergeSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -184,6 +186,68 @@ class PartitionedMergeSpec extends SparkTestBase {
         .as[Int].collect().sorted.toSeq
       val (staleRows, freshRows) = MergeWriter.stalenessSplit(refreshBatch, "last_modified", limit)
       assert(stale == partsOf(staleRows) && fresh == partsOf(freshRows))
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new File(dir))
+    }
+  }
+
+  test("refreshPartitioned runs at most three Spark jobs") {
+    val dir = Files.createTempDirectory("graft-pmerge").toString
+    try {
+      val path = s"$dir/t"
+      PartitionedMergeWriter.initTable(baseTable, path, "id", N)
+      val m = graft.QueryMetrics.install(spark)
+      val run = try {
+        m.reset()
+        refresh(path)
+        m.snapshot()
+      } finally m.close()
+      // the touched-partition collect, then the write's key shuffle and
+      // its write stage
+      assert(run.jobs <= 3, run)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new File(dir))
+    }
+  }
+
+  test("a refreshed store does not depend on the shuffle partition count") {
+    val dir = Files.createTempDirectory("graft-pmerge").toString
+    val conf = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled")
+    val saved = conf.map(k => k -> spark.conf.getOption(k))
+    try {
+      val stores = Seq(1, 7).map { n =>
+        spark.conf.set("spark.sql.shuffle.partitions", n.toString)
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+        val path = s"$dir/t$n"
+        PartitionedMergeWriter.initTable(baseTable, path, "id", N)
+        refresh(path)
+        spark.read.parquet(path).collect().map(_.toString).sorted.toSeq
+      }
+      assert(stores.head == stores(1))
+      assert(stores.head.exists(_.startsWith("[repo9,999,fresh-pay,")))
+    } finally {
+      saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+      org.apache.commons.io.FileUtils.deleteDirectory(new File(dir))
+    }
+  }
+
+  test("a NULL watermark is rejected by name before any write") {
+    val dir = Files.createTempDirectory("graft-pmerge").toString
+    try {
+      val path = s"$dir/t"
+      PartitionedMergeWriter.initTable(baseTable, path, "id", N)
+      val before = fileState(path)
+      val batch = refreshBatch.union(Seq(("repo4", 4, "no-watermark")).toDF("id", "likes", "payload")
+        .withColumn("last_modified", lit(null).cast("timestamp")))
+      val e = intercept[Exception](IncrementalRefresh.refreshPartitioned(
+        spark, path, batch, Seq("id"), "id", N, "last_modified", limit, Seq("likes")))
+      def messages(t: Throwable): Seq[String] =
+        Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
+      assert(messages(e).exists(_.contains("last_modified contains NULLs")), messages(e))
+      assert(fileState(path) == before)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new File(dir))
     }
