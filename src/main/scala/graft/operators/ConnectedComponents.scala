@@ -24,29 +24,9 @@ import org.apache.spark.sql.DataFrame
   * the per-round cost is the edge shuffle, which AQE handles like any
   * other key join. The driver loop is over ROUNDS (bounded by
   * maxIter), not rows; the only driver actions are the per-round
-  * materialize + a LIMIT-1 convergence probe.
+  * pin + a LIMIT-1 convergence probe ([[Iterate.fixpoint]]).
   */
 object ConnectedComponents {
-
-  /** Checkpoint + STATISTICS truncation. `localCheckpoint` truncates
-    * the logical plan but Spark's LogicalRDD inherits the child plan's
-    * ESTIMATED `sizeInBytes` — and join estimation multiplies them, so
-    * iterative composition compounds the estimate superexponentially:
-    * folding [[mergeBatch]] over 10 tiny batches was measured growing
-    * the BigInt estimate 16× in DIGITS per fold (543 → 8,680 →
-    * 138,871 → 2,221,938 digits by fold 4) until plan costing spent
-    * minutes in BigInteger multiplication. When the inherited estimate
-    * exceeds any physically possible size (2^128 bytes), rebuild the
-    * frame from the checkpointed RDD — fresh default stats, plan
-    * costing stays O(1) forever. The rebuild pays a Row conversion, so
-    * it's applied only in the pathological case: single [[run]] calls
-    * on real data never trigger it. */
-  private[operators] def checkpointTruncated(df: DataFrame): DataFrame = {
-    val c = df.localCheckpoint(true)
-    if (c.queryExecution.optimizedPlan.stats.sizeInBytes.bitLength > 128)
-      c.sparkSession.createDataFrame(c.rdd, c.schema)
-    else c
-  }
 
   /** (id, component) for every vertex in `edges`; component = min
     * vertex id of the connected component. Deterministic; pointer
@@ -80,28 +60,19 @@ object ConnectedComponents {
     // symmetric closure: propagate minima in both directions per round
     val sym = edges.select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(edges.select(col(bCol).as("src"), col(aCol).as("dst")))
-    // localCheckpoint, not persist: persist caches DATA but the logical
-    // plan still compounds across rounds (each next references the whole
-    // prior lineage), and Catalyst re-analyzes the accumulated plan every
-    // round — O(2^rounds) planning. Checkpointing truncates the plan to
-    // the materialized result, keeping every round's planning O(1).
-    // (On a cluster, swap for reliable checkpoint()+checkpoint dir if
-    // executor loss during the loop must be survivable.)
     // r14 optimization (labels bit-identical): the edge list is
-    // PRE-PARTITIONED on the join key before its one-off checkpoint —
+    // PRE-PARTITIONED on the join key before its one-off pin —
     // localCheckpoint preserves outputPartitioning, so every round's
     // join re-shuffles only the (smaller) label vector, never the edge
     // list (guide §2.4: two ops keyed the same way share one exchange).
     // At 100 TB the edge list is the heavy side; shuffling it once
     // instead of once per round is the scale win, and at toy scale it
     // removes one exchange per round.
-    val symC = checkpointTruncated(sym.repartition(col("dst")))
-    var labels = checkpointTruncated(
+    val symC = Iterate.pin(sym.repartition(col("dst")))
+    val init = Iterate.pin(
       symC.select(col("src").as("id")).distinct()
         .withColumn("comp", col("id")))
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
+    def round(labels: DataFrame): DataFrame = {
       val viaNeighbors = symC
         .join(labels.select(col("id").as("dst"), col("comp")), "dst")
         .select(col("src").as("id"), col("comp"),
@@ -117,17 +88,16 @@ object ConnectedComponents {
           lit(null).cast(labels.schema("comp").dataType).as("old"))
       // r14: the previous label rides through the min-aggregation (every
       // vertex has exactly one current row, min ignores nulls), so the
-      // convergence probe is a filter over the checkpointed round output
+      // convergence probe is a filter over the pinned round output
       // instead of a second join + shuffle per round
-      val next = checkpointTruncated(viaNeighbors
+      viaNeighbors
         .union(labels.select(col("id"), col("comp"), col("comp").as("old")))
         .union(compressed)
-        .groupBy("id").agg(min("comp").as("comp"), min("old").as("old")))
-      converged = next.filter(col("comp") =!= col("old")).isEmpty
-      labels = next.select(col("id"), col("comp"))
-      iter += 1
+        .groupBy("id").agg(min("comp").as("comp"), min("old").as("old"))
     }
-    (labels.select(col("id"), col("comp")), iter)
+    val (labels, rounds, _) = Iterate.fixpoint(init, maxIter, round,
+      col("comp") =!= col("old"), _.select(col("id"), col("comp")))
+    (labels, rounds)
   }
 
   /** Alternating large-star/small-star connected components (Kiveris
@@ -152,8 +122,8 @@ object ConnectedComponents {
     * per-round work, which is why it stays the default; the spec pins
     * both algorithms to identical labels on every fixture.
     *
-    * Each round localCheckpoints (same O(2^rounds) re-analysis hazard
-    * as [[run]]); convergence = the star edge set reaches a fixpoint,
+    * Each round is an [[Iterate.fixpoint]] round like [[run]]'s;
+    * convergence = the star edge set reaches a fixpoint,
     * tested by membership flags riding through smallStar's own (u, v)
     * aggregation (exact set equality, no extra per-round job).
     */
@@ -164,11 +134,11 @@ object ConnectedComponents {
   private[graft] def runAlternatingCounted(edges: DataFrame, aCol: String = "a_id",
                                            bCol: String = "b_id",
                                            maxIter: Int = 30): (DataFrame, Int) = {
-    val verts = checkpointTruncated(
+    val verts = Iterate.pin(
       edges.select(col(aCol).as("id"))
         .union(edges.select(col(bCol).as("id"))).distinct())
     // star edges always point child -> candidate-root; self-loops drop
-    var e = checkpointTruncated(
+    val stars = Iterate.pin(
       edges.select(col(aCol).as("u"), col(bCol).as("v"))
         .filter(col("u") =!= col("v"))
         .distinct())
@@ -210,14 +180,10 @@ object ConnectedComponents {
         .agg(max(col("is_new")).as("is_new"), max(col("is_old")).as("is_old"))
     }
 
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
-      val probed = checkpointTruncated(smallStarProbed(largeStar(e), e))
-      converged = probed.filter(col("is_new") =!= col("is_old")).isEmpty
-      e = probed.filter(col("is_new")).select(col("u"), col("v"))
-      iter += 1
-    }
+    val (e, rounds, _) = Iterate.fixpoint(stars, maxIter,
+      cur => smallStarProbed(largeStar(cur), cur),
+      col("is_new") =!= col("is_old"),
+      _.filter(col("is_new")).select(col("u"), col("v")))
     // a maxIter cutoff can leave a vertex with several outgoing star
     // edges (smallStar emits one per group it appears in); min-reduce
     // to one best-so-far label per vertex so the contract (exactly one
@@ -227,7 +193,7 @@ object ConnectedComponents {
       .join(e.select(col("u").as("id"), col("v").as("comp")), Seq("id"), "left")
       .groupBy(col("id"))
       .agg(min(coalesce(col("comp"), col("id"))).as("comp"))
-    (labels, iter)
+    (labels, rounds)
   }
 
   /** Full-corpus dedup decisions from a near-dup pair list: every doc

@@ -96,16 +96,17 @@ object GraphMetrics {
     // against checkpointing here was for checkpointing the loop
     // VARIABLE r per round, which stays un-checkpointed on shallow
     // loops.
-    val edges = ConnectedComponents.checkpointTruncated(
+    val edges = Iterate.pin(
       und.unionByName(und.select(col("b").as("a"), col("a").as("b"))))
-    val deg = ConnectedComponents.checkpointTruncated(
+    val deg = Iterate.pin(
       edges.groupBy(col("a")).agg(count(lit(1)).as("od"))
         .select(col("a").as("node"), col("od")))
     val nN = deg.agg(count(lit(1)).cast("double").as("n"))
-    var r = deg.select(col("node")).crossJoin(broadcast(nN))
+    val r0 = deg.select(col("node")).crossJoin(broadcast(nN))
       .select(col("node"), (lit(1.0) / col("n")).as("r"))
-    for (i <- 1 to iters) {
-      r = edges
+    // Iterate.rounds pins every third round of a deep loop
+    Iterate.rounds(r0, iters) { r =>
+      edges
         .join(r, edges("a") === r("node")).drop("node")
         .join(deg, edges("a") === deg("node")).drop("node")
         // contributions as scaled integers (floor(x*1e9 + 0.5)): tie-free
@@ -123,18 +124,7 @@ object GraphMetrics {
           // `(1.0 - 0.85)` is the bit-identical IEEE subtraction
           (floor(((lit(1.0) - lit(damping)) / col("n") +
             lit(damping) * (col("s").cast("double") / 1e9)) * 1e9 + 0.5) / 1e9).as("r"))
-      // truncate lineage every 3 rounds IN DEEP LOOPS: values are
-      // unchanged (the checkpoint is a materialization barrier, not a
-      // rewrite), but without it iters=30+ compounds the join plan
-      // until analysis time dominates — the ConnectedComponents
-      // pathology. Shallow loops skip it: an eager checkpoint costs a
-      // materialization + Row conversion per application, measured
-      // +1.6 s on the 5-iteration qg03 for a plan depth Catalyst
-      // handles fine.
-      if (iters > 8 && i % 3 == 0 && i < iters)
-        r = ConnectedComponents.checkpointTruncated(r)
-    }
-    r.select(col("node"), col("r").as("pagerank"))
+    }.select(col("node"), col("r").as("pagerank"))
   }
 
   /** HITS (Kleinberg 1999) — hubs and authorities over a DIRECTED edge
@@ -164,8 +154,8 @@ object GraphMetrics {
     *
     * Input columns `src`, `dst` (directed, any equality-comparable
     * node type); self-loops dropped, parallel edges deduped. Output:
-    * `node, hub, authority` after `iters` rounds. Deep loops get the
-    * [[ConnectedComponents.checkpointTruncated]] lineage gate.
+    * `node, hub, authority` after `iters` rounds. Every pass is pinned
+    * ([[Iterate.pin]]).
     *
     * Grid bound (shared with [[pageRank]]'s contract): normalized
     * scores live on the 1e-9 grid, so mass below 0.5e-9 floors to
@@ -200,7 +190,7 @@ object GraphMetrics {
     //     constant.
     def pass(score: DataFrame, scoreCol: String, joinKey: String,
              groupKey: String, outCol: String): DataFrame = {
-      val raw = ConnectedComponents.checkpointTruncated(
+      val raw = Iterate.pin(
         edges.join(score, edges(joinKey) === score("node"))
           .select(col(groupKey),
             floor(col(scoreCol) * 1e9 + 0.5).cast("long").as("c"))
@@ -268,7 +258,7 @@ object GraphMetrics {
       // the engine re-executes it exponentially (measured: 57 s at
       // sf0.1 for 8 rounds, 1.5 s with the barrier). The frame is
       // |V|·k rows — the materialization is the cheap side.
-      dist = ConnectedComponents.checkpointTruncated(
+      dist = Iterate.pin(
         dist.unionByName(relaxed)
           .groupBy(col("lm"), col("node")).agg(min(col("d")).as("d")))
     }
@@ -314,8 +304,7 @@ object GraphMetrics {
     val tele = nodes.join(broadcast(seedDf), Seq("node"), "left")
       .select(col("node"), coalesce(col("tele"), lit(0.0)).as("tele"))
       .localCheckpoint()
-    var r = tele.select(col("node"), col("tele").as("r"))
-    for (i <- 1 to iters) {
+    Iterate.rounds(tele.select(col("node"), col("tele").as("r")), iters) { r =>
       val inbound = edges
         .join(r, edges("a") === r("node")).drop("node")
         .join(deg, edges("a") === deg("node")).drop("node")
@@ -325,15 +314,12 @@ object GraphMetrics {
           floor(col("r") / col("od") * 1e9 + 0.5).cast("long").as("contrib"))
         .groupBy(col("b"))
         .agg(sum(col("contrib")).as("s"))
-      r = tele.join(inbound, tele("node") === inbound("b"), "left")
+      tele.join(inbound, tele("node") === inbound("b"), "left")
         .select(tele("node"),
           (floor(((lit(1.0) - lit(damping)) * col("tele") +
             lit(damping) * coalesce(col("s").cast("double") / 1e9, lit(0.0))) * 1e9 + 0.5) / 1e9)
             .as("r"))
-      if (iters > 8 && i % 3 == 0 && i < iters)
-        r = ConnectedComponents.checkpointTruncated(r)
-    }
-    r.select(col("node"), col("r").as("ppr"))
+    }.select(col("node"), col("r").as("ppr"))
   }
 
   /** Synchronous label-propagation community detection (Raghavan et
@@ -369,18 +355,14 @@ object GraphMetrics {
     val und = canonicalEdges(edges0)
     val e = und.unionByName(und.select(col("b").as("a"), col("a").as("b")))
       .localCheckpoint()
-    var l = e.select(col("a").as("node")).distinct()
-      .select(col("node"), col("node").as("label"))
-    for (i <- 1 to rounds) {
-      l = e.join(l, e("a") === l("node")).drop("node")
+    Iterate.rounds(e.select(col("a").as("node")).distinct()
+        .select(col("node"), col("node").as("label")), rounds) { l =>
+      e.join(l, e("a") === l("node")).drop("node")
         .groupBy(col("b"), col("label")).agg(count(lit(1)).as("c"))
         .groupBy(col("b"))
         .agg(min(struct((-col("c")).as("nc"), col("label").as("lab"))).as("m"))
         .select(col("b").as("node"), col("m.lab").as("label"))
-      if (rounds > 8 && i % 3 == 0 && i < rounds)
-        l = ConnectedComponents.checkpointTruncated(l)
     }
-    l
   }
 
   /** Bounded k-core peeling census: `rounds` iterations of "drop every
@@ -463,7 +445,7 @@ object GraphMetrics {
     for (r <- 1 to maxR) {
       val expanded = reach.join(dir, reach("v") === dir("s"))
         .select(reach("u"), dir("d").as("v"))
-      reach = ConnectedComponents.checkpointTruncated(reach.union(expanded).distinct())
+      reach = Iterate.pin(reach.union(expanded).distinct())
       val n = reach.count()
       rows += ((r, n, n.toDouble / nV.toDouble))
     }
@@ -490,9 +472,8 @@ object GraphMetrics {
     val edges = canonicalEdges(edges0).localCheckpoint()
     val dir = edges.select(col("a").as("s"), col("b").as("d"))
       .union(edges.select(col("b").as("s"), col("a").as("d")))
-    var sk = dir.select(col("s").as("u")).distinct()
-      .groupBy(col("u")).agg(expr(s"hll_sketch_agg(u, $lgK)").as("sk"))
-    sk = ConnectedComponents.checkpointTruncated(sk)
+    var sk = Iterate.pin(dir.select(col("s").as("u")).distinct()
+      .groupBy(col("u")).agg(expr(s"hll_sketch_agg(u, $lgK)").as("sk")))
     val nV = sk.count()
     def estimate(s: DataFrame): Double =
       s.agg(sum(expr("hll_sketch_estimate(sk)"))).as[Double].head()
@@ -502,7 +483,7 @@ object GraphMetrics {
     for (r <- 1 to maxR) {
       val msgs = dir.join(sk, dir("d") === sk("u"))
         .select(dir("s").as("u"), col("sk"))
-      sk = ConnectedComponents.checkpointTruncated(
+      sk = Iterate.pin(
         msgs.union(sk.select(col("u"), col("sk")))
           .groupBy(col("u")).agg(expr("hll_union_agg(sk)").as("sk")))
       val est = estimate(sk)

@@ -61,12 +61,12 @@ object KMeans {
     // scans collapse to one checkpoint write (guide §2.4). Values are
     // untouched, so everything downstream is bit-identical.
     val frozen = corpus.select(col(idCol), col(vecCol)).localCheckpoint()
-    var cents = ConnectedComponents.checkpointTruncated(
+    var cents = Iterate.pin(
       IvfIndex.centroids(frozen, k, idCol, vecCol))
     var assigned: DataFrame = null
     for (_ <- 1 to iters) {
       assigned = IvfIndex.assign(frozen, cents, idCol, vecCol)
-      cents = ConnectedComponents.checkpointTruncated(update(assigned, vecCol))
+      cents = Iterate.pin(update(assigned, vecCol))
     }
     (cents, assigned)
   }
@@ -104,7 +104,7 @@ object KMeans {
       .select(col(idCol), col(vecCol), md5(col(idCol).cast("string")).as("ord"))
       .orderBy(col("ord"), col(idCol)).limit(k)
       .select((row_number().over(w) - 1).as("cell"), col(vecCol))
-    var cents = ConnectedComponents.checkpointTruncated(
+    var cents = Iterate.pin(
       seeds.select(col("cell"),
           posexplode(array((0 until slices).map(s =>
             slice(col(vecCol).cast("array<double>"), s * subDim + 1, subDim)): _*))
@@ -139,7 +139,7 @@ object KMeans {
         .agg((sum(round(col("v"), 6).cast("decimal(28,6)")).cast("double") /
                 count(lit(1))).as("mv"),
              count(lit(1)).as("n"))
-      cents = ConnectedComponents.checkpointTruncated(
+      cents = Iterate.pin(
         means.groupBy(col("subspace"), col("cell"))
           .agg(transform(array_sort(collect_list(struct(col("dim"), col("mv")))),
                  x => x.getField("mv")).as("c_vec"),

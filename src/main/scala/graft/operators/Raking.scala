@@ -113,7 +113,7 @@ object Raking {
         // per step — 2^(2·sweeps) replays of the grid aggregation (the
         // qg08 double-reference lesson). Truncate per sweep: the grid is
         // metadata-sized, the checkpoint is cheap, the plan stays flat.
-        m = ConnectedComponents.checkpointTruncated(
+        m = Iterate.pin(
           scaleTo(scaleTo(m, rowCol, rowTargets), colCol, colTargets))
       }
       m

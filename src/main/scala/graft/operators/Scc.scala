@@ -38,9 +38,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: every step is an edge-list equi join + hash
   * aggregation keyed on a vertex id; state is one (node, label) row
-  * per vertex; lineage truncates per round (localCheckpoint). The
-  * per-round convergence probe is a scalar count — the justified-
-  * collect class. Fails loudly if `maxRounds` phases don't converge
+  * per vertex; lineage truncates per round (the coloring and
+  * confirmation loops are [[Iterate.fixpoint]]s). The per-round
+  * convergence probe is a LIMIT-1 scan of the pinned round. Fails
+  * loudly if `maxRounds` phases don't converge
   * (ASSIGNING a wrong component silently is the one unacceptable
   * outcome).
   *
@@ -124,58 +125,51 @@ object Scc {
         // 2. forward-min coloring to fixpoint. The previous color rides
         //    through the aggregation (min ignores nulls; every node has
         //    exactly one current-color row), so the convergence probe
-        //    is a filter over the checkpointed round output.
-        var c = verts.select(col("node"), col("node").as("color")).localCheckpoint()
-        var changed = true
-        var r = 0
-        while (changed && r < maxRounds) {
-          val msgs = edges.join(c, edges("src") === c("node"))
-            .select(edges("dst").as("node"), col("color"), lit(null).cast(c.schema("color").dataType).as("old"))
-          val c2 = c.select(col("node"), col("color"), col("color").as("old"))
-            .unionByName(msgs)
-            .groupBy(col("node")).agg(min(col("color")).as("color"), min(col("old")).as("old"))
-            .localCheckpoint()
-          changed = !c2.filter(col("color") =!= col("old")).isEmpty
-          c = c2.select(col("node"), col("color"))
-          r += 1
-        }
-        require(!changed,
+        //    is a filter over the pinned round output.
+        val c0 = verts.select(col("node"), col("node").as("color")).localCheckpoint()
+        val (c, _, colored) = Iterate.fixpoint(c0, maxRounds,
+          cur => {
+            val msgs = edges.join(cur, edges("src") === cur("node"))
+              .select(edges("dst").as("node"), col("color"),
+                lit(null).cast(cur.schema("color").dataType).as("old"))
+            cur.select(col("node"), col("color"), col("color").as("old"))
+              .unionByName(msgs)
+              .groupBy(col("node")).agg(min(col("color")).as("color"), min(col("old")).as("old"))
+          },
+          col("color") =!= col("old"), _.select(col("node"), col("color")))
+        require(colored,
           s"coloring did not converge in $maxRounds rounds" + (if (trimCapped)
             s" — NOTE: the trim pass also hit the $maxRounds-round cap" +
               " before reaching its fixpoint, so the root cause is likely" +
               " a long chain: raise maxRounds" else ""))
         // 3. confirm backward within the color class, from the roots.
         //    Growth probe: a confirmed row is NEW iff no pre-round f
-        //    row existed for it (the rider column is null after the
-        //    min-aggregation) — scanned off the checkpointed result,
-        //    never a second join or count.
-        var f = c.filter(col("node") === col("color")).localCheckpoint()
-        var grew = true
-        var b = 0
-        while (grew && b < maxRounds) {
-          val msgs = edges.join(f, edges("dst") === f("node"))
-            .select(edges("src").as("node"), f("color").as("mcolor"))
-          val joined = msgs.join(c, Seq("node"))
-            .filter(col("color") === col("mcolor"))
-            .select(col("node"), col("color"), lit(0).as("w"))
-          val f2full = f.select(col("node"), col("color"), lit(1).as("w"))
-            .unionByName(joined)
-            .groupBy(col("node"), col("color")).agg(max(col("w")).as("w"))
-            .localCheckpoint()
-          grew = !f2full.filter(col("w") === 0).isEmpty
-          f = f2full.select(col("node"), col("color"))
-          b += 1
-        }
+        //    row existed for it (the rider column is 0 after the
+        //    max-aggregation) — scanned off the pinned result, never a
+        //    second join or count.
+        val f0 = c.filter(col("node") === col("color")).localCheckpoint()
+        val (f, _, confirmed) = Iterate.fixpoint(f0, maxRounds,
+          cur => {
+            val msgs = edges.join(cur, edges("dst") === cur("node"))
+              .select(edges("src").as("node"), cur("color").as("mcolor"))
+            val joined = msgs.join(c, Seq("node"))
+              .filter(col("color") === col("mcolor"))
+              .select(col("node"), col("color"), lit(0).as("w"))
+            cur.select(col("node"), col("color"), lit(1).as("w"))
+              .unionByName(joined)
+              .groupBy(col("node"), col("color")).agg(max(col("w")).as("w"))
+          },
+          col("w") === 0, _.select(col("node"), col("color")))
         // still growing at the cap ⇒ peeling now would assign a PARTIAL
         // SCC (a >maxRounds cycle loses its unconfirmed arc members to
         // wrong singletons next phase) — the one silently-wrong outcome
-        require(!grew, s"backward confirmation did not converge in $maxRounds rounds")
+        require(confirmed, s"backward confirmation did not converge in $maxRounds rounds")
         peel(f.select(col("node"), col("color").as("scc_id")))
       }
       vertsEmpty = verts.isEmpty
       phase += 1
     }
-    require(verts.limit(1).count() == 0,
+    require(vertsEmpty,
       s"SCC peeling did not converge in $maxPhases phases — raise maxPhases")
     if (done.isEmpty) verts.select(col("node"), col("node").as("scc_id"))
     else done.reduce(_ unionByName _)

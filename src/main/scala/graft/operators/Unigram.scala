@@ -127,7 +127,7 @@ object Unigram {
             emRounds: Int = 3, textCol: String = "text"): Seq[Piece] = {
     require(seedSize >= 1 && maxPieceLen >= 1 && emRounds >= 1)
     val spark = docs.sparkSession
-    val census = ConnectedComponents.checkpointTruncated(
+    val census = Iterate.pin(
       Bpe.wordCounts(docs, textCol))
     val seed = seedPieces(census, seedSize, maxPieceLen)
       .select(col("piece"), col("freq")).as(Encoders.product[(String, Long)])
@@ -184,8 +184,8 @@ object Unigram {
     * of the vocab-sized count table; rounds to target =
     * O(log(seed/target) / log(1/(1−pruneFrac))) + `finalRounds` EM
     * polish passes — driver trips stay logarithmic in the seed/target
-    * ratio, never linear in vocabulary (the trainBatched lesson
-    * applied to pruning). */
+    * ratio, never linear in vocabulary (the batched merge-learning
+    * lesson of [[MergeLearner]] applied to pruning). */
   def trainPruned(docs: DataFrame, targetSize: Int, seedSize: Int = 256,
                   maxPieceLen: Int = 4, pruneFrac: Double = 0.2,
                   finalRounds: Int = 2, textCol: String = "text"): Seq[Piece] = {
@@ -193,7 +193,7 @@ object Unigram {
       s"need seedSize ($seedSize) > targetSize ($targetSize)")
     require(pruneFrac > 0.0 && pruneFrac < 1.0, s"pruneFrac in (0,1), got $pruneFrac")
     require(finalRounds >= 1)
-    val census = ConnectedComponents.checkpointTruncated(
+    val census = Iterate.pin(
       Bpe.wordCounts(docs, textCol))
     val seed = seedPieces(census, seedSize, maxPieceLen)
       .select(col("piece"), col("freq")).as(Encoders.product[(String, Long)])

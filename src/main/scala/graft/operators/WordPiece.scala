@@ -20,9 +20,9 @@ import org.apache.spark.sql.functions._
   * the distinct-WORD census (the corpus is read once), each round is
   * one pair-count aggregation + one symbol-count aggregation (both
   * map-side-combined over the vocabulary-sized table; the symbol table
-  * is tiny and broadcasts into the score join) + a 1-row argmax collect
-  * (merge metadata, the justified-collect class). Lineage truncates on
-  * the [[Bpe.train]] cadence.
+  * is tiny and broadcasts into the score join) + a batch-sized argmax
+  * collect (merge metadata, the justified-collect class). Lineage
+  * truncates on the [[MergeLearner]] cadence.
   *
   * Determinism: score = c / (lc·rc) computed as IEEE double division
   * of exact integer counts — bit-identical cross-engine (the qe05
@@ -65,137 +65,39 @@ object WordPiece {
     syms.select(col("wc"), explode(col("syms")).as("sym"))
       .groupBy(col("sym")).agg(sum(col("wc")).as("sc"))
 
-  /** Learn up to `numMerges` likelihood-scored merges. Returns the
-    * rank-ordered merge table and the final (word, wc, syms) census. */
+  /** Learn up to `numMerges` likelihood-scored merges, up to
+    * `batchSize` per scored census — the [[Bpe.train]] twin on the
+    * shared [[MergeLearner]] (batching, over-fetch, deviation
+    * contract). Returns the rank-ordered merge table and the final
+    * (word, wc, syms) census. `batchSize = 1` is strict WordPiece
+    * (qt38); larger batches are the production-vocab path (qt42) — a
+    * realistic 30k-piece BERT vocabulary would otherwise serialize
+    * into 30k Spark jobs. */
   def train(docs: DataFrame, numMerges: Int, textCol: String = "text",
-            checkpointEvery: Int = 4): (Seq[Merge], DataFrame) = {
-    require(numMerges > 0 && checkpointEvery > 0)
-    var syms = ConnectedComponents.checkpointTruncated(
+            batchSize: Int = 1,
+            onRound: (Int, Int, Double) => Unit = (_, _, _) => (),
+            overFetch: Int = 2): (Seq[Merge], DataFrame) =
+    MergeLearner.train(
       Bpe.wordCounts(docs, textCol)
-        .select(col("word"), col("wc"), initialSymbols(col("word")).as("syms")))
-    val merges = Seq.newBuilder[Merge]
-    var rank = 0
-    var exhausted = false
-    while (rank < numMerges && !exhausted) {
-      val sc = symbolCounts(syms)
-      val top = Bpe.pairCounts(syms)
-        .join(broadcast(sc.select(col("sym").as("l"), col("sc").as("lc"))), "l")
-        .join(broadcast(sc.select(col("sym").as("r"), col("sc").as("rc"))), "r")
-        .withColumn("score",
-          col("c").cast("double") / (col("lc").cast("double") * col("rc").cast("double")))
-        .orderBy(desc("score"), asc("l"), asc("r"))
-        .limit(1).select("l", "r", "c", "lc", "rc").collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val (l, r) = (top(0).getString(0), top(0).getString(1))
-        merges += Merge(rank, l, r, top(0).getLong(2), top(0).getLong(3), top(0).getLong(4))
-        syms = syms.withColumn("syms", Bpe.mergeOnceTo(col("syms"), l, r, merged(l, r)))
-        rank += 1
-        if (rank % checkpointEvery == 0)
-          syms = ConnectedComponents.checkpointTruncated(syms)
-      }
-    }
-    (merges.result(), syms)
-  }
+        .select(col("word"), col("wc"), initialSymbols(col("word")).as("syms")),
+      numMerges, batchSize, onRound, overFetch, ranked, merged)
 
-  /** Batched likelihood-scored merge learning — the production-vocab
-    * path, the [[Bpe.trainBatched]] twin. Strict [[train]] needs one
-    * (pair census + symbol census + argmax) round-trip PER MERGE; a
-    * realistic 30k-piece BERT vocabulary would serialize into 30k
-    * Spark jobs. This mode learns up to `batchSize` merges per round
-    * from a single scored census, selected greedily subject to
-    * SYMBOL-DISJOINTNESS (no symbol — left, right, or the fused
-    * spelling — in two selected pairs), all applied in one rewrite
-    * pass.
-    *
-    * Deviation contract (same proof shape as BPE's, with one extra
-    * observation for the likelihood score): merging (a,b) changes
-    * only pair counts touching a/b AND only the symbol counts of
-    * a, b, ab themselves — so for a symbol-disjoint pair (x,y),
-    * count(x,y), count(x) and count(y) are all untouched and its
-    * score is exactly what strict WordPiece would compute after the
-    * earlier merges. Vocabularies can differ only when a pair CREATED
-    * by an earlier merge in the batch would have out-scored a later
-    * selection. batchSize=1 recovers [[train]] bit-for-bit
-    * (spec-pinned), as is batched==strict on non-interacting corpora.
-    *
-    * Scale shape: driver round-trips drop from numMerges to
-    * ceil(numMerges/batchSize); each round is one pair census + one
-    * symbol census (both map-side-combined, symbol table broadcast
-    * into the score join) + a batchSize-row collect (merge metadata,
-    * the justified-collect class). */
-  def trainBatched(docs: DataFrame, numMerges: Int, textCol: String = "text",
-                   batchSize: Int = 64, checkpointEvery: Int = 4,
-                   onRound: (Int, Int, Double) => Unit = (_, _, _) => (),
-                   overFetch: Int = 2): (Seq[Merge], DataFrame) = {
-    require(numMerges > 0 && batchSize > 0 && checkpointEvery > 0 && overFetch >= 1)
-    val spark = docs.sparkSession
-    var syms = ConnectedComponents.checkpointTruncated(
-      Bpe.wordCounts(docs, textCol)
-        .select(col("word"), col("wc"), initialSymbols(col("word")).as("syms")))
-    val merges = Seq.newBuilder[Merge]
-    var rank = 0
-    var round = 0
-    var exhausted = false
-    while (rank < numMerges && !exhausted) {
-      val t0 = System.nanoTime()
-      // over-fetch window (default 2x, oracle-pinned — see
-      // Bpe.trainBatched for the tie-regime analysis)
-      val want = math.min(batchSize, numMerges - rank)
-      val sc = symbolCounts(syms)
-      val top = Bpe.pairCounts(syms)
-        .join(broadcast(sc.select(col("sym").as("l"), col("sc").as("lc"))), "l")
-        .join(broadcast(sc.select(col("sym").as("r"), col("sc").as("rc"))), "r")
-        .withColumn("score",
-          col("c").cast("double") / (col("lc").cast("double") * col("rc").cast("double")))
-        .orderBy(desc("score"), asc("l"), asc("r"))
-        .limit(want * overFetch).select("l", "r", "c", "lc", "rc").collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val selected = selectDisjoint(
-          top.toSeq.map(x => (x.getString(0), x.getString(1),
-            x.getLong(2), x.getLong(3), x.getLong(4))),
-          want, rankBase = rank)
-        merges ++= selected
-        rank += selected.size
-        val ops = selected.map(m => (m.left, m.right, m.merged))
-        val bc = spark.sparkContext.broadcast(ops)
-        val rewrite = udf { (s: Seq[String]) =>
-          // presence skip — see Bpe.trainBatched: exact under the
-          // disjointness contract, O(1) per non-applicable op
-          val present = s.toSet
-          bc.value.foldLeft(s.toVector)((acc, p) =>
-            if (present(p._1) && present(p._2))
-              Bpe.greedyMergePassTo(acc, p._1, p._2, p._3)
-            else acc)
-        }
-        syms = syms.withColumn("syms", rewrite(col("syms")))
-        round += 1
-        if (round % checkpointEvery == 0)
-          syms = ConnectedComponents.checkpointTruncated(syms)
-        onRound(round, rank, (System.nanoTime() - t0) / 1e9)
+  /** The pair census scored by likelihood gain, ranked by (score desc,
+    * l, r): the top `n` pairs. The symbol table is tiny and broadcasts
+    * into the score join. */
+  private def ranked(syms: DataFrame, n: Int): Seq[MergeLearner.Candidate[Merge]] = {
+    val sc = symbolCounts(syms)
+    Bpe.pairCounts(syms)
+      .join(broadcast(sc.select(col("sym").as("l"), col("sc").as("lc"))), "l")
+      .join(broadcast(sc.select(col("sym").as("r"), col("sc").as("rc"))), "r")
+      .withColumn("score",
+        col("c").cast("double") / (col("lc").cast("double") * col("rc").cast("double")))
+      .orderBy(desc("score"), asc("l"), asc("r"))
+      .limit(n).select("l", "r", "c", "lc", "rc").collect().toSeq
+      .map { x =>
+        val (l, r) = (x.getString(0), x.getString(1))
+        (l, r, Merge(_, l, r, x.getLong(2), x.getLong(3), x.getLong(4)))
       }
-    }
-    (merges.result(), syms)
-  }
-
-  /** Greedy symbol-disjoint selection from one scored census — the
-    * [[Bpe.selectDisjoint]] twin with the `##`-stripped fused spelling
-    * in the claimed-symbol set. Pure function, spec-pinned. */
-  private[operators] def selectDisjoint(ranked: Seq[(String, String, Long, Long, Long)],
-                                        want: Int, rankBase: Int): Seq[Merge] = {
-    val used = scala.collection.mutable.Set[String]()
-    val batch = Seq.newBuilder[Merge]
-    var n = 0
-    ranked.foreach { case (l, r, c, lc, rc) =>
-      val m = merged(l, r)
-      if (n < want && !used(l) && !used(r) && !used(m)) {
-        batch += Merge(rankBase + n, l, r, c, lc, rc)
-        used ++= Seq(l, r, m)
-        n += 1
-      }
-    }
-    batch.result()
   }
 
   /** Encode one word by replaying the merges in rank order —

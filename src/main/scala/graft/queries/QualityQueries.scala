@@ -1709,7 +1709,7 @@ object QualityQueries {
       |  round(MIN(fk), 6) min_grade, round(MAX(fk), 6) max_grade
       |FROM f GROUP BY source ORDER BY source""".stripMargin
 
-  /** qt42 oracle machinery — [[WordPiece.trainBatched]] replayed in
+  /** qt42 oracle machinery — [[WordPiece.train]] at `batchSize = 4` replayed in
     * DuckDB. Per unrolled round: pair + symbol censuses, the scored
     * ranking, the greedy SYMBOL-DISJOINT selection as a recursive CTE
     * walking the top 2·want rows with a claimed-symbol list (left,
@@ -1812,7 +1812,7 @@ object QualityQueries {
        |FROM ($finals) ORDER BY rank""".stripMargin
   }
 
-  /** qt43 oracle machinery — [[Bpe.trainBatched]] replayed in DuckDB:
+  /** qt43 oracle machinery — [[Bpe.train]] at `batchSize = 4` replayed in DuckDB:
     * the qt42 generator with BPE's decisions (rank by raw pair count,
     * `</w>` end-of-word sentinel, merged spelling = l || r, claimed
     * set {l, r, l||r}). The sf0.01 trajectory exercises the
@@ -1899,7 +1899,7 @@ object QualityQueries {
        |FROM ($finals) ORDER BY rank""".stripMargin
   }
 
-  /** qt43: [[Bpe.trainBatched]] gated end-to-end — the remaining
+  /** qt43: [[Bpe.train]] at `batchSize = 4` gated end-to-end — the remaining
     * spec-only trainer mode, completing the production-path gate
     * coverage of the tokenizer triad (qt41 pruned Unigram, qt42
     * batched WordPiece, this one batched BPE). numMerges=8 /
@@ -1908,7 +1908,7 @@ object QualityQueries {
     * contract allows. */
   def bpeVocabBatched(t: Tables): DataFrame = {
     import t.spark.implicits._
-    val (merges, _) = Bpe.trainBatched(t.documents,
+    val (merges, _) = Bpe.train(t.documents,
       numMerges = WpBatchedMerges, batchSize = WpBatchSize)
     t.spark.catalog.clearCache()
     merges.map(m => (m.rank, m.left, m.right, m.merged, m.pairCount))
@@ -1916,7 +1916,7 @@ object QualityQueries {
       .orderBy($"rank")
   }
 
-  /** qt42: [[WordPiece.trainBatched]] gated end-to-end — the
+  /** qt42: [[WordPiece.train]] at `batchSize = 4` gated end-to-end — the
     * production-vocab path (up to batchSize symbol-disjoint merges per
     * scored census, measured per-merge wall FLAT in vocab size),
     * previously pinned only by specs. numMerges=8 / batchSize=4: the
@@ -1928,7 +1928,7 @@ object QualityQueries {
     * included. */
   def wordPieceVocabBatched(t: Tables): DataFrame = {
     import t.spark.implicits._
-    val (merges, _) = WordPiece.trainBatched(t.documents,
+    val (merges, _) = WordPiece.train(t.documents,
       numMerges = WpBatchedMerges, batchSize = WpBatchSize)
     t.spark.catalog.clearCache()
     merges.map(m => (m.rank, m.left, m.right, m.merged,

@@ -228,7 +228,7 @@ object DumpPlans {
        "Six reflect+swap rounds, each ONE projection stage (linear expression tree — a single nested expression would double per round), all codegen'd integer ops; no Join, no Window, one partial-aggregated bucket census. Hilbert ordering costs exactly what Z-order costs: a scan.",
        fmt(graft.queries.LayoutQueries.hilbertLayout(t))),
       ("qg08_landmark_close — k BFS fronts, per-round barrier",
-       "Each relaxation round: one equi join of the materialized |V|·k distance frame against the edge list + one min aggregation. The per-round checkpointTruncated is load-bearing: the frame is referenced twice per round (join + union), and without the barrier the plan subtree doubles per round — measured 57 s → 1.5 s at sf0.1 for 8 rounds.",
+       "Each relaxation round: one equi join of the materialized |V|·k distance frame against the edge list + one min aggregation. The per-round Iterate.pin is load-bearing: the frame is referenced twice per round (join + union), and without the barrier the plan subtree doubles per round — measured 57 s → 1.5 s at sf0.1 for 8 rounds.",
        fmt(graft.queries.ExtendedQueries.landmarkCloseness(t))),
       ("qs13_mutual_knn — cell-keyed reciprocity",
        "The 8-row centroid frame broadcasts into the assignment argmin; pairs join on the cell key only (never all-pairs); the per-id top-k window is cell-bounded and plans as WindowGroupLimit (per-partition top-k pre-filter before the full window sort); mutuality is a self-join of the two candidate-sized ranked lists.",

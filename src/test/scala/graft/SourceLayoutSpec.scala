@@ -9,7 +9,9 @@ import scala.jdk.CollectionConverters._
   * from `graft.tools.DumpPlans` — not from one-off programs that each
   * install their own listener. Directory swaps go through
   * [[graft.hfc.StoreProtocol]], the one module that knows the
-  * crash-safe swap protocol. */
+  * crash-safe swap protocol; iterative pins go through
+  * [[graft.operators.Iterate]], the one module that knows the
+  * statistics-truncation policy. */
 class SourceLayoutSpec extends AnyFunSuite {
 
   private lazy val sources: Seq[(Path, String)] = {
@@ -39,6 +41,15 @@ class SourceLayoutSpec extends AnyFunSuite {
     val callers = sources.map(_._1.getFileName.toString).zip(sources.map(_._2))
       .collect { case (f, src) if src.contains("AtomicSwap.") && f != "AtomicSwap.scala" => f }
     assert(callers == Seq("StoreProtocol.scala"))
+  }
+
+  test("src/main truncates plan statistics in Iterate only") {
+    val rebuild = """createDataFrame\(\s*(\w+)\.rdd\s*,\s*\1\.schema\s*\)""".r
+    val found = sources.collect { case (p, src)
+        if src.contains("checkpointTruncated") || rebuild.findFirstIn(src).nonEmpty =>
+      p.getFileName.toString
+    }
+    assert(found == Seq("Iterate.scala"))
   }
 
   test("the only main entry points are Bench, Verify, GenRelational and DumpPlans") {

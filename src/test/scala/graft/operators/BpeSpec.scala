@@ -67,22 +67,10 @@ class BpeSpec extends SparkTestBase {
     assert(got(3L) === ((2L, 2L, 1.0)))
   }
 
-  test("trainBatched with batchSize=1 is bit-identical to strict sequential BPE") {
-    val docs = graft.Tables(spark, sf0001).documents
-    val (seq, seqSyms) = Bpe.train(docs, numMerges = 8)
-    val (bat, batSyms) = Bpe.trainBatched(docs, numMerges = 8, batchSize = 1)
-    assert(bat === seq)
-    val a = seqSyms.orderBy($"word").collect().map(r =>
-      (r.getString(0), r.getAs[Seq[String]]("syms")))
-    val b = batSyms.orderBy($"word").collect().map(r =>
-      (r.getString(0), r.getAs[Seq[String]]("syms")))
-    assert(a === b, "final symbol tables diverge")
-  }
-
-  test("trainBatched == sequential when the selected merges are non-interacting") {
+  test("batchSize=4 == batchSize=1 when the selected merges are non-interacting") {
     // two word families on disjoint alphabets with separated counts:
     //   "abab"×100 → (a,b):200 ... ; "cdcd"×90 → (c,d):180 ...
-    // sequential: (a,b):200, (c,d):180, (ab,</w>):100
+    // batched(1): (a,b):200, (c,d):180, (ab,</w>):100
     // batched(4): round 1 selects (a,b)+(c,d) — every other top pair
     // shares a symbol and is skipped — round 2 re-censuses and picks
     // (ab,</w>): identical vocabulary, 2 rounds instead of 3.
@@ -91,7 +79,7 @@ class BpeSpec extends SparkTestBase {
       (1 to 90).map(i => (1000L + i, "cdcd"))
     ).toDF("doc_id", "text")
     val (seq, _) = Bpe.train(docs, numMerges = 3)
-    val (bat, _) = Bpe.trainBatched(docs, numMerges = 3, batchSize = 4)
+    val (bat, _) = Bpe.train(docs, numMerges = 3, batchSize = 4)
     assert(seq.map(m => (m.left, m.right, m.pairCount)) === Seq(
       ("a", "b", 200L), ("c", "d", 180L), ("ab", E, 100L)))
     assert(bat === seq)
@@ -106,7 +94,9 @@ class BpeSpec extends SparkTestBase {
       ("ab", "z", 70L),   // skip: 'ab' is rank-0's merged symbol
       ("e", "f", 60L),    // take (rank 2)
       ("g", "h", 50L))    // capped by want=3
-    val got = Bpe.selectDisjoint(ranked, want = 3, rankBase = 5)
+    val got = MergeLearner.selectDisjoint(
+      ranked.map { case (l, r, c) => (l, r, Bpe.Merge(_: Int, l, r, c)) },
+      want = 3, rankBase = 5, spell = _ + _).map(_._3)
     assert(got.map(m => (m.left, m.right, m.pairCount)) ===
       Seq(("a", "b", 100L), ("c", "d", 80L), ("e", "f", 60L)))
     assert(got.map(_.rank) === Seq(5, 6, 7))

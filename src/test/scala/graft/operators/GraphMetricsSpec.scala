@@ -67,7 +67,7 @@ class GraphMetricsSpec extends SparkTestBase {
   }
 
   test("pageRank iters=30 on a 10k-node path: in-loop truncation keeps the plan flat") {
-    // without checkpointTruncated every 3 rounds this compounds 30
+    // without Iterate.rounds' pin every 3 rounds this compounds 30
     // join+agg layers into one plan and analysis time dominates; with
     // it, each segment is 3 layers deep regardless of iters
     val path = (0L until 9999L).map(i => (i, i + 1)).toDF("a", "b")

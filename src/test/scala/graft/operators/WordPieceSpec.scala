@@ -96,38 +96,26 @@ class WordPieceSpec extends SparkTestBase {
     assert(WordPiece.encodeWordLongestMatch("qa", vocab) === Vector("[UNK]"))
   }
 
-  test("trainBatched with batchSize=1 is bit-identical to strict sequential WordPiece") {
-    val docs = graft.Tables(spark, sf0001).documents
-    val (seq, seqSyms) = WordPiece.train(docs, numMerges = 8)
-    val (bat, batSyms) = WordPiece.trainBatched(docs, numMerges = 8, batchSize = 1)
-    assert(bat === seq)
-    val a = seqSyms.orderBy($"word").collect().map(r =>
-      (r.getString(0), r.getAs[Seq[String]]("syms")))
-    val b = batSyms.orderBy($"word").collect().map(r =>
-      (r.getString(0), r.getAs[Seq[String]]("syms")))
-    assert(a === b, "final symbol tables diverge")
-  }
-
-  test("trainBatched == sequential when the selected merges are non-interacting") {
+  test("batchSize=4 == batchSize=1 when the selected merges are non-interacting") {
     // two 2-char word families on disjoint alphabets (cascades would
     // NOT be non-interacting under likelihood scoring — a fused pair's
     // score rises as its parts rarefy — so keep each family to one
-    // possible merge): strict learns (c,##d) then (a,##b) in two
-    // rounds; batched selects both, disjointly, from one census
+    // possible merge): batchSize=1 learns (c,##d) then (a,##b) in two
+    // rounds; batchSize=4 selects both, disjointly, from one census
     val docs = (
       (1 to 100).map(i => (i.toLong, "ab")) ++
       (1 to 90).map(i => (1000L + i, "cd"))
     ).toDF("doc_id", "text")
     val (seq, _) = WordPiece.train(docs, numMerges = 3)
-    val (bat, _) = WordPiece.trainBatched(docs, numMerges = 3, batchSize = 4)
+    val (bat, _) = WordPiece.train(docs, numMerges = 3, batchSize = 4)
     assert(bat === seq)
   }
 
-  test("trainBatched on the hand-computed corpus recovers the strict trajectory") {
+  test("batchSize=4 on the hand-computed corpus recovers the strict trajectory") {
     // the three training merges live on disjoint symbols, so even
     // batchSize=4 must reproduce the strict result exactly
     val (seq, _) = WordPiece.train(corpus, numMerges = 10)
-    val (bat, _) = WordPiece.trainBatched(corpus, numMerges = 10, batchSize = 4)
+    val (bat, _) = WordPiece.train(corpus, numMerges = 10, batchSize = 4)
     assert(bat.map(m => (m.left, m.right, m.merged)) ===
       seq.map(m => (m.left, m.right, m.merged)))
   }
@@ -139,7 +127,9 @@ class WordPieceSpec extends SparkTestBase {
       ("##x", "##y", 80L, 8L, 8L),   // take (rank 1), claims {##x, ##y, ##xy}
       ("p", "##xy", 70L, 7L, 7L),    // skip: '##xy' claimed by rank 1
       ("q", "##r", 60L, 6L, 6L))     // capped by want=2
-    val got = WordPiece.selectDisjoint(ranked, want = 2, rankBase = 3)
+    val got = MergeLearner.selectDisjoint(
+      ranked.map { case (l, r, c, lc, rc) => (l, r, WordPiece.Merge(_: Int, l, r, c, lc, rc)) },
+      want = 2, rankBase = 3, spell = WordPiece.merged).map(_._3)
     assert(got.map(m => (m.left, m.right, m.merged)) ===
       Seq(("a", "##b", "ab"), ("##x", "##y", "##xy")))
     assert(got.map(_.rank) === Seq(3, 4))
