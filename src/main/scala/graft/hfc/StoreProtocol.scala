@@ -48,7 +48,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * batch appends its unique rows ([[appendUnique]]) and, once its
   * outputs are written, the sink stamps `<store>.applied/batch-N`
   * ([[markApplied]]); a re-delivered batch whose marker exists
-  * ([[batchApplied]]) re-computes its decisions without appending. The
+  * ([[batchApplied]]) re-computes its decisions without appending.
+  * Every streaming sink over append stores runs this as one step,
+  * [[oncePerBatch]]. The
   * marker lives BESIDE the store, so no swap of the store ever moves
   * it. Crash window: between the append and the marker. A replay then
   * appends the same rows again — bit-identical, because every stored
@@ -248,6 +250,20 @@ object StoreProtocol {
   def markApplied(spark: SparkSession, batchId: Long, stores: String*): Unit = {
     val f = fs(spark)
     stores.foreach(s => f.create(siblingMarker(s, batchId), true).close())
+  }
+
+  /** The append-store sink step: run micro-batch `batchId` once over
+    * `stores`. `body` gets the stores whose sibling marker for the
+    * batch is absent (each recovered first, as [[batchApplied]] does)
+    * — those must append, the others re-decide without appending —
+    * and once it returns every store is stamped applied. A `body` that
+    * throws stamps nothing, so the re-delivered batch runs it again;
+    * a crash between two stamps leaves some stores pending, and the
+    * replay appends to those only. */
+  def oncePerBatch(spark: SparkSession, batchId: Long, stores: String*)
+                  (body: Set[String] => Unit): Unit = {
+    body(stores.filterNot(batchApplied(spark, _, batchId)).toSet)
+    markApplied(spark, batchId, stores: _*)
   }
 
   /** Rewrite stores: is batch `batchId`'s rewrite published? */

@@ -9,9 +9,10 @@ import org.apache.spark.sql.DataFrame
   * persistent state is an (id, frame_idx, hash) table — one 8-byte
   * hash per SAMPLED frame (≤ nFrames rows/clip, ~20 B/frame), and each
   * batch costs one banded store+self pair join
-  * ([[Multimodal.frameHashPairs]]: the store side stays exact-banded —
-  * the side that grows forever never fans out, even in the MIH probe
-  * regime) plus the distinct-frame vote of
+  * ([[Multimodal.hammingPairs]] carrying the frame index, the funnel
+  * [[IncrementalHashDedup]] runs per hash: the store side stays
+  * exact-banded — the side that grows forever never fans out, even in
+  * the MIH probe regime) plus the distinct-frame vote of
   * [[Multimodal.frameVoteNearDup]].
   *
   * Decision semantics (the qm12 oracle replays them from scratch):
@@ -73,8 +74,8 @@ object IncrementalFrameDedup {
     // ONE probe-side explosion against the unioned targets (store ∪
     // batch); store and batch targets are disjoint after the guard, so
     // batch-side pairs are exactly those whose target is a batch id
-    val pairs = Multimodal.frameHashPairs(batch, store.unionByName(batch),
-        "id", "frame", "hash", bands, bandBits, maxHamming, probeTolerance)
+    val pairs = Multimodal.hammingPairs(batch, store.unionByName(batch),
+        "id", "hash", bands, bandBits, maxHamming, probeTolerance, Some("frame"))
       .join(broadcast(batchIds.select(col("id").as("target_id"),
         lit(true).as("from_batch"))), Seq("target_id"), "left")
       .filter(col("from_batch").isNull || col("target_id") < col("probe_id"))

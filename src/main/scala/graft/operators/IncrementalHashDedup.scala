@@ -11,10 +11,11 @@ import org.apache.spark.sql.DataFrame
   * smallest store in the library — and each batch costs one banded
   * self+store join plus a popcount verify.
   *
-  * Hash space is hamming, not Jaccard, so banding uses the pigeonhole
-  * split of [[Multimodal.hashNearDup]]: `bands` contiguous
-  * `bandBits`-bit keys, and while `bands > maxHamming` every true pair
-  * shares at least one exact band — recall 1.0, never all-pairs. The
+  * Hash space is hamming, not Jaccard, so each batch runs the banded
+  * pair funnel [[Multimodal.hammingPairs]] (batch probe, store ∪ batch
+  * target): `bands` contiguous `bandBits`-bit keys, and while
+  * `bands > maxHamming` every true pair shares at least one exact
+  * band — recall 1.0, never all-pairs. The
   * hash column is caller-supplied ([[Multimodal.withPerceptualHash]]
   * for real images, [[Multimodal.textDhash56]]/[[Multimodal.textAudioFp32]]
   * for the oracle-twin stubs) so one store design serves every
@@ -41,7 +42,7 @@ object IncrementalHashDedup {
     *
     * `probeTolerance` = 0 is the narrow pigeonhole regime
     * (`bands > maxHamming`); 1 switches to multi-index hashing
-    * ([[Multimodal.hashNearDupMih]]'s scheme): the BATCH side probes
+    * ([[Multimodal.hammingPairs]] at tolerance 1): the BATCH side probes
     * each band with its exact key plus every single-bit flip, the
     * store/batch target side stays exact-banded, and recall 1.0 holds
     * while `bands × (tolerance+1) > maxHamming` — wide bands (e.g.
@@ -56,16 +57,28 @@ object IncrementalHashDedup {
                  appendUnique: Boolean = true,
                  probeTolerance: Int = 0,
                  maxExactStoreRows: Long = DefaultMaxExactStoreRows): DataFrame = {
-    require(probeTolerance >= 0 && probeTolerance <= 1,
-      s"probeTolerance must be 0 (narrow bands) or 1 (MIH), got $probeTolerance")
-    require(bands * (probeTolerance + 1) > maxHamming,
-      s"pigeonhole recall needs bands x (tolerance+1) > maxHamming " +
-      s"(got $bands x ${probeTolerance + 1} <= $maxHamming)")
-    require(bands * bandBits <= 64, "bands x bandBits must fit the 64-bit hash")
     val batch = newHashes
       .select(col(idCol).as("id"), col(hashCol).cast("long").as("hash"))
       .localCheckpoint(true) // referenced by banding, verify, and append
     val store = graft.hfc.StoreProtocol.read(newHashes.sparkSession, storePath, batch.schema)
+
+    // one probe-side explosion against the unioned targets (store ∪
+    // batch), each tagged by origin for the replay guard
+    val targets = store.withColumn("from_store", lit(true))
+      .unionByName(batch.withColumn("from_store", lit(false)))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("probe_id"))
+      .orderBy(col("hamming").asc, col("target_id").asc)
+    val best = Multimodal.hammingPairs(batch, targets, "id", "hash",
+        bands, bandBits, maxHamming, probeTolerance,
+        // target_id =!= probe_id on the store side: crash-replay guard —
+        // a re-run batch whose append landed must not self-match at 0
+        pairFilter = Some(
+          (col("from_store") && col("target_id") =!= col("probe_id")) ||
+          (!col("from_store") && col("target_id") < col("probe_id"))))
+      .withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
+      .select(col("probe_id").as("id"), col("target_id").as("dup_of"), col("hamming"))
+
     // r13 verdict #5 — the birthday bound, AUTOMATED: in the EXACT
     // regime (maxHamming = 0) a hash collision is a silently wrong
     // drop, and for the ≤64-bit keys this store holds (key60 md5-60,
@@ -75,7 +88,8 @@ object IncrementalHashDedup {
     // silently. Near-dup regimes (maxHamming > 0) tolerate collisions
     // by design (the verify is a distance check, not identity) and are
     // exempt. The count is a columnless parquet scan — cheap next to
-    // the banded join that reads the same store rows right after.
+    // the banded join above, which reads the same store rows when the
+    // decisions pin below.
     if (maxHamming == 0) {
       val storeRows = store.count()
       require(storeRows <= maxExactStoreRows,
@@ -86,49 +100,6 @@ object IncrementalHashDedup {
           "(initStringStore/exactDedupBatchString); raise " +
           "maxExactStoreRows only for keys with >60 real bits")
     }
-
-    val mask = (1L << bandBits) - 1
-    def bandKey(b: Int) = shiftright(col("hash"), b * bandBits).bitwiseAND(lit(mask))
-    def banded(t: DataFrame) = t.select(col("id"), col("hash"),
-      posexplode(array((0 until bands).map(bandKey): _*))
-        .as(Seq("band", "bkey")))
-
-    val probeSide =
-      if (probeTolerance == 0) banded(batch)
-      else batch.select(col("id"), col("hash"),
-        posexplode(array((0 until bands).flatMap(b =>
-          bandKey(b) +: (0 until bandBits).map(j =>
-            bandKey(b).bitwiseXOR(lit(1L << j)))): _*))
-          .as(Seq("slot", "bkey")))
-        .select(col("id"), col("hash"),
-          (col("slot") / (bandBits + 1)).cast("int").as("band"), col("bkey"))
-    val probe = probeSide
-      .select(col("id").as("new_id"), col("hash").as("n_hash"),
-        col("band"), col("bkey"))
-    val targets = banded(store)
-      .select(col("id").as("old_id"), col("hash").as("o_hash"),
-        col("band"), col("bkey"), lit(true).as("from_store"))
-      .union(banded(batch)
-        .select(col("id").as("old_id"), col("hash").as("o_hash"),
-          col("band"), col("bkey"), lit(false).as("from_store")))
-    val cands = probe.join(targets, Seq("band", "bkey"))
-      // old_id =!= new_id on the store side: crash-replay guard — a
-      // re-run batch whose append landed must not self-match at 0
-      .filter((col("from_store") && col("old_id") =!= col("new_id")) ||
-              (!col("from_store") && col("old_id") < col("new_id")))
-      .select(col("new_id"), col("old_id"), col("n_hash"), col("o_hash"))
-      .distinct()
-
-    val scored = cands
-      .withColumn("hamming",
-        bit_count(col("n_hash").bitwiseXOR(col("o_hash"))).cast("long"))
-      .filter(col("hamming") <= maxHamming)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("new_id"))
-      .orderBy(col("hamming").asc, col("old_id").asc)
-    val best = scored
-      .withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
-      .select(col("new_id").as("id"), col("old_id").as("dup_of"), col("hamming"))
 
     val decisions = batch.select(col("id"))
       .join(best, Seq("id"), "left")

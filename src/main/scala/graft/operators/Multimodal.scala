@@ -661,6 +661,76 @@ object Multimodal {
     }(enc)
   }
 
+  /** Band key `b` of a hash: its bits [b·bandBits, (b+1)·bandBits). */
+  private def bandKey(hash: Column, b: Int, bandBits: Int): Column =
+    shiftright(hash, b * bandBits).bitwiseAND(lit((1L << bandBits) - 1))
+
+  /** Every single-bit flip of a `bandBits`-bit key. */
+  private def bitFlips(key: Column, bandBits: Int): Seq[Column] =
+    (0 until bandBits).map(j => key.bitwiseXOR(lit(1L << j)))
+
+  /** The hamming pair funnel — every verified pair between `probe` and
+    * `target` rows within `maxHamming`, the one banded join behind
+    * [[hashNearDup]], [[hashNearDupMih]], [[frameVoteNearDup]],
+    * [[IncrementalHashDedup]] and [[IncrementalFrameDedup]]. The hash
+    * splits into `bands` contiguous `bandBits`-bit keys; rows sharing a
+    * (band, key) bucket are candidates, and candidates verify with one
+    * codegen'd popcount of the xor.
+    *
+    * Recall 1.0 by the pigeonhole: `maxHamming` flips over `bands`
+    * bands leave some band with at most `probeTolerance` flips while
+    * `bands × (probeTolerance+1) > maxHamming`. At tolerance 0 (narrow
+    * bands) a true pair shares an exact band key. At tolerance 1
+    * (multi-index hashing, Norouzi, Punjani & Fleet, CVPR 2012) the
+    * PROBE side also probes every single-bit flip of each band key;
+    * XOR symmetry makes that one-sided expansion complete, so the
+    * target side — the store, in the incremental callers — stays
+    * exact-banded and never fans out.
+    *
+    * `frameCol` carries a per-row key through (the video callers'
+    * frame index, output as `probe_frame`/`target_frame`); any other
+    * target column rides under its own name to `pairFilter` (an
+    * incremental wave's store/batch tag) and is dropped before the
+    * distinct. `pairFilter` is the caller's id-order or replay guard,
+    * applied to the joined candidates before the distinct. Returns
+    * (probe_id, [probe_frame,] target_id, [target_frame,] hamming);
+    * only ids, frame indexes and 8-byte hashes ride the shuffle. */
+  def hammingPairs(probe: DataFrame, target: DataFrame, idCol: String, hashCol: String,
+                   bands: Int, bandBits: Int, maxHamming: Int,
+                   probeTolerance: Int = 0, frameCol: Option[String] = None,
+                   pairFilter: Option[Column] = None): DataFrame = {
+    require(probeTolerance >= 0 && probeTolerance <= 1,
+      s"probeTolerance must be 0 (narrow bands) or 1 (MIH), got $probeTolerance")
+    require(bands * (probeTolerance + 1) > maxHamming,
+      s"pigeonhole recall needs bands x (tolerance+1) > maxHamming " +
+      s"(got $bands x ${probeTolerance + 1} <= $maxHamming)")
+    require(bands * bandBits <= 64, "bands x bandBits must fit the 64-bit hash")
+    def key(b: Int) = bandKey(col(hashCol), b, bandBits)
+    def all(t: DataFrame) = t.columns.toSeq.map(col)
+    def banded(t: DataFrame) = t.select(all(t) :+
+      posexplode(array((0 until bands).map(key): _*)).as(Seq("band", "bkey")): _*)
+    val probeSide =
+      if (probeTolerance == 0) banded(probe)
+      else probe.select(all(probe) :+ posexplode(array((0 until bands).flatMap(b =>
+          key(b) +: bitFlips(key(b), bandBits)): _*)).as(Seq("slot", "bkey")): _*)
+        .select(all(probe) ++ Seq(
+          (col("slot") / (bandBits + 1)).cast("int").as("band"), col("bkey")): _*)
+    def side(name: String, hashAs: String) = Seq(col(idCol).as(s"${name}_id")) ++
+      frameCol.map(f => col(f).as(s"${name}_frame")) :+ col(hashCol).as(hashAs)
+    val riders = target.columns.filterNot((Seq(idCol, hashCol) ++ frameCol).contains).map(col)
+    val joined = probeSide.select(side("probe", "p_h") ++ Seq(col("band"), col("bkey")): _*)
+      .join(banded(target).select(side("target", "t_h") ++ riders ++
+        Seq(col("band"), col("bkey")): _*), Seq("band", "bkey"))
+    val out = Seq("probe_id") ++ frameCol.map(_ => "probe_frame") ++
+      Seq("target_id") ++ frameCol.map(_ => "target_frame")
+    pairFilter.fold(joined)(joined.filter)
+      .select((out ++ Seq("p_h", "t_h")).map(col): _*)
+      .distinct()
+      .withColumn("hamming", bit_count(col("p_h").bitwiseXOR(col("t_h"))).cast("long"))
+      .filter(col("hamming") <= maxHamming)
+      .select((out :+ "hamming").map(col): _*)
+  }
+
   /** Hash-banded near-dup over ANY integer perceptual hash column —
     * the qd-funnel shape on hamming space: split the hash into `bands`
     * contiguous `bandBits`-bit keys, docs sharing a (band, key) bucket
@@ -669,7 +739,9 @@ object Multimodal {
     * `maxHamming` bands, so while `bands > maxHamming` every true pair
     * shares at least one EXACT band — recall 1.0, never all-pairs.
     * One explode (x bands), one key-shuffled self-join, codegen'd
-    * popcount verify — the image twin of simhash64 dedup.
+    * popcount verify — the image twin of simhash64 dedup. The body is
+    * [[hashNearDupMih]]'s at per-band tolerance 0 (MihSpec pins the two
+    * equal there), so both run [[hammingPairs]].
     *
     * Output (qd13 conventions): one row per input id, `dup_of` = the
     * smallest candidate id within `maxHamming` (null when none),
@@ -678,40 +750,7 @@ object Multimodal {
                   bands: Int, bandBits: Int, maxHamming: Int): DataFrame = {
     require(bands > maxHamming,
       s"pigeonhole recall needs bands ($bands) > maxHamming ($maxHamming)")
-    require(bands * bandBits <= 64, "bands x bandBits must fit the 64-bit hash")
-    import org.apache.spark.sql.expressions.Window
-    val mask = (1L << bandBits) - 1
-    // materialize the (id, hash) table once: it is referenced by BOTH
-    // self-join sides and the final left join, and the hash column may
-    // be an expensive derivation (the Dedup signature-cache pattern) —
-    // 9-16 bytes/doc of state vs recomputing the hash 3x. Eager
-    // localCheckpoint (not persist) so the blocks are owned by the RDD
-    // lineage and GC'd with it — a persist here would leak one cached
-    // relation in the cache manager per invocation of a long session.
-    val h = hashes.select(col(idCol), col(hashCol)).localCheckpoint(true)
-    val banded = h.select(col(idCol), col(hashCol),
-      posexplode(array((0 until bands).map(b =>
-        shiftright(col(hashCol), b * bandBits).bitwiseAND(lit(mask))): _*))
-        .as(Seq("band", "bkey")))
-    val cands = banded.select(col(idCol).as("a_id"), col(hashCol).as("a_h"),
-        col("band"), col("bkey"))
-      .join(banded.select(col(idCol).as("b_id"), col(hashCol).as("b_h"),
-        col("band"), col("bkey")), Seq("band", "bkey"))
-      .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"), col("a_h"), col("b_h"))
-      .distinct()
-    val hits = cands
-      .withColumn("hamming",
-        bit_count(col("a_h").bitwiseXOR(col("b_h"))).cast("long"))
-      .filter(col("hamming") <= maxHamming)
-    val best = hits
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("b_id")).orderBy(col("a_id").asc)))
-      .filter(col("rn") === 1)
-      .select(col("b_id").as(idCol), col("a_id").as("dup_of"), col("hamming"))
-    h.join(best, Seq(idCol), "left")
-      .select(col(idCol), col(hashCol), col("dup_of"), col("hamming"),
-        col("dup_of").isNotNull.as("is_dup"))
+    hashNearDupMih(hashes, idCol, hashCol, bands, bandBits, maxHamming)
   }
 
   /** Multi-index-hashing near-dup over an integer perceptual hash —
@@ -733,9 +772,9 @@ object Multimodal {
     * Cost shape: probe side explodes to bands × (1 + bandBits) rows
     * per item (t = 1: the exact key + every single-bit flip); the
     * target side stays at `bands` rows. Candidates still verify with
-    * one codegen'd popcount. t is capped at 1 — t=2 would cube the
-    * probe fan-out, and 4×16-bit bands at t=1 already cover the
-    * hamming budget any perceptual-hash dedup uses.
+    * one codegen'd popcount ([[hammingPairs]]). t is capped at 1 —
+    * t=2 would cube the probe fan-out, and 4×16-bit bands at t=1
+    * already cover the hamming budget any perceptual-hash dedup uses.
     *
     * Output contract = [[hashNearDup]]'s exactly: one row per input
     * id, `dup_of` = smallest candidate id within `maxHamming`,
@@ -745,45 +784,22 @@ object Multimodal {
     val t = maxHamming / bands
     require(t <= 1,
       s"per-band tolerance ${t} > 1 (maxHamming=$maxHamming over $bands bands): " +
-      "raise bands or use hashNearDup — t=2 probe fan-out is quadratic in bandBits")
-    require(bands * (t + 1) > maxHamming,
-      s"pigeonhole: bands*(t+1) must exceed maxHamming (got $bands*${t + 1} <= $maxHamming)")
-    require(bands * bandBits <= 64, "bands x bandBits must fit the 64-bit hash")
+      "raise bands — t=2 probe fan-out is quadratic in bandBits")
     import org.apache.spark.sql.expressions.Window
-    val mask = (1L << bandBits) - 1
+    // materialize the (id, hash) table once: it is referenced by BOTH
+    // self-join sides and the final left join, and the hash column may
+    // be an expensive derivation (the Dedup signature-cache pattern) —
+    // 9-16 bytes/doc of state vs recomputing the hash 3x. Eager
+    // localCheckpoint (not persist) so the blocks are owned by the RDD
+    // lineage and GC'd with it — a persist here would leak one cached
+    // relation in the cache manager per invocation of a long session.
     val h = hashes.select(col(idCol), col(hashCol)).localCheckpoint(true)
-    def bandKey(b: Int) = shiftright(col(hashCol), b * bandBits).bitwiseAND(lit(mask))
-    val exact = h.select(col(idCol), col(hashCol),
-      posexplode(array((0 until bands).map(bandKey): _*)).as(Seq("band", "bkey")))
-    // probe expansion: per band the exact key plus (t=1) every
-    // single-bit flip — XOR symmetry makes one-sided expansion
-    // sufficient (x's probe set contains y's exact key iff y's
-    // contains x's)
-    val probe =
-      if (t == 0) exact
-      else h.select(col(idCol), col(hashCol),
-        posexplode(array((0 until bands).flatMap(b =>
-          bandKey(b) +: (0 until bandBits).map(j =>
-            bandKey(b).bitwiseXOR(lit(1L << j)))): _*))
-          .as(Seq("slot", "bkey")))
-        .select(col(idCol), col(hashCol),
-          (col("slot") / (bandBits + 1)).cast("int").as("band"), col("bkey"))
-    val cands = probe.select(col(idCol).as("a_id"), col(hashCol).as("a_h"),
-        col("band"), col("bkey"))
-      .join(exact.select(col(idCol).as("b_id"), col(hashCol).as("b_h"),
-        col("band"), col("bkey")), Seq("band", "bkey"))
-      .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"), col("a_h"), col("b_h"))
-      .distinct()
-    val hits = cands
-      .withColumn("hamming",
-        bit_count(col("a_h").bitwiseXOR(col("b_h"))).cast("long"))
-      .filter(col("hamming") <= maxHamming)
-    val best = hits
+    val best = hammingPairs(h, h, idCol, hashCol, bands, bandBits, maxHamming, t,
+        pairFilter = Some(col("probe_id") < col("target_id")))
       .withColumn("rn", row_number().over(
-        Window.partitionBy(col("b_id")).orderBy(col("a_id").asc)))
+        Window.partitionBy(col("target_id")).orderBy(col("probe_id").asc)))
       .filter(col("rn") === 1)
-      .select(col("b_id").as(idCol), col("a_id").as("dup_of"), col("hamming"))
+      .select(col("target_id").as(idCol), col("probe_id").as("dup_of"), col("hamming"))
     h.join(best, Seq(idCol), "left")
       .select(col(idCol), col(hashCol), col("dup_of"), col("hamming"),
         col("dup_of").isNotNull.as("is_dup"))
@@ -791,9 +807,11 @@ object Multimodal {
 
   /** Band-regime advisor — the qj02/qd19 pricing discipline applied to
     * the hamming funnels: BEFORE committing a (bands, bandBits,
-    * tolerance) geometry for [[hashNearDup]] / [[hashNearDupMih]] /
-    * [[IncrementalHashDedup]], price each candidate geometry's
-    * quadratic stage from the store's MEASURED band-key occupancy.
+    * tolerance) geometry for [[hammingPairs]] (behind [[hashNearDup]],
+    * [[hashNearDupMih]] and [[IncrementalHashDedup]]), price each
+    * candidate geometry's quadratic stage from the store's MEASURED
+    * band-key occupancy, keyed by the funnel's own `bandKey` and
+    * `bitFlips`.
     * The video plane's regime inversion (NOTES_r13) is the motivating bug class:
     * MIH wins decisively on uniform fingerprints (wide buckets, few
     * incidental collisions — 4.6× at a 16M-row store, NOTES_r13)
@@ -847,10 +865,8 @@ object Multimodal {
     // expensive hash derivation
     val h = hashes.select(col(hashCol).cast("long").as("hash")).localCheckpoint(true)
     val perGeometry = geometries.map { case (bands, bandBits, tol) =>
-      val mask = (1L << bandBits) - 1
-      def bandKey(b: Int) = shiftright(col("hash"), b * bandBits).bitwiseAND(lit(mask))
-      val occ0 = h.select(
-          posexplode(array((0 until bands).map(bandKey): _*)).as(Seq("band", "bkey")))
+      val occ0 = h.select(posexplode(array((0 until bands).map(b =>
+          bandKey(col("hash"), b, bandBits)): _*)).as(Seq("band", "bkey")))
         .groupBy(col("band"), col("bkey")).agg(count(lit(1)).as("c"))
       // checkpoint only when reused: the t=1 flip join reads occ three
       // times (stats + both join sides); a t=0 geometry consumes it
@@ -872,8 +888,7 @@ object Multimodal {
           // probe keys against |occ| buckets — metadata-sized, the
           // funnel's N x (1+bandBits) explode never runs here
           val flipped = occ.select(col("band"), col("c").as("ca"),
-            explode(array((0 until bandBits).map(j =>
-              col("bkey").bitwiseXOR(lit(1L << j))): _*)).as("fkey"))
+            explode(array(bitFlips(col("bkey"), bandBits): _*)).as("fkey"))
           flipped.join(occ.select(col("band"), col("bkey").as("fkey"),
               col("c").as("cb")), Seq("band", "fkey"))
             .agg(coalesce(sum(col("ca") * col("cb")), lit(0L)).as("x"))
@@ -903,55 +918,6 @@ object Multimodal {
     all.withColumn("rank", row_number().over(w).cast("long"))
   }
 
-  /** All verified frame-hash PAIRS between `probe` and `target` — the
-    * vote-input shape ([[frameVoteNearDup]]), vs [[hashNearDup]]'s
-    * best-only per-id contract. Banded candidate generation (narrow
-    * pigeonhole at probeTolerance 0; MIH single-bit-flip expansion of
-    * the PROBE side at 1 — the [[hashNearDupMih]] scheme, target side
-    * always exact-banded) + one codegen'd popcount verify. Returns
-    * (probe_id, probe_frame, target_id, target_frame, hamming) for
-    * every cross-row pair within `maxHamming` — callers apply their
-    * own id-ordering / self-pair filter (videoNearDup: target < probe;
-    * an incremental wave: target from the store, or a smaller batch
-    * clip). Only ids + 8-byte hashes ride the shuffle. */
-  def frameHashPairs(probe: DataFrame, target: DataFrame,
-                     idCol: String, frameCol: String, hashCol: String,
-                     bands: Int, bandBits: Int, maxHamming: Int,
-                     probeTolerance: Int = 0): DataFrame = {
-    require(probeTolerance >= 0 && probeTolerance <= 1,
-      s"probeTolerance must be 0 (narrow bands) or 1 (MIH), got $probeTolerance")
-    require(bands * (probeTolerance + 1) > maxHamming,
-      s"pigeonhole recall needs bands x (tolerance+1) > maxHamming " +
-      s"(got $bands x ${probeTolerance + 1} <= $maxHamming)")
-    require(bands * bandBits <= 64, "bands x bandBits must fit the 64-bit hash")
-    val mask = (1L << bandBits) - 1
-    def bandKey(b: Int) = shiftright(col(hashCol), b * bandBits).bitwiseAND(lit(mask))
-    def banded(t: DataFrame) = t.select(col(idCol), col(frameCol), col(hashCol),
-      posexplode(array((0 until bands).map(bandKey): _*)).as(Seq("band", "bkey")))
-    val probeSide =
-      if (probeTolerance == 0) banded(probe)
-      else probe.select(col(idCol), col(frameCol), col(hashCol),
-        posexplode(array((0 until bands).flatMap(b =>
-          bandKey(b) +: (0 until bandBits).map(j =>
-            bandKey(b).bitwiseXOR(lit(1L << j)))): _*))
-          .as(Seq("slot", "bkey")))
-        .select(col(idCol), col(frameCol), col(hashCol),
-          (col("slot") / (bandBits + 1)).cast("int").as("band"), col("bkey"))
-    probeSide.select(col(idCol).as("probe_id"), col(frameCol).as("probe_frame"),
-        col(hashCol).as("p_h"), col("band"), col("bkey"))
-      .join(banded(target).select(col(idCol).as("target_id"),
-        col(frameCol).as("target_frame"), col(hashCol).as("t_h"),
-        col("band"), col("bkey")), Seq("band", "bkey"))
-      .select(col("probe_id"), col("probe_frame"), col("target_id"),
-        col("target_frame"), col("p_h"), col("t_h"))
-      .distinct()
-      .withColumn("hamming",
-        bit_count(col("p_h").bitwiseXOR(col("t_h"))).cast("long"))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("probe_id"), col("probe_frame"), col("target_id"),
-        col("target_frame"), col("hamming"))
-  }
-
   /** The shared vote-decision core (its semantics are pinned
     * cross-engine by qm11 AND qm12 — one implementation so they cannot
     * fork): distinct probe-frame ballots per (probe, target) pair,
@@ -977,7 +943,7 @@ object Multimodal {
     * decision composed from the measured hamming machinery: clip b is
     * a dup of clip a (a < b) when at least `voteFrac` of b's hashed
     * frames match SOME frame of a within `maxHamming`
-    * ([[frameHashPairs]] keeps every verified pair; votes count
+    * ([[hammingPairs]] keeps every verified pair; votes count
     * DISTINCT b-frames, so a static scene can't stuff the ballot).
     * Input: (idCol, frameCol, hashCol) rows, one per hashed frame.
     * Output: one row per distinct input id — (idCol, n_frames,
@@ -995,8 +961,8 @@ object Multimodal {
     val fh = frameHashes.select(col(idCol), col(frameCol), col(hashCol))
       .localCheckpoint(true)
     val nf = fh.groupBy(col(idCol)).agg(count(lit(1)).as("n_frames"))
-    val pairs = frameHashPairs(fh, fh, idCol, frameCol, hashCol,
-        bands, bandBits, maxHamming, probeTolerance)
+    val pairs = hammingPairs(fh, fh, idCol, hashCol,
+        bands, bandBits, maxHamming, probeTolerance, Some(frameCol))
       .filter(col("target_id") < col("probe_id"))
     val best = voteBest(pairs,
         nf.select(col(idCol).as("probe_id"), col("n_frames")), voteFrac)

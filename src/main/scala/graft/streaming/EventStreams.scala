@@ -256,11 +256,11 @@ object EventStreams {
     hashes.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val applied = StoreProtocol.batchApplied(batch.sparkSession, storePath, batchId)
-        writeBatch(graft.operators.IncrementalHashDedup
-          .dedupBatch(batch, storePath, bands, bandBits, maxHamming,
-            idCol, hashCol, appendUnique = !applied), batchId, decisionsDir)
-        StoreProtocol.markApplied(batch.sparkSession, batchId, storePath)
+        StoreProtocol.oncePerBatch(batch.sparkSession, batchId, storePath) { pending =>
+          writeBatch(graft.operators.IncrementalHashDedup
+            .dedupBatch(batch, storePath, bands, bandBits, maxHamming,
+              idCol, hashCol, appendUnique = pending(storePath)), batchId, decisionsDir)
+        }
       }
 
   /** Streaming incremental near-dup detection: each micro-batch of
@@ -287,11 +287,11 @@ object EventStreams {
     docs.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val applied = StoreProtocol.batchApplied(batch.sparkSession, storePath, batchId)
-        writeBatch(graft.operators.IncrementalDedup
-          .dedupBatch(batch, storePath, threshold, numHashes, bands,
-            appendUnique = !applied), batchId, decisionsDir)
-        StoreProtocol.markApplied(batch.sparkSession, batchId, storePath)
+        StoreProtocol.oncePerBatch(batch.sparkSession, batchId, storePath) { pending =>
+          writeBatch(graft.operators.IncrementalDedup
+            .dedupBatch(batch, storePath, threshold, numHashes, bands,
+              appendUnique = pending(storePath)), batchId, decisionsDir)
+        }
       }
 
   /** Streaming ANN-index ingest: each micro-batch of (id, embedding)
@@ -316,9 +316,9 @@ object EventStreams {
     vectors.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!StoreProtocol.batchApplied(batch.sparkSession, indexPath, batchId)) {
-          graft.operators.IncrementalIvf.appendBatch(batch, indexPath, idCol, vecCol)
-          StoreProtocol.markApplied(batch.sparkSession, batchId, indexPath)
+        StoreProtocol.oncePerBatch(batch.sparkSession, batchId, indexPath) { pending =>
+          if (pending(indexPath))
+            graft.operators.IncrementalIvf.appendBatch(batch, indexPath, idCol, vecCol)
         }
       }
 
@@ -451,24 +451,24 @@ object EventStreams {
           .localCheckpoint()
         val passDocs = gated.filter(col("gate_passed")).select(col("doc_id"), col("text"))
 
-        val applied = StoreProtocol.batchApplied(spark, dedupStorePath, batchId)
-        val dd = graft.operators.IncrementalDedup
-          .dedupBatch(passDocs, dedupStorePath, threshold, numHashes, bands,
-            appendUnique = !applied)
-        val survivors = passDocs.join(
-          dd.filter(col("dup_of").isNull).select(col("doc_id")), Seq("doc_id"))
+        StoreProtocol.oncePerBatch(spark, batchId, dedupStorePath) { pending =>
+          val dd = graft.operators.IncrementalDedup
+            .dedupBatch(passDocs, dedupStorePath, threshold, numHashes, bands,
+              appendUnique = pending(dedupStorePath))
+          val survivors = passDocs.join(
+            dd.filter(col("dup_of").isNull).select(col("doc_id")), Seq("doc_id"))
 
-        val counted = StoreProtocol.batchCommitted(spark, censusStorePath, batchId)
-        val scrub = graft.operators.IncrementalLineCensus
-          .scrubBatch(survivors, censusStorePath, lineTokens, maxDocFreq,
-            updateStore = !counted, batchAlreadyCounted = counted,
-            batchMarker = if (counted) None else Some(batchId))
+          val counted = StoreProtocol.batchCommitted(spark, censusStorePath, batchId)
+          val scrub = graft.operators.IncrementalLineCensus
+            .scrubBatch(survivors, censusStorePath, lineTokens, maxDocFreq,
+              updateStore = !counted, batchAlreadyCounted = counted,
+              batchMarker = if (counted) None else Some(batchId))
 
-        writeBatch(gated.select(col("doc_id"), col("gate_passed"))
-          .join(dd, Seq("doc_id"), "left")
-          .join(scrub, Seq("doc_id"), "left")
-          .withColumn("kept", col("gate_passed") && col("dup_of").isNull), batchId, outDir)
-        StoreProtocol.markApplied(spark, batchId, dedupStorePath)
+          writeBatch(gated.select(col("doc_id"), col("gate_passed"))
+            .join(dd, Seq("doc_id"), "left")
+            .join(scrub, Seq("doc_id"), "left")
+            .withColumn("kept", col("gate_passed") && col("dup_of").isNull), batchId, outDir)
+        }
       }
 
   /** The MULTIMODAL composed streaming corpus pipeline —
@@ -527,6 +527,8 @@ object EventStreams {
     // video_judged to the verdict; `kept` stays strict across every
     // judging modality.
     val hasVideo = frameStorePath.nonEmpty
+    val appendStores =
+      Seq(dedupStorePath, hashStorePath) ++ Option(frameStorePath).filter(_.nonEmpty)
     docs.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch0: DataFrame, batchId: Long) =>
@@ -541,80 +543,77 @@ object EventStreams {
           .localCheckpoint()
         val passDocs = gated.filter(col("gate_passed")).select(col("doc_id"), col("text"))
 
-        val appliedT = StoreProtocol.batchApplied(spark, dedupStorePath, batchId)
-        val dd = graft.operators.IncrementalDedup
-          .dedupBatch(passDocs, dedupStorePath, threshold, numHashes, bands,
-            appendUnique = !appliedT)
+        StoreProtocol.oncePerBatch(spark, batchId, appendStores: _*) { pending =>
+          val dd = graft.operators.IncrementalDedup
+            .dedupBatch(passDocs, dedupStorePath, threshold, numHashes, bands,
+              appendUnique = pending(dedupStorePath))
 
-        val hashDocs = gated
-          .filter(col("gate_passed") && col("phash").isNotNull)
-          .select(col("doc_id"), col("phash"))
-        val appliedH = StoreProtocol.batchApplied(spark, hashStorePath, batchId)
-        val hd = graft.operators.IncrementalHashDedup
-          .dedupBatch(hashDocs, hashStorePath, hashBands, hashBandBits, maxHamming,
-            idCol = "doc_id", hashCol = "phash", appendUnique = !appliedH)
-          .select(col("doc_id"), col("dup_of").as("image_dup_of"),
-            col("hamming").as("image_hamming"))
+          val hashDocs = gated
+            .filter(col("gate_passed") && col("phash").isNotNull)
+            .select(col("doc_id"), col("phash"))
+          val hd = graft.operators.IncrementalHashDedup
+            .dedupBatch(hashDocs, hashStorePath, hashBands, hashBandBits, maxHamming,
+              idCol = "doc_id", hashCol = "phash", appendUnique = pending(hashStorePath))
+            .select(col("doc_id"), col("dup_of").as("image_dup_of"),
+              col("hamming").as("image_hamming"))
 
-        val appliedV = hasVideo && StoreProtocol.batchApplied(spark, frameStorePath, batchId)
-        val vd = if (!hasVideo) null else {
-          val frames = gated
-            .filter(col("gate_passed") && size(col("fhashes")) > 0)
-            .select(col("doc_id"),
-              posexplode(col("fhashes")).as(Seq("frame_idx", "fhash")))
-          graft.operators.IncrementalFrameDedup
-            .dedupBatch(frames, frameStorePath,
-              bands = hashBands, bandBits = hashBandBits, maxHamming = maxHamming,
-              voteFrac = voteFrac, idCol = "doc_id", frameCol = "frame_idx",
-              hashCol = "fhash", appendUnique = !appliedV)
-            .select(col("doc_id"), col("dup_of").as("video_dup_of"),
-              col("votes").as("video_votes"))
+          val vd = if (!hasVideo) null else {
+            val frames = gated
+              .filter(col("gate_passed") && size(col("fhashes")) > 0)
+              .select(col("doc_id"),
+                posexplode(col("fhashes")).as(Seq("frame_idx", "fhash")))
+            graft.operators.IncrementalFrameDedup
+              .dedupBatch(frames, frameStorePath,
+                bands = hashBands, bandBits = hashBandBits, maxHamming = maxHamming,
+                voteFrac = voteFrac, idCol = "doc_id", frameCol = "frame_idx",
+                hashCol = "fhash", appendUnique = pending(frameStorePath))
+              .select(col("doc_id"), col("dup_of").as("video_dup_of"),
+                col("votes").as("video_votes"))
+          }
+
+          val survivors0 = passDocs
+            .join(dd.filter(col("dup_of").isNull).select(col("doc_id")), Seq("doc_id"))
+            .join(hd.filter(col("image_dup_of").isNotNull).select(col("doc_id")),
+              Seq("doc_id"), "left_anti")
+          val survivors = if (!hasVideo) survivors0
+            else survivors0.join(vd.filter(col("video_dup_of").isNotNull)
+              .select(col("doc_id")), Seq("doc_id"), "left_anti")
+
+          val counted = StoreProtocol.batchCommitted(spark, censusStorePath, batchId)
+          val scrub = graft.operators.IncrementalLineCensus
+            .scrubBatch(survivors, censusStorePath, lineTokens, maxDocFreq,
+              updateStore = !counted, batchAlreadyCounted = counted,
+              batchMarker = if (counted) None else Some(batchId))
+
+          val judgedCols = Seq(col("doc_id"), col("gate_passed"),
+            // judged = the doc actually probed the store: gate failures
+            // never reach it, so phash.isNotNull alone would report a
+            // gate-failed doc as 'probed and found unique'
+            (col("gate_passed") && col("phash").isNotNull).as("image_judged")) ++
+            (if (hasVideo)
+              // coalesce: a NULL array (upstream join miss, vs the
+              // documented empty-array sentinel) must read judged=false,
+              // not NULL — the phash leg's isNotNull mirror
+              Seq((col("gate_passed") &&
+                coalesce(size(col("fhashes")), lit(0)) > 0).as("video_judged"))
+            else Nil)
+          val verdict0 = gated.select(judgedCols: _*)
+            .join(dd, Seq("doc_id"), "left")
+            .join(hd, Seq("doc_id"), "left")
+          val verdict1 = if (!hasVideo) verdict0
+            else verdict0.join(vd, Seq("doc_id"), "left")
+          val videoDup = if (hasVideo) col("video_dup_of").isNotNull else lit(false)
+          writeBatch(verdict1
+            .join(scrub, Seq("doc_id"), "left")
+            .withColumn("text_dup", col("dup_of").isNotNull)
+            .withColumn("image_dup", col("image_dup_of").isNotNull)
+            .withColumn("n_modalities",
+              col("text_dup").cast("int") + col("image_dup").cast("int") +
+                (if (hasVideo) videoDup.cast("int") else lit(0)))
+            .withColumn("kept",
+              col("gate_passed") && !col("text_dup") && !col("image_dup") && !videoDup),
+            batchId, outDir)
         }
-
-        val survivors0 = passDocs
-          .join(dd.filter(col("dup_of").isNull).select(col("doc_id")), Seq("doc_id"))
-          .join(hd.filter(col("image_dup_of").isNotNull).select(col("doc_id")),
-            Seq("doc_id"), "left_anti")
-        val survivors = if (!hasVideo) survivors0
-          else survivors0.join(vd.filter(col("video_dup_of").isNotNull)
-            .select(col("doc_id")), Seq("doc_id"), "left_anti")
-
-        val counted = StoreProtocol.batchCommitted(spark, censusStorePath, batchId)
-        val scrub = graft.operators.IncrementalLineCensus
-          .scrubBatch(survivors, censusStorePath, lineTokens, maxDocFreq,
-            updateStore = !counted, batchAlreadyCounted = counted,
-            batchMarker = if (counted) None else Some(batchId))
-
-        val judgedCols = Seq(col("doc_id"), col("gate_passed"),
-          // judged = the doc actually probed the store: gate failures
-          // never reach it, so phash.isNotNull alone would report a
-          // gate-failed doc as 'probed and found unique'
-          (col("gate_passed") && col("phash").isNotNull).as("image_judged")) ++
-          (if (hasVideo)
-            // coalesce: a NULL array (upstream join miss, vs the
-            // documented empty-array sentinel) must read judged=false,
-            // not NULL — the phash leg's isNotNull mirror
-            Seq((col("gate_passed") &&
-              coalesce(size(col("fhashes")), lit(0)) > 0).as("video_judged"))
-          else Nil)
-        val verdict0 = gated.select(judgedCols: _*)
-          .join(dd, Seq("doc_id"), "left")
-          .join(hd, Seq("doc_id"), "left")
-        val verdict1 = if (!hasVideo) verdict0
-          else verdict0.join(vd, Seq("doc_id"), "left")
-        val videoDup = if (hasVideo) col("video_dup_of").isNotNull else lit(false)
-        writeBatch(verdict1
-          .join(scrub, Seq("doc_id"), "left")
-          .withColumn("text_dup", col("dup_of").isNotNull)
-          .withColumn("image_dup", col("image_dup_of").isNotNull)
-          .withColumn("n_modalities",
-            col("text_dup").cast("int") + col("image_dup").cast("int") +
-              (if (hasVideo) videoDup.cast("int") else lit(0)))
-          .withColumn("kept",
-            col("gate_passed") && !col("text_dup") && !col("image_dup") && !videoDup),
-          batchId, outDir)
-        StoreProtocol.markApplied(spark, batchId,
-          Seq(dedupStorePath, hashStorePath) ++ Option(frameStorePath).filter(_.nonEmpty): _*)
       }
   }
 
@@ -686,31 +685,30 @@ object EventStreams {
           .localCheckpoint() // ~60 B/doc; the HTML is never re-derived
         val passed = meta.filter(col("gate_passed"))
 
-        val uApplied = StoreProtocol.batchApplied(spark, urlStorePath, batchId)
-        val ud = graft.operators.IncrementalHashDedup
-          .dedupBatch(passed.select(col("doc_id"), col("uk")), urlStorePath,
-            bands = 1, bandBits = 32, maxHamming = 0,
-            idCol = "doc_id", hashCol = "uk", appendUnique = !uApplied)
-          .select(col("doc_id"), col("dup_of").as("url_dup_of"))
+        StoreProtocol.oncePerBatch(spark, batchId, urlStorePath, contentStorePath) { pending =>
+          val ud = graft.operators.IncrementalHashDedup
+            .dedupBatch(passed.select(col("doc_id"), col("uk")), urlStorePath,
+              bands = 1, bandBits = 32, maxHamming = 0,
+              idCol = "doc_id", hashCol = "uk", appendUnique = pending(urlStorePath))
+            .select(col("doc_id"), col("dup_of").as("url_dup_of"))
 
-        val urlKeepers = passed
-          .join(ud.filter(col("url_dup_of").isNull).select(col("doc_id")),
-            Seq("doc_id"))
-        val cApplied = StoreProtocol.batchApplied(spark, contentStorePath, batchId)
-        val cd = graft.operators.IncrementalHashDedup
-          .dedupBatch(urlKeepers.select(col("doc_id"), col("ck")), contentStorePath,
-            bands = 1, bandBits = 32, maxHamming = 0,
-            idCol = "doc_id", hashCol = "ck", appendUnique = !cApplied)
-          .select(col("doc_id"), col("dup_of").as("content_dup_of"))
+          val urlKeepers = passed
+            .join(ud.filter(col("url_dup_of").isNull).select(col("doc_id")),
+              Seq("doc_id"))
+          val cd = graft.operators.IncrementalHashDedup
+            .dedupBatch(urlKeepers.select(col("doc_id"), col("ck")), contentStorePath,
+              bands = 1, bandBits = 32, maxHamming = 0,
+              idCol = "doc_id", hashCol = "ck", appendUnique = pending(contentStorePath))
+            .select(col("doc_id"), col("dup_of").as("content_dup_of"))
 
-        writeBatch(meta.select(col("doc_id"), col("gate_passed"),
-            col("n_words"), col("n_anchors"))
-          .join(ud, Seq("doc_id"), "left")
-          .join(cd, Seq("doc_id"), "left")
-          .withColumn("kept",
-            col("gate_passed") && col("url_dup_of").isNull &&
-              col("content_dup_of").isNull), batchId, outDir)
-        StoreProtocol.markApplied(spark, batchId, urlStorePath, contentStorePath)
+          writeBatch(meta.select(col("doc_id"), col("gate_passed"),
+              col("n_words"), col("n_anchors"))
+            .join(ud, Seq("doc_id"), "left")
+            .join(cd, Seq("doc_id"), "left")
+            .withColumn("kept",
+              col("gate_passed") && col("url_dup_of").isNull &&
+                col("content_dup_of").isNull), batchId, outDir)
+        }
       }
 
   /** Stream-stream interval join: pair each left event with right

@@ -9,9 +9,10 @@ import scala.jdk.CollectionConverters._
   * from `graft.tools.DumpPlans` — not from one-off programs that each
   * install their own listener. Directory swaps go through
   * [[graft.hfc.StoreProtocol]], the one module that knows the
-  * crash-safe swap protocol; iterative pins go through
-  * [[graft.operators.Iterate]], the one module that knows the
-  * statistics-truncation policy. */
+  * crash-safe swap protocol and stamps the append-store markers;
+  * iterative pins go through [[graft.operators.Iterate]], the one
+  * module that knows the statistics-truncation policy; hamming band
+  * keys come from `Multimodal.hammingPairs`, the one pair funnel. */
 class SourceLayoutSpec extends AnyFunSuite {
 
   private lazy val sources: Seq[(Path, String)] = {
@@ -50,6 +51,31 @@ class SourceLayoutSpec extends AnyFunSuite {
       p.getFileName.toString
     }
     assert(found == Seq("Iterate.scala"))
+  }
+
+  /** Files of src/main holding `pattern`, once per match. */
+  private def matches(pattern: scala.util.matching.Regex): Seq[String] =
+    sources.flatMap { case (p, src) =>
+      pattern.findAllMatchIn(src).map(_ => p.getFileName.toString)
+    }
+
+  test("src/main writes the hamming band key and the probe flip expansion once") {
+    val bandKey = """shiftright\([^;\n]*?\*\s*bandBits\s*\)\s*\.bitwiseAND""".r
+    val flips = """bitwiseXOR\(\s*lit\(\s*1L\s*<<""".r
+    assert(matches(bandKey) == Seq("Multimodal.scala"))
+    assert(matches(flips) == Seq("Multimodal.scala"))
+    val funnel = sources.collectFirst { case (p, src)
+        if p.getFileName.toString == "Multimodal.scala" => src }.get
+    val owner = funnel.indexOf("def bandKey(")
+    val end = funnel.indexOf("def hashNearDup(")
+    assert(owner >= 0 && end > owner, "bandKey, bitFlips and hammingPairs sit together")
+    for (p <- Seq(bandKey, flips))
+      assert(p.findAllMatchIn(funnel).forall(m => m.start > owner && m.start < end),
+        s"$p appears outside the shared pair function")
+  }
+
+  test("src/main stamps append-store markers in StoreProtocol only") {
+    assert(matches("""\bmarkApplied\(""".r).distinct == Seq("StoreProtocol.scala"))
   }
 
   test("the only main entry points are Bench, Verify, GenRelational and DumpPlans") {

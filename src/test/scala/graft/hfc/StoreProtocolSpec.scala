@@ -197,6 +197,57 @@ class StoreProtocolSpec extends SparkTestBase {
   private def parquetFiles(dir: String): Int =
     new File(dir).listFiles().count(_.getName.endsWith(".parquet"))
 
+  /** `f` on two store paths under a fresh root, deleted afterwards. */
+  private def twoStores(f: (String, String) => Unit): Unit = {
+    val root = java.nio.file.Files.createTempDirectory("graft-once-per-batch").toFile
+    try f(s"$root/a", s"$root/b") finally FileUtils.deleteDirectory(root)
+  }
+
+  test("oncePerBatch: after a crash between the markers only the unstamped store is pending") {
+    twoStores { (a, b) =>
+      Seq(a, b).foreach(IncrementalHashDedup.initStore(
+        Seq((1L, 0x00L)).toDF("doc_id", "phash"), _))
+      // the batch appended to both stores; the sink then died after
+      // stamping `a` and before stamping `b`
+      Seq(a, b).foreach(IncrementalHashDedup.dedupBatch(hashBatch, _))
+      StoreProtocol.markApplied(spark, BatchId, a)
+      val rows = Seq(a, b).map(spark.read.parquet(_).count())
+      var seen = Set.empty[String]
+      StoreProtocol.oncePerBatch(spark, BatchId, a, b) { pending =>
+        seen = pending
+        Seq(a, b).foreach(p =>
+          IncrementalHashDedup.dedupBatch(hashBatch, p, appendUnique = pending(p)).collect())
+      }
+      assert(seen == Set(b))
+      assert(spark.read.parquet(a).count() == rows.head, "a stamped store must not append again")
+      assert(spark.read.parquet(b).count() > rows(1), "the pending store appends on replay")
+      assert(StoreProtocol.batchApplied(spark, b, BatchId))
+    }
+  }
+
+  test("oncePerBatch: a body that throws leaves no marker") {
+    twoStores { (a, b) =>
+      intercept[IllegalStateException](StoreProtocol.oncePerBatch(spark, BatchId, a, b) { _ =>
+        throw new IllegalStateException("sink failed")
+      })
+      assert(!StoreProtocol.batchApplied(spark, a, BatchId))
+      assert(!StoreProtocol.batchApplied(spark, b, BatchId))
+    }
+  }
+
+  test("oncePerBatch: every store carries the marker afterwards") {
+    twoStores { (a, b) =>
+      var first = Set.empty[String]
+      StoreProtocol.oncePerBatch(spark, BatchId, a, b)(first = _)
+      assert(first == Set(a, b))
+      assert(Seq(a, b).forall(StoreProtocol.batchApplied(spark, _, BatchId)))
+      assert(!StoreProtocol.batchApplied(spark, a, BatchId + 1))
+      var replay = Set(a)
+      StoreProtocol.oncePerBatch(spark, BatchId, a, b)(replay = _)
+      assert(replay.isEmpty, "a replayed batch appends to no store")
+    }
+  }
+
   for (st <- stores) {
     storeTest(st, "applied markers round-trip") { path =>
       assert(!applied(st, path))

@@ -52,6 +52,31 @@ class IncrementalHashDedupSpec extends SparkTestBase {
     assert(replay == first, s"replay decisions must be identical: $replay")
   }
 
+  test("on a store that cannot match, dedupBatch flags exactly the ids hashNearDup/hashNearDupMih flag") {
+    import org.apache.spark.sql.functions.col
+    val hashes = spark.read.parquet(s"$sf0001/documents.parquet")
+      .select(col("doc_id"), Multimodal.textDhash56(col("text")).as("phash"))
+    // the store's one row sets every bit above the 56-bit hash, so it
+    // sits farther than any radius used here from every document
+    val sentinel = -1L
+    val nearest = hashes.select("phash").as[Long].collect()
+      .map(h => java.lang.Long.bitCount(h ^ sentinel)).min
+    assert(nearest > 7, s"sentinel within reach of a document: hamming $nearest")
+    val store = tmpStore()
+    IncrementalHashDedup.initStore(Seq((-1L, sentinel)).toDF("doc_id", "phash"), store)
+    def flagged(d: org.apache.spark.sql.DataFrame): Set[Long] =
+      d.filter(col("dup_of").isNotNull).select("doc_id").as[Long].collect().toSet
+    val narrow = flagged(Multimodal.hashNearDup(hashes, "doc_id", "phash", 4, 14, 3))
+    assert(narrow.nonEmpty, "degenerate fixture: no pairs within hamming 3")
+    assert(flagged(IncrementalHashDedup.dedupBatch(hashes, store,
+      bands = 4, bandBits = 14, maxHamming = 3, appendUnique = false)) === narrow)
+    val mih = flagged(Multimodal.hashNearDupMih(hashes, "doc_id", "phash", 4, 14, 7))
+    assert(mih.size > narrow.size, "hamming 7 must reach beyond hamming 3 on this fixture")
+    assert(flagged(IncrementalHashDedup.dedupBatch(hashes, store,
+      bands = 4, bandBits = 14, maxHamming = 7, appendUnique = false,
+      probeTolerance = 1)) === mih)
+  }
+
   test("pigeonhole guard rejects bands <= maxHamming") {
     val store = tmpStore()
     IncrementalHashDedup.initStore(Seq((1L, 0L)).toDF("doc_id", "phash"), store)

@@ -93,13 +93,13 @@ class VideoNearDupSpec extends SparkTestBase {
     }
   }
 
-  test("frameHashPairs guards reject impossible pigeonhole splits") {
+  test("hammingPairs guards reject impossible pigeonhole splits") {
     val df = Seq((1L, 0, 1L)).toDF("clip_id", "frame_idx", "fhash")
     intercept[IllegalArgumentException](
-      Multimodal.frameHashPairs(df, df, "clip_id", "frame_idx", "fhash",
-        bands = 4, bandBits = 8, maxHamming = 6).count())
+      Multimodal.hammingPairs(df, df, "clip_id", "fhash",
+        bands = 4, bandBits = 8, maxHamming = 6, frameCol = Some("frame_idx")).count())
     intercept[IllegalArgumentException](
-      Multimodal.frameHashPairs(df, df, "clip_id", "frame_idx", "fhash",
-        bands = 9, bandBits = 8, maxHamming = 6).count())
+      Multimodal.hammingPairs(df, df, "clip_id", "fhash",
+        bands = 9, bandBits = 8, maxHamming = 6, frameCol = Some("frame_idx")).count())
   }
 }
